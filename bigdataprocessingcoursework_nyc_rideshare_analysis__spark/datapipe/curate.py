@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..functions.skew import keyed_row_number, keyed_running_sum
+from ..functions.skew import global_running_sum, keyed_row_number, keyed_running_sum
 from ..functions.text import normalize_text, tokens_col
 from ..registry import register
 from ..sources import load_table
@@ -283,7 +283,7 @@ def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(contaminated, "doc_id", "left_anti")
     )
     # round-6 verdict item 2: per-source cumsum via the two-level
-    # range-partitioned pattern, not Window.partitionBy("source") —
+    # pattern, not Window.partitionBy("source") —
     # parallelism must scale with the data, not |sources|.
     c = keyed_running_sum(surv, ["source"], ["doc_id"], "n_tokens", "cum")
     budget = PACK_TOKEN_BUDGET
@@ -529,7 +529,7 @@ def q_length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-bucket numbering goes through ``keyed_row_number`` — real
     corpora have Zipf-ish length distributions, so the MODAL bucket holds a
     large corpus fraction and a plain ``Window.partitionBy("bucket")``
-    would funnel it through one task; the two-level range-partitioned form
+    would funnel it through one task; the two-level form
     keeps parallelism data-proportional regardless of the length
     distribution.  The trailing (bucket, batch_id) pad window is
     high-cardinality (≤ {BATCH_SIZE} rows per group), so it stays a plain
@@ -609,11 +609,11 @@ def q_preference_pairs_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic tie policy (score, then doc_id).  Plan (round-6 verdict
     item 2): the two per-source rankings are UNLIMITED (every rank is
     consumed by the pair join), so WindowGroupLimit can't help — each goes
-    through ``keyed_row_number`` (range-partition on (source, order),
-    broadcast per-partition count offsets, local numbering), keeping
-    parallelism data-proportional instead of |sources|-bounded.  The
-    descending keep order rides a precomputed ``-score`` column (range
-    partitioning orders ascending).  The final (source, rank) equi-join is
+    through ``keyed_row_number`` (partition ids by ranges of (source,
+    order), broadcast per-partition count offsets, local numbering),
+    keeping parallelism data-proportional instead of |sources|-bounded.
+    The descending keep order rides a precomputed ``-score`` column (the
+    helper orders ascending).  The final (source, rank) equi-join is
     unchanged.  Exactness: the score is the deployed gate's pinned
     association order; the margin subtracts two such doubles once."""
     from .stage import staged_quality_scores
@@ -1011,13 +1011,12 @@ def q_budget_select_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The global greedy needs a running token sum over the quality order —
     the canonical single-reducer trap — so it rides
-    ``range_partitioned_running_sum`` (round-7's two-level pattern, global
-    form): range-partition on (−score, doc_id), broadcast per-partition
-    offsets, local cumsums.  Budget is one broadcast scalar
+    ``functions.skew.global_running_sum`` (the two-phase pattern, global
+    form): partition ids monotone in (−score, doc_id), broadcast
+    per-partition offsets, local cumsums.  Budget is one broadcast scalar
     (``floor(Σtokens · {SELECT_BUDGET_FRAC})`` — ¼ is a power of two, so
     the double multiply is exact on both engines).  Deterministic ties
     (score, then doc_id)."""
-    from ..operators.events import range_partitioned_running_sum
     from .stage import staged_features, staged_quality_scores
 
     scored = staged_quality_scores(spark, sf_dir).select("doc_id", "score")
@@ -1028,7 +1027,7 @@ def q_budget_select_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget = F.broadcast(
         s.agg(F.floor(F.sum("n_tokens") * SELECT_BUDGET_FRAC).cast("long").alias("budget"))
     )
-    cum = range_partitioned_running_sum(s, ["_negscore", "doc_id"], "n_tokens", "cum_tokens")
+    cum = global_running_sum(s, ["_negscore", "doc_id"], "n_tokens", "cum_tokens")
     return (
         cum.crossJoin(budget)
         .filter(F.col("cum_tokens") <= F.col("budget"))

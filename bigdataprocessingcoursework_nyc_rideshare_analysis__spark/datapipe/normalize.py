@@ -201,7 +201,7 @@ def q_quantile_normalized_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars").cast("double") / F.size(toks)).alias("score"),
     ))  # feeds the rank chain AND the per-score histogram (+ its
     # 1-row total): without the pin the tokenize pass re-runs per consumer
-    # (r12; |docs|-sized narrow cache, same contract as the helper's own pin)
+    # (r12; |docs|-sized narrow cache, released by the harness's clearCache)
     # per-source frame size rides out of the helper (count_alias) — the old
     # broadcast per_src join was a third tokenize pass (r12)
     ranked = keyed_row_number(

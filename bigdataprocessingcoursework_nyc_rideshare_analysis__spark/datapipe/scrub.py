@@ -324,8 +324,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence).
 
     Scale shape (round-6 verdict item 2): the per-source running sum goes
-    through ``functions.skew.keyed_running_sum`` — range-partition on
-    (source, doc_id) so one source's stream spans MANY partitions,
+    through ``functions.skew.keyed_running_sum`` — partition ids by ranges
+    of (source, doc_id) so one source's stream spans MANY partitions,
     prefix-sum the tiny per-(partition, source) totals into broadcast
     offsets, then partition-local cumulative sums.  Parallelism scales with
     the data, not with |sources| (the old ``Window.partitionBy("source")``

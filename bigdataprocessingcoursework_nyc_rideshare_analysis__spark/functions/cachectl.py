@@ -1,15 +1,15 @@
 """Query-scoped cache registry: track helper-internal ``persist()`` pins so
 embedded consumers can release them deterministically.
 
-Several operators pin a multiply-consumed subtree with ``persist()`` INSIDE
-the query body (the range-partitioned frame in ``functions.skew``, the
-session-span / basket aggregates, the thrice-consumed score frame in
-``datapipe.normalize``).  Those pins are load-bearing — the skew helpers'
-pin is a CORRECTNESS requirement (one boundary draw for both plan branches)
-— and they cannot be unpersisted inside the helper, because the helper
-returns a LAZY frame: releasing before the consumer's action would force
-the cached subtree to re-execute per branch, re-opening the bug the pin
-closed.
+A few operators pin a multiply-consumed subtree with ``persist()`` INSIDE
+the query body (the session-span / basket aggregates, the converted-click
+frame, the thrice-consumed score frame in ``datapipe.normalize``).  These
+pins only avoid recomputation: every branch of those plans is a
+deterministic function of its input, so no result depends on a pin being
+alive, and releasing one before the consumer's action just re-executes the
+subtree per branch.  They are not unpersisted inside the query because the
+query returns a LAZY frame — the pin has to outlive the consumer's action
+to save anything.
 
 Ownership contract (round-12, VERDICT r11 item 7):
 

@@ -87,72 +87,69 @@ def keyed_running_sum(
     key's ENTIRE stream through one task, so parallelism is bounded by |keys|
     no matter how many executors exist.
 
-    The keyed generalization of ``operators.events.
-    range_partitioned_running_sum`` (round-6 verdict items 2-3):
+    The two-phase pattern behind every unlimited rank, ntile, quantile,
+    sequence number and running sum in the package:
 
-    1. range-repartition on ``(*keys, *order_cols)`` — a key's rows now span
-       MANY contiguous partitions, and within a key, higher partition id ⇒
-       strictly later order range;
-    2. aggregate per-(partition, key) value totals — at most
-       |partitions| + |keys| rows, since only keys straddling a partition
-       boundary appear twice;
-    3. per key, prefix-sum those totals over partition id into offsets (the
-       only keyed window — over ≤ |partitions| rows per key, not the data);
-    4. broadcast the offsets back and add a partition-LOCAL running sum.
+    1. label each row with a partition id ``_pid`` that is monotone in
+       ``(*keys, *order_cols)`` — a key's rows now span MANY ``_pid``
+       values, and within a key, higher ``_pid`` ⇒ strictly later order
+       range;
+    2. aggregate per-(``_pid``, key) value totals — at most
+       |bounds| + 1 + |keys| rows, since only keys straddling a bound
+       appear twice;
+    3. per key, prefix-sum those totals over ``_pid`` into offsets (the
+       only keyed window — over ≤ |bounds| + 1 rows per key, not the data);
+    4. broadcast the offsets back and add a running sum local to
+       (``_pid``, key).
 
     Exact for integer/decimal values (sum algebra is order-free), so the
-    result is independent of where the sampled range boundaries land.
-    Requires non-null ``keys`` (the offset join is an inner equi-join) and a
-    duplicate-free ``(*keys, *order_cols)`` tuple per row (a running sum has
-    no defined per-row value on ties) — same contract as the global form.
+    result is independent of where the bounds land.  Requires non-null
+    ``keys`` (the offset join is an inner equi-join) and a duplicate-free
+    ``(*keys, *order_cols)`` tuple per row (a running sum has no defined
+    per-row value on ties).
 
-    Plan honesty (read the executed plan, not this prose): Catalyst cannot
-    know every ``spark_partition_id`` row already sits in one partition, so
-    the local window adds an ENSURE_REQUIREMENTS hash exchange on
-    ``(_pid, *keys)`` — the data moves twice (range + hash), but both
-    exchanges carry only the scalar (keys, order, value) projection (callers
-    compute lengths/weights BEFORE this helper; text never shuffles), and
-    the hash key has ≈|partitions| + |keys| distinct values, so parallelism
-    stays data-proportional.
-
-    The range-partitioned frame is ``persist()``-pinned — REQUIRED for
-    correctness, not a speed cache: the totals/offsets branch and the
-    local-window branch otherwise each plan their OWN
-    ``ShuffleExchange(RangePartitioning)`` instance, and
-    ``RangePartitioner`` samples its bounds with an ``rdd.id``-derived
-    seed, so the two instances can draw DIFFERENT boundaries (exchange
-    reuse is not guaranteed across the broadcast/window shapes — measured
-    at sf0.1: 0 ReusedExchange, offsets computed against boundaries the
-    data leg doesn't have, row numbers off by ±|boundary drift| and not
-    even a permutation).  The persist makes the cache manager serve both
-    branches from ONE ``InMemoryRelation`` — one exchange instance, one
-    boundary draw — and the result is then exact for ANY draw.  (At
-    oracle-check scale the sampler degenerates to exact bounds — sample
-    size ≥ rows — which is why sf0.01 hash gates never caught it.)
-    ``persist`` over ``localCheckpoint`` because it is fully lazy: a
-    checkpoint instantiates the physical plan at CONSTRUCTION time, which
-    eagerly launches any broadcast-subtree jobs in the caller's input
-    (pinned lazy in ``test_plans.py``).  The cached blocks hold only the
-    narrow (keys, order, value) projection and are evicted LRU /
-    released by the harness's ``clearCache`` between queries.
+    The bounds come from a sample: the ``20 × partitions`` rows with the
+    smallest ``xxhash64(*keys, *order_cols)`` (ties broken by the tuple
+    itself), a top-k that depends only on the rows' values — not on
+    partitioning, row order or any sampling seed.  One 1-row broadcast
+    frame sorts the sample and keeps every ``|sample| / partitions``-th
+    tuple, ≈ ``partitions`` equi-depth bounds (every sampled tuple when the
+    input is smaller than ``partitions``), so each row is compared with
+    about ``partitions`` bounds, not the whole sample.
+    ``_pid`` is the number of bounds below ``struct(*keys, *order_cols)``,
+    so it is a pure function of the row: the totals branch and the
+    local-window branch each evaluate the input on their own and still
+    agree on every label.  No cache pin and no range exchange are needed;
+    the hash exchange the local window plans on ``(_pid, *keys)`` is the
+    only exchange that moves the data (it carries only what the caller
+    selected — callers compute lengths/weights BEFORE this helper, so text
+    never shuffles), and its key has ≈ |bounds| + |keys| distinct values,
+    so parallelism stays data-proportional.  Everything is lazy: the
+    bounds are computed at execution, inside the plan.
 
     ``count_alias`` / ``total_alias``: when set, the output additionally
     carries the per-key ROW COUNT / per-key TOTAL of ``value_col`` as a
-    column of that name — computed from the same ≤(|partitions|+|keys|)-row
-    totals frame the offsets come from (a second full-range window over
-    the identical partition+order spec, so it shares the one Window node
-    and the one broadcast).  Callers previously re-aggregated the INPUT
-    for these (``.join(broadcast(df.groupBy(keys).count()))``), which
-    re-executed the whole upstream subtree once more per leg — the r11
-    entity-aggregate persists papered over that for some callers; this
-    removes the second consumer outright.  Exact: counts are int64 sums;
-    totals are the same order-free int/decimal algebra as the offsets."""
-    from .cachectl import query_scoped_persist
-
+    column of that name — computed from the same small totals frame the
+    offsets come from (a second full-range window over the identical
+    partition+order spec, so it shares the one Window node and the one
+    broadcast).  Callers need not re-aggregate their input for these.
+    Exact: counts are int64 sums; totals are the same order-free
+    int/decimal algebra as the offsets."""
     par = partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = query_scoped_persist(
-        df.repartitionByRange(par, *keys, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
+    cols = [*keys, *order_cols]
+    row = F.struct(*cols)
+    sample = (
+        df.select(F.xxhash64(*cols).alias("_h"), row.alias("_b"))
+        .orderBy("_h", "_b")
+        .limit(20 * par)
+        .agg(F.sort_array(F.collect_list("_b")).alias("_s"))
+    )
+    step = F.greatest(F.lit(1), F.floor(F.size("_s") / par))
+    bounds = sample.select(F.filter("_s", lambda b, i: (i + 1) % step == 0).alias("_bounds"))
+    parted = (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("_pid", F.size(F.filter("_bounds", lambda b: b < row)))
+        .drop("_bounds")
     )
     aggs = [F.sum(value_col).alias("_tot")]
     if count_alias is not None:
@@ -229,9 +226,7 @@ def global_running_sum(
     total_alias: str | None = None,
 ) -> DataFrame:
     """Running SUM over the GLOBAL order without the single-partition
-    window — ``keyed_running_sum`` with no keys (the same algebra as
-    ``operators.events.range_partitioned_running_sum``; kept here so the
-    global and keyed forms share one implementation).  Exact for
+    window — ``keyed_running_sum`` with no keys.  Exact for
     int/decimal values; ``order_cols`` must be duplicate-free.
     ``count_alias`` / ``total_alias`` attach the frame size / grand total
     (see ``keyed_running_sum``)."""
@@ -260,18 +255,19 @@ def global_row_number(
     window drags every row through ONE task, so any frame that grows with
     users/docs/customers serializes there no matter the cluster size.
 
-    This is ``keyed_row_number`` with no keys: range-partition on the
-    order, per-partition counts, prefix offsets over the ≤|partitions|-row
-    totals (the only remaining single-partition window — P rows, not
-    data), broadcast back, local running count.  Descending components are
+    This is ``keyed_row_number`` with no keys: label rows with the
+    order-monotone ``_pid``, count per ``_pid``, prefix offsets over the
+    small totals frame (the only remaining single-partition window — one
+    row per ``_pid``, not data), broadcast back, local running count.
+    Descending components are
     expressed by negating the column at the call site (exact for
     int/decimal/double sort keys).
 
     Ties: ``order_cols`` should be duplicate-free for well-defined per-row
     numbers (same contract as ``keyed_running_sum``).  With ties the
     result is still a valid 1..N permutation in which equal keys receive
-    consecutive numbers in arbitrary order (range partitioning co-locates
-    equal keys), so rank→VALUE selections (exact quantiles, data-defined
+    consecutive numbers in arbitrary order (equal tuples get the same
+    ``_pid``), so rank→VALUE selections (exact quantiles, data-defined
     bin edges) are unaffected — callers relying on that must say so.
     ``count_alias`` attaches the frame size (see ``keyed_running_sum``)."""
     return keyed_row_number(df, [], order_cols, alias, partitions, count_alias=count_alias)

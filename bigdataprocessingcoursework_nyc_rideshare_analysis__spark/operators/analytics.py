@@ -254,7 +254,7 @@ def q_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-8 keyed sweep: the old ``Window.partitionBy(event_type)`` rank
     funneled each type's ENTIRE value stream through one task (|types| ≈ a
     handful bounds parallelism at 100 TB — the packing-tier trap, r6 items
-    2-3); now ``keyed_row_number`` range-partitions on (type, value) so a
+    2-3); now ``keyed_row_number`` partitions by ranges of (type, value) so a
     type's rows span many partitions.  ``value`` has ties and no unique
     tiebreak, so rn is an arbitrary permutation within each tie group —
     harmless: the rank is only ever mapped back to a VALUE, and equal
@@ -325,7 +325,7 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and asserts containment as ``p*_ok`` booleans the DuckDB twin expects
     TRUE, alongside the hash-exact bracket values and counts.  A sketch
     whose estimate leaves its rank envelope now FAILS the driver's hash
-    gate.  Rank selection rides the range-partitioned two-phase
+    gate.  Rank selection rides the two-phase
     ``keyed_row_number`` (no |event_types|-bounded window); the brackets
     come from the same ranked frame as the exact-median query."""
     from ..functions.skew import keyed_row_number
@@ -789,7 +789,7 @@ def q_customer_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.skew import global_running_sum
 
     # round-8 sweep: the cumulative-revenue window over |customers| rows is
-    # now the range-partitioned two-phase running sum (descending order
+    # now the two-phase running sum (descending order
     # encoded as ascending -rev_dec; exact decimal algebra, so the cum
     # shares are bit-identical); the grand total broadcasts from a 1-row
     # aggregate instead of an unbounded global window
@@ -951,7 +951,7 @@ def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # round-8 sweep: rank numbering over the |keys|-sized profile via the
-    # range-partitioned two-phase pattern (the old unpartitioned window +
+    # two-phase pattern (the old unpartitioned window +
     # global-count window funneled every key through one task); the key
     # count rides out of the helper (count_alias) — the r11 persist +
     # 1-row crossJoin leg is gone, kc now has exactly one consumer (r12)
@@ -1241,11 +1241,14 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: recency is exact integer day math, monetary is a DECIMAL
     sum cast once, each NTILE orders by (measure, custkey) so band edges
     tie-break identically on both engines.  Plan: one orders aggregation
-    (customer-keyed shuffle), then three global NTILE windows over the
-    |customers|-sized aggregate — at 100 TB you swap the global windows
-    for sketch-quantile band EDGES (same swap documented on the median
-    family) and score by comparison, keeping the aggregate map-side."""
-    from pyspark.sql import Window
+    (customer-keyed shuffle), then the three measures stacked under a
+    measure key ``_m`` and numbered by ONE ``keyed_row_number`` (descending
+    recency encoded as ascending ``-recency_days``; every measure is an
+    exact double), ntile arithmetic from the per-measure frame size, and a
+    customer-keyed regroup back to one row per customer.  No
+    single-partition sort, and the aggregate feeds one numbering instead
+    of three chained ones that each re-ran everything below them."""
+    from ..functions.skew import keyed_row_number, ntile_from_rn
 
     orders = load_table(spark, sf_dir, "orders")
     base = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
@@ -1255,32 +1258,23 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("monetary"),
     )
-    # round-8 sweep: the three global NTILE windows over the
-    # |customers|-sized aggregate are now three two-phase global row
-    # numberings (descending recency encoded as ascending -recency_days)
-    # plus ntile arithmetic from the broadcast frame size — bit-identical
-    # banding (ANSI ntile rule), no single-partition sort
-    from ..functions.skew import global_row_number, ntile_from_rn
-
-    # the frame size rides out of the first numbering (count_alias) and
-    # flows through the chained calls — the r11 persist + 1-row crossJoin
-    # leg is gone, base now has exactly one consumer (r12)
-    g = global_row_number(
-        base.withColumn("_negr", -F.col("recency_days")),
-        ["_negr", "custkey"],
-        "_rn_r",
-        count_alias="_n",
-    ).drop("_negr")
-    g = global_row_number(g, ["frequency", "custkey"], "_rn_f")
-    g = global_row_number(g, ["monetary", "custkey"], "_rn_m")
-    scored = g.select(
+    measures = ("recency_days", "frequency", "monetary")
+    stacked = base.select(
         "custkey",
-        "recency_days",
-        "frequency",
-        "monetary",
-        ntile_from_rn(F.col("_rn_r"), F.col("_n"), RFM_BANDS).cast("bigint").alias("r_score"),
-        ntile_from_rn(F.col("_rn_f"), F.col("_n"), RFM_BANDS).cast("bigint").alias("f_score"),
-        ntile_from_rn(F.col("_rn_m"), F.col("_n"), RFM_BANDS).cast("bigint").alias("m_score"),
+        *measures,
+        F.inline(F.array(
+            F.struct(F.lit(0).alias("_m"), (-F.col("recency_days")).cast("double").alias("_v")),
+            F.struct(F.lit(1).alias("_m"), F.col("frequency").cast("double").alias("_v")),
+            F.struct(F.lit(2).alias("_m"), F.col("monetary").alias("_v")),
+        )),
+    )
+    ranked = keyed_row_number(stacked, ["_m"], ["_v", "custkey"], "_rn", count_alias="_n")
+    tile = ntile_from_rn(F.col("_rn"), F.col("_n"), RFM_BANDS).cast("bigint")
+    scored = ranked.groupBy("custkey", *measures).agg(
+        *[
+            F.max(F.when(F.col("_m") == m, tile)).alias(score)
+            for m, score in enumerate(("r_score", "f_score", "m_score"))
+        ]
     )
     return scored.withColumn(
         "rfm_code",

@@ -635,58 +635,6 @@ def q_session_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def range_partitioned_running_sum(
-    df: DataFrame, order_cols: list[str], value_col: str, alias: str
-) -> DataFrame:
-    """Running SUM(``value_col``) over the total order given by
-    ``order_cols`` WITHOUT the single-partition global window (the
-    canonical scale trap: an empty PARTITION BY drags every row through
-    one task).
-
-    Two-phase offset pattern (same algebra as
-    ``q_events_global_sequence``'s rank numbering): (1) range-repartition
-    on the order so partition i holds a contiguous key range; (2) one
-    |partitions|-row aggregate of per-partition value totals, prefix-summed
-    into offsets (the only unpartitioned window — over P rows), broadcast
-    back; (3) partition-LOCAL running sums plus the offset.  Exact for
-    integer/decimal values — sum algebra is order-free, so the result is
-    independent of where the sampled range boundaries land.
-
-    Requires ``order_cols`` to be duplicate-free across rows (a total
-    order): range partitioning co-locates equal keys, but a running sum
-    has no defined per-row value on ties.
-
-    The range-partitioned frame is ``persist()``-pinned for the same
-    reason as ``functions.skew.keyed_running_sum`` (REQUIRED for
-    correctness): the offsets branch and the data branch otherwise plan
-    independent range exchanges whose sampled boundaries can differ,
-    making the offset arithmetic wrong for rows near a drifted boundary;
-    the cache manager serves both branches from one ``InMemoryRelation``
-    (one exchange, one boundary draw), and stays lazy at plan-build."""
-    from ..functions.cachectl import query_scoped_persist
-
-    par = df.sparkSession.sparkContext.defaultParallelism
-    parted = query_scoped_persist(
-        df.repartitionByRange(par, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    totals = parted.groupBy("_pid").agg(F.sum(value_col).alias("_tot"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_tot").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(alias, F.col("_off") + F.sum(value_col).over(w_local))
-        .drop("_pid", "_off")
-    )
-
-
 _PEAK_CONCURRENCY_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, ts,
@@ -729,13 +677,15 @@ def q_peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed delta at t, identically on both engines), and a running sum
     over the time-ordered deltas is the live count whose max is the peak.
 
-    Scale: the running sum goes through ``range_partitioned_running_sum``
+    Scale: the running sum goes through ``functions.skew.global_running_sum``
     — partition-local prefix sums plus broadcast per-partition offsets —
     so NO row of the boundary table ever funnels through one task: the
     only unpartitioned window is over the P-row offsets frame.  The
     boundary table is itself already small (2 rows per session,
     pre-collapsed by a distributed groupBy), so this query stays shaped
     for corpora where even |sessions| is cluster-sized."""
+    from ..functions.skew import global_running_sum
+
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     spans = (
         sessionize(ev, "user_id", "ts", SESSION_GAP_MIN)
@@ -746,7 +696,7 @@ def q_peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         spans.select(F.col("e").alias("ts"), F.lit(-1).alias("delta"))
     )
     swept = bounds.groupBy("ts").agg(F.sum("delta").alias("d"))
-    running = range_partitioned_running_sum(swept, ["ts"], "d", "live").select("ts", "live")
+    running = global_running_sum(swept, ["ts"], "d", "live").select("ts", "live")
     # ONE aggregation finds the peak AND its earliest timestamp: the
     # lexicographic max of (live, −epoch_µs) picks the highest live count,
     # earliest-first on ties — a separate peak subquery joined back would
@@ -815,7 +765,7 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation chain (one effective shuffle), then ranking over the
     CONVERTED-USERS set via ``global_row_number`` (round-8 sweep of
     unpartitioned windows over user-sized frames) — the rank numbering
-    range-partitions on (latency, user_id), so no task ever holds more
+    partitions by ranges of (latency, user_id), so no task ever holds more
     than its share of converted users; the frame size comes from a
     broadcast 1-row count."""
     from ..functions.cachectl import query_scoped_persist
@@ -1117,39 +1067,19 @@ def q_events_global_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale trap; cf. the bounded-by-|days| exceptions documented on
     ``record_high_days``).
 
-    Two-phase offset pattern: (1) range-repartition + sort within
-    partitions on the total order, so partition i holds a contiguous rank
-    range; (2) count rows per partition (|partitions|-row aggregate),
-    prefix-sum those counts into per-partition offsets on the driver-sized
-    frame, broadcast-join them back, and add the partition-local
-    ``row_number``.  Every partition then numbers its rows independently —
-    the only global coordination is the tiny offsets table.  Output is
-    independent of where the range boundaries land (ranks depend only on
-    the total order; (ts, event_id) is a total order because event_id is
-    unique).  This is how exports get stable line numbers at 100 TB.
+    Two-phase offset pattern (``functions.skew.global_row_number``):
+    label rows with an order-monotone partition id, count rows per id,
+    prefix-sum those counts into offsets on the small totals frame,
+    broadcast-join them back, and add the partition-local row number.
+    Every partition then numbers its rows independently — the only global
+    coordination is the tiny offsets table.  Output is independent of
+    where the partition bounds land (ranks depend only on the total order;
+    (ts, event_id) is a total order because event_id is unique).  This is
+    how exports get stable line numbers at 100 TB."""
+    from ..functions.skew import global_row_number
 
-    The range-partitioned frame is ``persist()``-pinned (same correctness
-    requirement as ``functions.skew.keyed_running_sum``: the counts branch
-    and the numbering branch must see ONE boundary draw, and exchange
-    reuse across the broadcast shape is not guaranteed)."""
     ev = load_table(spark, sf_dir, "events").select("ts", "event_id")
-    parted = ev.repartitionByRange(ev.sparkSession.sparkContext.defaultParallelism, "ts", "event_id")
-    from ..functions.cachectl import query_scoped_persist
-
-    with_pid = query_scoped_persist(parted.withColumn("pid", F.spark_partition_id()))
-    counts = with_pid.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-    w_local = Window.partitionBy("pid").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    return (
-        with_pid.join(F.broadcast(offsets), "pid")
-        .select(
-            "event_id",
-            (F.col("offset") + F.row_number().over(w_local)).cast("long").alias("seq"),
-        )
-    )
+    return global_row_number(ev, ["ts", "event_id"], "seq").select("event_id", "seq")
 
 
 # --- top session paths -----------------------------------------------------------

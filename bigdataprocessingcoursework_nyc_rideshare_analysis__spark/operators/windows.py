@@ -225,7 +225,7 @@ def q_user_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) cohorting of users by total event value (deterministic
     tiebreak on user_id) WITHOUT the unpartitioned ``Window.orderBy`` —
     that window funnels every per-user total through ONE task, the exact
-    single-partition trap ``range_partitioned_running_sum`` exists for.
+    single-partition trap the ``functions.skew`` two-phase helpers exist for.
 
     Two-phase form: (1) global 1-based row_number over
     (total DESC, user_id ASC) via ``global_row_number`` (descending order
@@ -233,9 +233,9 @@ def q_user_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id is unique); (2) ``ntile_from_rn`` arithmetic — ANSI ntile gives
     the first N % 4 buckets ⌈N/4⌉ rows and the rest ⌊N/4⌋, identical in
     Spark and DuckDB, so computing the bucket from rn is bit-identical to
-    the window function.  N comes from a broadcast 1-row aggregate; the
-    only unpartitioned window left is the offset prefix-sum over
-    |partitions| rows."""
+    the window function.  N rides out of the helper (``count_alias``); the
+    only unpartitioned window left is the offset prefix-sum over the
+    small per-partition totals frame."""
     from ..functions.skew import global_row_number, ntile_from_rn
 
     ev = load_table(spark, sf_dir, "events")

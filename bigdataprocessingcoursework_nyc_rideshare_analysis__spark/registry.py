@@ -553,6 +553,17 @@ CHANGED_SINCE_VERIFIED: frozenset[str] = frozenset({
     # - query-scoped persist wrapper (cachectl) replaced bare persist()
     #   in these two (no plan change beyond the registry hook):
     "session_overlap_histogram", "basket_part_pair_lift",
+    # - bootstrap_mean_ci: rewritten as one Arrow mapInPandas pass in
+    #   round 12 but never queued:
+    "bootstrap_mean_ci",
+    # - the functions.skew rank helpers label rows with a partition
+    #   id computed from the row itself (hash-sampled bounds) instead of a
+    #   range exchange behind a persist() pin; events_global_sequence,
+    #   peak_concurrent_sessions, budget_select_by_quality and
+    #   customer_rfm_segments' three chained numberings now call them.  Every
+    #   registry query whose build calls a rank helper (27, listed by
+    #   wrapping the helpers while building the registry) re-queues; all of
+    #   them are already in the round-12 list above.
 })
 
 

@@ -14,12 +14,13 @@ design point:
   to proper timestamps.
 
 Cache ownership contract: some query bodies pin multiply-consumed subtrees
-with a query-scoped ``persist()`` (correctness-critical for the two-phase
-range-partition helpers — see ``functions.skew``).  The bench harness and
-the verification driver clear these between queries (``clearCache``); a
-consumer composing several queries in ONE session should call
-``functions.cachectl.release_query_caches(spark)`` after materializing each
-query's results, or the pinned blocks accumulate until LRU eviction.
+with a query-scoped ``persist()`` to avoid recomputing them; no result
+depends on a pin being alive (see ``functions.cachectl``).  The bench
+harness and the verification driver clear these between queries
+(``clearCache``); a consumer composing several queries in ONE session
+should call ``functions.cachectl.release_query_caches(spark)`` after
+materializing each query's results, or the pinned blocks accumulate until
+LRU eviction.
 """
 
 from __future__ import annotations

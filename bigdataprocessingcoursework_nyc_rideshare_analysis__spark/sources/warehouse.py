@@ -46,12 +46,6 @@ def warehouse_table_names(sf_dir: str) -> dict[str, str]:
     return {tbl: f"wh_{tbl}_{sfx}" for tbl, _ in _WAREHOUSE_SPEC}
 
 
-def warehouse_exists(spark: SparkSession, sf_dir: str) -> bool:
-    return all(
-        spark.catalog.tableExists(name) for name in warehouse_table_names(sf_dir).values()
-    )
-
-
 MARKER_NAME = "_BDPC_WAREHOUSE_MARKER.json"
 
 
@@ -174,10 +168,6 @@ def _remove_stray_location(spark: SparkSession, table: str) -> None:
 
 def events_warehouse_name(sf_dir: str) -> str:
     return f"wh_events_{_suffix(sf_dir)}"
-
-
-def events_warehouse_exists(spark: SparkSession, sf_dir: str) -> bool:
-    return spark.catalog.tableExists(events_warehouse_name(sf_dir))
 
 
 def build_events_warehouse(

@@ -396,10 +396,10 @@ def test_packing_tier_windows_are_not_source_bounded(spark):
     the packing/loader tier may partition on the low-cardinality key alone.
     The per-source cumsum (pack_training_sequences, curate_pack_corpus) and
     the unlimited rank windows (preference_pairs_by_source,
-    length_bucketed_batches) now range-partition on (key, order), compute
-    tiny per-(partition, key) offsets, broadcast them back, and window
-    LOCALLY on (_pid, key) — so parallelism scales with the data, not
-    |sources|/|buckets|."""
+    length_bucketed_batches) now label rows with a partition id monotone
+    in (key, order), compute tiny per-(partition, key) offsets, broadcast
+    them back, and window LOCALLY on (_pid, key) — so parallelism scales
+    with the data, not |sources|/|buckets|."""
     import re
 
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
@@ -413,12 +413,13 @@ def test_packing_tier_windows_are_not_source_bounded(spark):
         ("length_bucketed_batches", "bucket"),
     ):
         plan = plan_string(reg[name].fn(spark, SF_SMOKE))
-        # the two-level form: a range exchange whose key list pairs the
-        # low-cardinality key with a second (order) column — formatted mode
-        # puts the partitioning under the Exchange node's Arguments line
-        assert re.search(
-            rf"rangepartitioning\({key}#\d+L? ASC NULLS FIRST, \w+#\d+", plan
-        ), f"{name}: no (key, order) range exchange\n{plan}"
+        # the two-level form: the local window's exchange hashes the
+        # order-monotone partition id together with the low-cardinality
+        # key — formatted mode puts the partitioning under the Exchange
+        # node's Arguments line
+        assert re.search(rf"hashpartitioning\(_pid#\d+, {key}#\d+L?, ", plan), (
+            f"{name}: no (_pid, key) hash exchange\n{plan}"
+        )
         # ...a broadcast join bringing the per-partition offsets back...
         assert "BroadcastHashJoin" in plan, name
         # ...and NO full-corpus window partitioned on the bare key with the
@@ -430,67 +431,37 @@ def test_packing_tier_windows_are_not_source_bounded(spark):
         ), f"{name}: full-corpus window still keyed on bare {key}\n{plan}"
 
 
-def test_running_sum_offsets_share_one_range_partitioning(spark):
-    """The two-level keyed_running_sum evaluates the range-partitioned frame
-    in two plan branches (per-partition totals and the offset join-back);
-    correct _pid agreement requires BOTH branches to see ONE boundary draw,
-    because RangePartitioner samples bounds per physical instantiation with
-    an rdd.id-derived seed.  Exchange reuse was the old mechanism and it is
-    RACY — AQE's stage cache can miss when the broadcast-side and data-side
-    stages are submitted concurrently, and at sf0.1 the round-11 audit
-    measured the miss live (row numbers not even a permutation; 165 order
-    inversions in customer_rfm_segments' recency ranks).  The helper now
-    ``persist()``s the range-partitioned frame, so the cache manager serves
-    both branches from one InMemoryRelation: pin that the executed plan
-    (1) scans the in-memory relation in at least two branches and (2) plans
-    the range exchange exactly once — inside the cached child."""
+def test_rank_helpers_stay_exact_with_query_caches_released(spark):
+    """The two-phase rank helpers evaluate their input in two plan branches
+    (per-partition totals and the offset join-back), and both must label
+    every row with the same partition id.  That id is a pure function of
+    the row (its count of hash-sampled bounds below it), so the result
+    must not depend on any cache pin: build customer_rfm_segments, release
+    every query-scoped cache BEFORE the action (the embedded-consumer
+    contract in functions.cachectl), and the output must still equal the
+    DuckDB oracle — with no cached relation and no range exchange left in
+    the executed plan."""
+    import os
+
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.functions.cachectl import (
+        release_query_caches,
+    )
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
+    from tools.check_oracle import duck_connection, normalize
 
-    reg = load_all()
-    def outer_shuffle_partitionings(jplan):
-        """Shuffle-exchange output partitionings of the EXECUTED plan tree,
-        walking through AQE wrappers and query stages but NOT into cached
-        relations (InMemoryTableScan is a leaf; its cached plan hangs off
-        the relation, not ``children()``) — exactly the scope where a
-        cache-bypassing branch would plan its own range exchange."""
-        out, stack = [], [jplan]
-        while stack:
-            n = stack.pop()
-            cname = n.getClass().getSimpleName()
-            if cname == "AdaptiveSparkPlanExec":
-                stack.append(n.executedPlan())
-                continue
-            if cname.endswith("QueryStageExec"):
-                stack.append(n.plan())
-                continue
-            if cname == "ShuffleExchangeExec":
-                out.append(n.outputPartitioning().toString())
-            ch = n.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        return out
-
-    for name in ("pack_training_sequences", "user_value_quartiles"):
-        df = reg[name].fn(spark, SF_SMOKE)
-        # collect() (not count()) — count() builds a DIFFERENT query whose
-        # execution finalizes its own plan, leaving df's unexecuted
-        assert len(df.collect()) > 0, name
-        executed = df._jdf.queryExecution().executedPlan().toString()
-        assert executed.count("InMemoryTableScan") >= 2, (
-            f"{name}: fewer than two InMemoryTableScans in the executed plan "
-            f"— a branch bypassed the persisted range-partitioned frame, so "
-            f"_pid labels may disagree between branches\n{executed}"
-        )
-        # claim (2): every RangePartitioning exchange lives INSIDE the
-        # cached child — an outer range exchange means a branch replanned
-        # its own boundary draw alongside the cached scans (the exact
-        # failure mode the persist exists to prevent)
-        outer = outer_shuffle_partitionings(df._jdf.queryExecution().executedPlan())
-        assert not any("rangepartitioning" in p.lower() for p in outer), (
-            f"{name}: a RangePartitioning exchange was planned OUTSIDE the "
-            f"persisted frame — that branch draws its own boundaries\n{outer}"
-        )
-        spark.catalog.clearCache()
+    sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    spec = load_all()["customer_rfm_segments"]
+    df = spec.fn(spark, sf)
+    release_query_caches(spark)
+    spark.catalog.clearCache()
+    rows = [tuple(r) for r in df.collect()]
+    oracle = duck_connection(sf).execute(spec.oracle)
+    want = normalize(oracle.fetchall(), [d[0] for d in oracle.description])
+    assert normalize(rows, df.columns) == want
+    # collect() (not count()) finalizes df's OWN plan
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in executed, executed
+    assert "rangepartitioning" not in executed.lower(), executed
 
 
 def test_no_data_sized_single_partition_windows(spark):

@@ -303,26 +303,26 @@ def test_cogroup_asof_identical_to_jvm_asof(spark):
     assert any(r[-1] is None for r in a)
 
 
-def test_range_partitioned_running_sum_matches_global_window(spark):
+def test_global_running_sum_matches_global_window(spark):
     """The two-phase running sum must equal the naive single-partition
     global window exactly, while keeping the data-sized window PARTITIONED
     (only the P-row offsets frame may pass through one task)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.events import (
-        range_partitioned_running_sum,
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.functions.skew import (
+        global_running_sum,
     )
 
     df = spark.range(0, 10_007).select(
         F.col("id").alias("k"), (F.xxhash64("id") % 1000).alias("v")
     )
-    fast = range_partitioned_running_sum(df, ["k"], "v", "rs")
+    fast = global_running_sum(df, ["k"], "v", "rs")
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     naive = df.select("k", F.sum("v").over(w).alias("rs"))
     assert sorted(map(tuple, fast.select("k", "rs").collect())) == sorted(
         map(tuple, naive.collect())
     )
-    # the big-side window is keyed by the range-partition id, not global
+    # the big-side window is keyed by the partition id, not global
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "_pid" in plan

@@ -50,9 +50,9 @@ def test_release_query_caches_frees_all_blocks_in_a_two_query_session(spark):
 
     spark.catalog.clearCache()
     reg = load_all()
-    # both queries pin query-scoped caches internally (the range-partition
-    # helper; the session-span aggregate)
-    assert len(reg["user_value_quartiles"].fn(spark, SF_SMOKE).collect()) > 0
+    # both queries pin query-scoped caches internally (the basket
+    # aggregate; the session-span aggregate)
+    assert len(reg["basket_part_pair_lift"].fn(spark, SF_SMOKE).collect()) > 0
     assert len(reg["session_overlap_histogram"].fn(spark, SF_SMOKE).collect()) > 0
     assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
     released = release_query_caches(spark)
