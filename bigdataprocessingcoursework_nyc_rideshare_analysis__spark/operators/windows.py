@@ -22,12 +22,6 @@ from ..sources import load_table
 
 ROLLING_N = 5
 
-
-# Registration order note: the lag/lead and position-stats queries register
-# FIRST because they lack a driver-verified CORRECTNESS row (round 1 covered
-# the other four); external harnesses that verify the registry head-first
-# should spend fresh budget on them (see registry.load_all).
-
 _GAP_ORACLE = """
 SELECT event_id, user_id, ts,
        datediff('microsecond', lag(ts) OVER w, ts) AS gap_us,

@@ -1,7 +1,7 @@
 """Solo-profile registered queries: median-of-N noop-sink timing + plan capture.
 
 Usage:
-    python tools/profile_query.py [--reps 3] [--plan-dir plans/r11] [--suffix before] q1 q2 ...
+    python tools/profile_query.py [--reps 3] [--plan-dir .scratch/plans] [--suffix before] q1 q2 ...
 
 Replicates bench.py's methodology (same session factory, same noop sink,
 clearCache + System.gc between reps) but isolates one query at a time so

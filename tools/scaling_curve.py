@@ -402,6 +402,13 @@ def run_top_tier(sf_dir: str, cpus: int) -> dict[str, float]:
     return times
 
 
+def timed(times: dict[str, float], name: str, fn) -> None:
+    """Run ``fn`` and record its wall seconds under ``times[name]``."""
+    t0 = time.monotonic()
+    fn()
+    times[name] = round(time.monotonic() - t0, 2)
+
+
 def _exchange_counts(plan: str) -> dict[str, int]:
     """Per-node-kind exchange counts from an executed-plan string.
 
@@ -440,11 +447,6 @@ def run_rank_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     queries = (
         "median_value_by_event_type",
         "quartiles_by_event_type",
@@ -453,7 +455,7 @@ def run_rank_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         "psi_click_vs_purchase",
     )
     for q in queries:
-        timed(q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
+        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
     times["total"] = round(sum(times.values()), 2)
     for q in queries:
         df = reg[q].fn(spark, sf_dir)
@@ -484,19 +486,16 @@ def run_ann_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     n_vecs = load_table(spark, sf_dir, "embeddings").count()  # untimed: corpus size
-    timed("exact_panel", lambda: stage.staged_ann_exact_topk(spark, sf_dir).count())
+    timed(times, "exact_panel", lambda: stage.staged_ann_exact_topk(spark, sf_dir).count())
     for method, _fn in ANN_METHODS:
         timed(
+            times,
             f"build_{method}",
             lambda m=method: stage.staged_ann_method_topk(spark, sf_dir, m).count(),
         )
     timed(
+        times,
         "ann_recall_report",
         lambda: reg["ann_recall_report"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
     )
@@ -597,24 +596,22 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     # --- textrank: stage (tokenize-once), edge build, solve, end-to-end ---
-    timed("stage_build", lambda: stage.staged_features(spark, sf_dir).count())
+    timed(times, "stage_build", lambda: stage.staged_features(spark, sf_dir).count())
     docs = stage.staged_features(spark, sf_dir)
     edges = cooccurrence_edges(doc_term_pairs(docs))
     timed(
+        times,
         "textrank_edge_build",
         lambda: edges.write.format("noop").mode("overwrite").save(),
     )
     timed(
+        times,
         "textrank_solve",
         lambda: pagerank(edges).write.format("noop").mode("overwrite").save(),
     )
     timed(
+        times,
         "textrank_keywords",
         lambda: reg["textrank_keywords"].fn(spark, sf_dir)
         .write.format("noop").mode("overwrite").save(),
@@ -629,6 +626,7 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     )
     pairs = fuzzy_pairs(cust, "c_custkey", "c_name")
     timed(
+        times,
         "linkage_pairs",
         lambda: pairs.write.format("noop").mode("overwrite").save(),
     )
@@ -638,9 +636,10 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         cust.select(F.col("c_custkey").alias("id")),
         stats=stats,
     )
-    timed("cc_solve", lambda: assign.write.format("noop").mode("overwrite").save())
+    timed(times, "cc_solve", lambda: assign.write.format("noop").mode("overwrite").save())
     times["cc_rounds"] = stats.get("iterations", -1)
     timed(
+        times,
         "customer_identity_clusters",
         lambda: reg["customer_identity_clusters"].fn(spark, sf_dir)
         .write.format("noop").mode("overwrite").save(),
@@ -769,17 +768,12 @@ def run_sa_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
 
-    timed("stage_build", lambda: stage.staged_features(spark, sf_dir).count())
+    timed(times, "stage_build", lambda: stage.staged_features(spark, sf_dir).count())
     queries = ("sa_duplicate_length_profile", "sa_longest_duplicates", "dedup_cut_substrings")
     for q in queries:
-        timed(q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
+        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
     times["total"] = round(sum(times.values()), 2)
     # untimed: output cardinalities + static-plan shuffle accounting (the
     # exchange count must NOT grow with the corpus; rows may)
@@ -810,14 +804,9 @@ def run_media_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     queries = ("media_image_neardup_phash", "media_audio_neardup_fp", "media_video_neardup_phash")
     for q in queries:
-        timed(q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
+        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
     times["total"] = round(sum(times.values()), 2)
     for q in queries:
         times[f"rows_{q}"] = reg[q].fn(spark, sf_dir).count()
@@ -931,11 +920,6 @@ def run_skew_chain(fact_path: str, cpus: int) -> dict[str, float]:
     noaqe = aqe_off_clone(spark)
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     def dim(session):
         return session.range(SKEW_N_KEYS + 1).select(
             F.col("id").alias("dk"),
@@ -955,16 +939,16 @@ def run_skew_chain(fact_path: str, cpus: int) -> dict[str, float]:
     n = fact(spark).count()
     times["n_rows"] = n
 
-    timed("join_unsalted_noaqe", lambda: drain(fact(noaqe).join(dim(noaqe), F.col("k") == F.col("dk"))))
-    timed("join_salted_noaqe", lambda: drain(salted_join(fact(noaqe), dim(noaqe), "k", "dk", how="inner")))
-    timed("join_aqe", lambda: drain(fact(spark).join(dim(spark), F.col("k") == F.col("dk"))))
-    timed("agg_unsalted_noaqe", lambda: drain(
+    timed(times, "join_unsalted_noaqe", lambda: drain(fact(noaqe).join(dim(noaqe), F.col("k") == F.col("dk"))))
+    timed(times, "join_salted_noaqe", lambda: drain(salted_join(fact(noaqe), dim(noaqe), "k", "dk", how="inner")))
+    timed(times, "join_aqe", lambda: drain(fact(spark).join(dim(spark), F.col("k") == F.col("dk"))))
+    timed(times, "agg_unsalted_noaqe", lambda: drain(
         fact(noaqe).groupBy("k").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
         )
     ))
-    timed("agg_salted_noaqe", lambda: drain(
+    timed(times, "agg_salted_noaqe", lambda: drain(
         salted_sum_count(fact(noaqe), ["k"], "value", count_alias="n", sum_alias="s")
     ))
     times["total"] = round(sum(v for k_, v in times.items() if k_ != "n_rows"), 2)
@@ -997,14 +981,9 @@ def run_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
 
-    def timed(name: str, fn):
-        t0 = time.monotonic()
-        fn()
-        times[name] = round(time.monotonic() - t0, 2)
-
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
 
-    timed("stage_build", lambda: stage.staged_shingles(spark, sf_dir).count())
+    timed(times, "stage_build", lambda: stage.staged_shingles(spark, sf_dir).count())
     # neardup_minhash_lsh: the SCREEN (detail surface) is the corpus-linear
     # leg this curve measures; the registered name is its truth-joined bound
     # summary since round 10 and would fold the offline quadratic truth
@@ -1019,7 +998,7 @@ def run_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         "curate_pack_corpus": reg["curate_pack_corpus"].fn,
     }
     for q, fn in sweep.items():
-        timed(q, lambda fn=fn: fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
+        timed(times, q, lambda fn=fn: fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
     times["total"] = round(sum(times.values()), 2)
     # untimed: output cardinalities, the linearity check on the DATA side
     # (each stage must scale ~10x per decade for the time curve to mean

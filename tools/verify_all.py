@@ -48,44 +48,12 @@ def run(name: str, cmd: list[str], cwd: str | None = None, env=None) -> str:
     return out.stdout
 
 
-def check_driver_verified_fold() -> None:
-    """Fail when any CORRECTNESS_r*.json full-pass (hash_match) name is
-    absent from ``registry.DRIVER_VERIFIED`` — the bookkeeping the judge
-    had to flag in rounds 5 and 7.  Exception: names currently queued in
-    ``CHANGED_SINCE_VERIFIED`` (an edit deliberately invalidated the row)."""
-    import glob
-
-    sys.path.insert(0, REPO)
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark import registry
-
-    missing: dict[str, list[str]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        with open(path) as f:
-            rows = json.load(f)
-        stale = [
-            name
-            for name, row in rows.items()
-            if row.get("hash_match")
-            and name not in registry.DRIVER_VERIFIED
-            and name not in registry.CHANGED_SINCE_VERIFIED
-        ]
-        if stale:
-            missing[os.path.basename(path)] = stale
-    if missing:
-        raise SystemExit(
-            "driver-verified-fold FAILED: full-pass names missing from "
-            f"registry.DRIVER_VERIFIED: {missing}"
-        )
-    print(f"== driver-verified-fold OK ({len(registry.DRIVER_VERIFIED)} names)")
-
-
 def main() -> None:
     fast = "--fast" in sys.argv[1:]
 
-    # 0. bookkeeping gates (cheap, pure-python — run first): every recorded
-    #    full-pass is folded into DRIVER_VERIFIED, and COVERAGE.md's totals +
-    #    rows-only evidence table match the live registry
-    check_driver_verified_fold()
+    # 0. bookkeeping gate (cheap, pure-python — run first): COVERAGE.md's
+    #    totals + rows-only evidence table match the live registry (the
+    #    CORRECTNESS fold is a pytest: tests/test_registry.py)
     out = run("coverage-totals", [sys.executable, os.path.join(REPO, "tools", "coverage_totals.py")], cwd=REPO)
     print("   " + out.strip().splitlines()[-1])
 
