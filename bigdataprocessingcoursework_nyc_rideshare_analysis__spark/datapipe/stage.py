@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles_col
 from ..sources import load_table
+from ..sources.tables import read_parquet
 
 #: bump to invalidate every staged frame after a change to staged schemas
 #: or to the tokenization/shingling expressions they bake in
@@ -89,17 +90,21 @@ def _fn_version(fn) -> str:
     return hashlib.sha1(src.encode()).hexdigest()[:8]
 
 
-def _ensure(name: str, sf_dir: str, build, table: str = "documents") -> str:
+def _ensure(
+    spark: SparkSession, name: str, sf_dir: str, build, table: str = "documents"
+) -> DataFrame:
     """Materialize ``build()`` under the stage key unless already present
     (parquet ``_SUCCESS`` marker = committed write; a torn earlier write
-    without the marker is simply overwritten).  ``table`` picks which source
-    parquet's content hash keys the stage (stages over ``embeddings`` must
-    not survive an embeddings regeneration just because ``documents`` is
-    unchanged)."""
+    without the marker is simply overwritten), and read the stage back.
+    ``table`` picks which source parquet's content hash keys the stage
+    (stages over ``embeddings`` must not survive an embeddings regeneration
+    just because ``documents`` is unchanged).  The read's schema is memoized
+    on the ``_SUCCESS`` marker (``sources.tables.read_parquet``), so only
+    the first read after a (re)build infers it."""
     out = os.path.join(stage_root(), _source_key(sf_dir, table), name)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         build().write.mode("overwrite").parquet(out)
-    return out
+    return read_parquet(spark, out)
 
 
 def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,12 +124,12 @@ def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already parallel and the round-robin exchange is a no-op cost-wise
     # (it moves rows once, before the expensive transform).
     par = spark.sparkContext.defaultParallelism
-    out = _ensure(
+    return _ensure(
+        spark,
         "doc_features",
         sf_dir,
         lambda: featurize_documents(load_table(spark, sf_dir, "documents").repartition(par)),
     )
-    return spark.read.parquet(out)
 
 
 def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -138,8 +143,7 @@ def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
             "doc_id", F.explode(shingles_col("toks", k)).alias("shingle")
         ).distinct()
 
-    out = _ensure(f"doc_shingles_k{k}", sf_dir, build)
-    return spark.read.parquet(out)
+    return _ensure(spark, f"doc_shingles_k{k}", sf_dir, build)
 
 
 def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) -> DataFrame:
@@ -163,8 +167,7 @@ def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) 
     from .boilerplate import SEG_TOKENS
 
     w = SEG_TOKENS if width is None else width
-    out = _ensure(f"doc_segments_w{w}", sf_dir, build)
-    return spark.read.parquet(out)
+    return _ensure(spark, f"doc_segments_w{w}", sf_dir, build)
 
 
 def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | None = None) -> DataFrame:
@@ -184,8 +187,7 @@ def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | No
     def build() -> DataFrame:
         return jaccard_pairs(staged_shingles(spark, sf_dir), t)
 
-    out = _ensure(f"jaccard_pairs_t{t}", sf_dir, build)
-    return spark.read.parquet(out)
+    return _ensure(spark, f"jaccard_pairs_t{t}", sf_dir, build)
 
 
 def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,13 +202,13 @@ def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     version key the stage; the source key hashes ``embeddings.parquet``."""
     from .dedup import COSINE_DUP_THRESHOLD, q_neardup_embedding
 
-    out = _ensure(
+    return _ensure(
+        spark,
         f"embedding_pairs_t{COSINE_DUP_THRESHOLD}_{_fn_version(q_neardup_embedding)}",
         sf_dir,
         lambda: q_neardup_embedding(spark, sf_dir),
         table="embeddings",
     )
-    return spark.read.parquet(out)
 
 
 def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
@@ -242,8 +244,7 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
             .repartition(par)
         )
 
-    out = _ensure(f"tfidf_topk_k{kk}_p", sf_dir, build)
-    return spark.read.parquet(out)
+    return _ensure(spark, f"tfidf_topk_k{kk}_p", sf_dir, build)
 
 
 def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,12 +273,12 @@ def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return tfidf_sim_candidate_pairs(staged_tfidf_topk(spark, sf_dir)).repartition(par)
 
-    out = _ensure(
+    return _ensure(
+        spark,
         f"tfidf_sim_cand_k{TFIDF_TOP_K}_t{TFIDF_SIM_THRESHOLD}_{_fn_version(tfidf_sim_candidate_pairs)}",
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
 
 
 def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,12 +294,12 @@ def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return tfidf_doc_vectors(staged_tfidf_topk(spark, sf_dir)).repartition(par)
 
-    out = _ensure(
+    return _ensure(
+        spark,
         f"tfidf_doc_vecs_k{TFIDF_TOP_K}_{_fn_version(tfidf_doc_vectors)}",
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
 
 
 def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,12 +322,12 @@ def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return _quality_score_frame(spark, sf_dir).repartition(par)
 
-    out = _ensure(
+    return _ensure(
+        spark,
         f"quality_scores_{_fn_version(_quality_score_frame)}",
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
 
 
 def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
@@ -369,13 +370,13 @@ def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> Dat
             ).encode()
         ).hexdigest()[:8]
         key = f"{key}_{trainers}"
-    out = _ensure(
+    return _ensure(
+        spark,
         key,
         sf_dir,
         lambda: fn(spark, sf_dir),
         table="embeddings",
     )
-    return spark.read.parquet(out)
 
 
 def staged_ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -398,10 +399,10 @@ def staged_ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return cosine_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K)
 
-    out = _ensure(
+    return _ensure(
+        spark,
         f"ann_exact_topk_q{N_QUERIES}_k{TOP_K}", sf_dir, build, table="embeddings"
     )
-    return spark.read.parquet(out)
 
 
 def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,9 +444,9 @@ def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in (_build_frame_dhash, _build_video_codec, _build_mixed_raster)
         ).encode()
     ).hexdigest()[:8]
-    out = _ensure(
+    return _ensure(
+        spark,
         f"video_phash_{geo}_{_fn_version(video_phash_frame)}_{helpers}",
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)

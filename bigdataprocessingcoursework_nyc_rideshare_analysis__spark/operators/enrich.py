@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_tables
+from ..sources.warehouse import trip_tables
 
 # Generic core ---------------------------------------------------------------
 
@@ -116,13 +117,10 @@ def enriched_trips(spark: SparkSession, sf_dir: str, use_warehouse: bool = False
     Exchange (the bucketing metadata replaces the runtime shuffle; pinned
     in ``tests/test_bucketing.py``).  The default stays on raw parquet:
     the driver's oracle harness owns no warehouse."""
-    t = load_tables(spark, sf_dir, "lineitem", "orders", "supplier", "customer", "nation")
-    if use_warehouse:
-        from ..sources.warehouse import build_trip_warehouse
-
-        names = build_trip_warehouse(spark, sf_dir)  # idempotent
-        t["lineitem"] = spark.table(names["lineitem"])
-        t["orders"] = spark.table(names["orders"])
+    t = trip_tables(
+        spark, sf_dir, "lineitem", "orders", "supplier", "customer", "nation",
+        use_warehouse=use_warehouse,
+    )
     li, orders = t["lineitem"], t["orders"]
 
     fact = li.select(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.scalar import money_avg, money_sum
 from ..registry import register
 from ..sources import load_table, load_tables
+from ..sources.warehouse import trip_tables
 
 
 def _revenue(extendedprice: str = "l_extendedprice", discount: str = "l_discount") -> F.Column:
@@ -664,22 +665,6 @@ def q_disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _maybe_warehouse(spark: SparkSession, sf_dir: str, t: dict, use_warehouse: bool) -> dict:
-    """Swap lineitem/orders for the orderkey-bucketed managed tables
-    (``sources.warehouse``): both fact sides then arrive hash-distributed
-    on the join key and the fact×fact join plans with NO Exchange and NO
-    Sort — the per-query shuffle is paid once at ingest.  Default stays on
-    raw parquet (the driver's oracle harness owns no warehouse); pipelines
-    opt in like ``enriched_trips(..., use_warehouse=True)``."""
-    if use_warehouse:
-        from ..sources.warehouse import build_trip_warehouse
-
-        names = build_trip_warehouse(spark, sf_dir)  # idempotent
-        t["lineitem"] = spark.table(names["lineitem"])
-        t["orders"] = spark.table(names["orders"])
-    return t
-
-
 # ---------------------------------------------------------------------------
 # Q21 flavor — EXISTS and NOT EXISTS against the same fact, per supplier.
 # ---------------------------------------------------------------------------
@@ -723,9 +708,7 @@ def q_sole_late_suppliers(
     bucketed ingest: the li⋈orders join, the per-order aggregation, AND the
     join-back all reuse the bucket distribution — the only Exchange left
     is the supplier-sized name rollup (pinned in tests/test_bucketing.py)."""
-    t = _maybe_warehouse(
-        spark, sf_dir, load_tables(spark, sf_dir, "supplier", "lineitem", "orders"), use_warehouse
-    )
+    t = trip_tables(spark, sf_dir, "supplier", "lineitem", "orders", use_warehouse=use_warehouse)
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
     ords = t["orders"].filter(F.col("o_orderstatus") == "F").select("o_orderkey", "o_orderdate")
     li = t["lineitem"].select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -1143,9 +1126,7 @@ def q_late_line_priority_mix(
     which ``use_warehouse=True`` removes entirely (bucketed ingest; the
     2-row final agg's Exchange is all that remains, pinned in
     tests/test_bucketing.py)."""
-    t = _maybe_warehouse(
-        spark, sf_dir, load_tables(spark, sf_dir, "lineitem", "orders"), use_warehouse
-    )
+    t = trip_tables(spark, sf_dir, "lineitem", "orders", use_warehouse=use_warehouse)
     li = t["lineitem"].filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2000-01-01").cast("timestamp"))

@@ -122,6 +122,14 @@ def aqe_off_clone(spark: SparkSession) -> SparkSession:
     return clone
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` source-size histogram counts one sample per
+    compile; a generated-code cache hit adds none)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_SOURCE_CODE_SIZE().getCount())
+
+
 def get_spark(
     app_name: str = "bdpc-nyc-rideshare-spark",
     master: str | None = None,
@@ -161,6 +169,17 @@ def get_spark(
         .config("spark.ui.retainedTasks", "1000")
         .config("spark.sql.ui.retainedExecutions", "10")
         .config("spark.appStateStore.asyncTracking.enable", "true")
+        # Generated-code cache: Spark keeps 100 compiled classes, keyed on
+        # the generated source.  A session re-running a fixed query mix
+        # recompiles every class the cap evicted: the six event_ranking
+        # queries generate ~280 distinct classes per pass, so at 100 each
+        # pass re-ran ~283 Janino compiles (12-15% of the JVM's samples;
+        # 4 vCPU, sf0.01).  All 303 queries at sf0.001 generate 3,978
+        # classes (median 9 per query, p90 26, max 99) and metaspace grows
+        # ~37 KB per class, so 1000 entries bound the cache near 37 MB.
+        # Static conf: a session built elsewhere (the verification
+        # driver's) keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local mode runs every executor thread inside the driver JVM, so
         # the 1g spark.driver.memory default caps the WHOLE engine — 32
         # concurrent tasks' shuffle/agg buffers OOM long before the host's

@@ -25,7 +25,7 @@ import re
 import shutil
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .tables import load_table
 from .sinks import write_bucketed_table
@@ -151,6 +151,20 @@ def build_trip_warehouse(
     for tbl, key in _WAREHOUSE_SPEC:
         _ensure_bucketed(spark, sf_dir, tbl, names[tbl], key, n_buckets, None, force)
     return names
+
+
+def trip_tables(
+    spark: SparkSession, sf_dir: str, *names: str, use_warehouse: bool = False
+) -> dict[str, DataFrame]:
+    """The named star-schema tables.  With ``use_warehouse`` lineitem and
+    orders come from the orderkey-bucketed managed tables (built on first
+    use) instead of parquet: both fact sides then arrive hash-distributed
+    on the join key and the fact×fact join plans with NO Exchange and NO
+    Sort — the per-query shuffle is paid once at ingest.  Only the tables
+    the caller keeps are read.  Default stays on raw parquet (the driver's
+    oracle harness owns no warehouse)."""
+    wh = build_trip_warehouse(spark, sf_dir) if use_warehouse else {}
+    return {n: spark.table(wh[n]) if n in wh else load_table(spark, sf_dir, n) for n in names}
 
 
 def _remove_stray_location(spark: SparkSession, table: str) -> None:

@@ -58,3 +58,37 @@ def test_release_query_caches_frees_all_blocks_in_a_two_query_session(spark):
     released = release_query_caches(spark)
     assert released >= 2, released
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_repeated_event_ranking_mix_compiles_no_generated_code(spark):
+    """The six event_ranking queries generate ~280 distinct classes per
+    run.  With Spark's default 100-entry generated-code cache every repeat
+    run recompiled ~284 of them; get_spark's 1000-entry cache keeps them,
+    so the second run of the unchanged mix compiles none."""
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.functions.cachectl import (
+        release_query_caches,
+    )
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import codegen_compiles
+
+    reg = load_all()
+    mix = (
+        "mad_outlier_events",
+        "customer_rfm_segments",
+        "peak_concurrent_sessions",
+        "session_overlap_histogram",
+        "events_global_sequence",
+        "quartiles_by_event_type",
+    )
+
+    def run_mix() -> None:
+        for name in mix:
+            reg[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+            # a live pin would change the next run's plan (cached scans)
+            release_query_caches(spark)
+            spark.catalog.clearCache()
+
+    run_mix()
+    compiled = codegen_compiles(spark)
+    run_mix()
+    assert codegen_compiles(spark) - compiled == 0

@@ -8,6 +8,13 @@ clearCache + System.gc between reps) but isolates one query at a time so
 per-query numbers aren't polluted by sweep-order effects.  Prints per-rep
 seconds, median, and (optionally) writes ``<plan-dir>/<name>_<suffix>.txt``
 with the ``explain("formatted")`` output.
+
+Each rep also prints its generated-code compile count and its Spark job
+count (build-time jobs included: every rep runs in its own job group).  The
+warm-ups read every table, so every rep should show the same job count and,
+after the first, 0 compiles: a compile in a warm rep means the
+generated-code cache evicted this query's classes, and an extra job means
+work a warm rep should not repeat, such as a schema inference.
 """
 
 from __future__ import annotations
@@ -22,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd  # noqa: F401  (pandas-UDF type hints resolve here)
 
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import codegen_compiles, get_spark
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import TABLE_NAMES, load_table
 
 
@@ -54,16 +61,22 @@ def main() -> None:
         "overwrite"
     ).save()
 
+    sc = spark.sparkContext
     results = {}
     for name in args.names:
         spec = registry[name]
-        times = []
+        times, compiles, jobs = [], [], []
         for rep in range(args.reps):
-            spark.sparkContext.setJobDescription(f"profile:{name}#{rep}")
+            group = f"profile:{name}#{rep}"
+            sc.setJobGroup(group, group)
+            compiled = codegen_compiles(spark)
             start = time.perf_counter()
             df = spec.fn(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - start, 4))
+            compiles.append(codegen_compiles(spark) - compiled)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             spark.catalog.clearCache()
             try:
                 spark.sparkContext._jvm.System.gc()
@@ -72,7 +85,7 @@ def main() -> None:
         times_sorted = sorted(times)
         med = times_sorted[len(times_sorted) // 2]
         results[name] = (times, med)
-        print(f"{name:45s} med {med:7.3f}  reps {times}", flush=True)
+        print(f"{name:45s} med {med:7.3f}  reps {times}  compiles {compiles}  jobs {jobs}", flush=True)
         if args.plan_dir:
             os.makedirs(args.plan_dir, exist_ok=True)
             df = spec.fn(spark, args.sf_dir)
@@ -82,6 +95,7 @@ def main() -> None:
             with open(os.path.join(args.plan_dir, f"{name}_{args.suffix}.txt"), "w") as fh:
                 fh.write(plan)
 
+    sc.setLocalProperty("spark.jobGroup.id", None)
     print("\nsummary:")
     for name, (times, med) in results.items():
         print(f"{name:45s} {med:7.3f}")
