@@ -3,19 +3,19 @@
 
 Execution is measured with a JVM-side noop sink (full plan runs, nothing
 crosses Py4J), after a warmup that touches every input file once so OS page
-cache and JVM JIT state are comparable across queries.
+cache and JVM JIT state are comparable across queries.  The warm-ups and
+the timed loop are ``tools/harness.py``'s, shared with the tools.
 
-Unless ``SPARK_GRAFT_BENCH_WAREHOUSE=0``, the run additionally builds the
-bucketed trip warehouse (one-time orderkey-bucketed ingest of
-lineitem/orders) and re-times the enriched-view tier against it, recording
-raw-vs-bucketed deltas under ``"warehouse"`` (full detail in
-BENCH_DETAIL.json, sums on the headline line) — the measured payoff of
-paying the fact×fact shuffle at ingest instead of per query.  The
-warehouse timings are NOT part of the headline total.  Caveat for small
-scale factors: below ~sf0.1 AQE broadcasts the orders side, so the raw
-join has no exchange to save and the build cost dominates; the bucketed
-plan's structural win (no Exchange, no Sort on the orderkey join — pinned
-in tests/test_bucketing.py) compounds with scale.
+The run also builds the bucketed trip warehouse (one-time
+orderkey-bucketed ingest of lineitem/orders) and re-times the
+enriched-view tier against it, recording raw-vs-bucketed deltas under
+``"warehouse"`` (full detail in BENCH_DETAIL.json, sums on the headline
+line) — the measured payoff of paying the fact×fact shuffle at ingest
+instead of per query.  The warehouse timings are NOT part of the headline
+total.  Caveat for small scale factors: below ~sf0.1 AQE broadcasts the
+orders side, so the raw join has no exchange to save and the build cost
+dominates; the bucketed plan's structural win (no Exchange, no Sort on the
+orderkey join — pinned in tests/test_bucketing.py) compounds with scale.
 """
 
 from __future__ import annotations
@@ -25,223 +25,70 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-global: pandas-UDF type hints resolve here
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import TABLE_NAMES, load_table
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
+    build_events_warehouse,
+    build_trip_warehouse,
+)
+from tools.harness import session, timed_run, warm_up
+
+# the enriched-view tier, re-timed on the orderkey-bucketed trip warehouse
+WH_TIER = (
+    "enrich_trips",
+    "route_revenue_top30",
+    "corridor_trip_count",
+    "route_pivot_by_business_top10",
+    # TPC-H fact x fact tier: shuffles on orderkey by necessity on the raw
+    # path; bucket-distribution removes every Exchange but the final tiny
+    # rollup (tests/test_bucketing.py)
+    "sole_late_supplier_waits",
+    "late_line_priority_mix",
+)
+# the behavioral tier, re-timed on the user-bucketed EVENTS warehouse:
+# user-keyed aggs/windows/joins inherit the scan distribution
+# (tests/test_bucketing.py pins the plans)
+EV_TIER = (
+    "user_feature_vector",
+    # the window tier: bucketed+sorted scan drops Exchange AND Sort
+    "events_sessionize",
+    "user_session_stats",
+    "user_growth_accounting",
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     registry = load_all()
-    spark = get_spark("bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("bench", cpus)
+    stage_build_sec = warm_up(spark, sf_dir, cpus)
 
-    # warmup: pull every table through the page cache + JIT the scan path
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).write.format("noop").mode("overwrite").save()
+    def run(name: str, **kw) -> float:
+        return round(timed_run(spark, name, lambda: registry[name].fn(spark, sf_dir, **kw)), 4)
 
-    # warmup: spin up the Python worker pool (reused across queries via
-    # spark.python.worker.reuse) so the first Arrow-batched query isn't
-    # charged ~cpus × interpreter-start
-    def _noop(batches):
-        yield from batches
+    timings = {name: run(name) for name in registry}
 
-    spark.range(0, int(cpus) * 4, 1, int(cpus)).mapInPandas(
-        _noop, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # warmup: the GROUPED_AGG pandas-UDF path (used by the UDAF API demo
-    # geo_mean_value_by_event_type) runs a different Arrow eval type than
-    # mapInPandas and was still charged ~4-7 s of one-time spin-up in cold
-    # sweeps (BENCH_r03: 17.6x its pin cold, 0.9 s steady-state) — touch it
-    # once with a trivial aggregate so no timed query pays it
-    from pyspark.sql import functions as _F
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-
-    def _warm_sum(v: pd.Series) -> float:  # nested: pickled by value
-        return float(v.sum())
-
-    spark.range(0, int(cpus) * 4, 1, int(cpus)).withColumn(
-        "g", _F.col("id") % 8
-    ).groupBy("g").agg(
-        _pandas_udf(_warm_sum, "double")("id")
-    ).write.format("noop").mode("overwrite").save()
-
-    # warmup: the Python DataSource read path runs in its own worker/runner
-    # type (plan_data_source_read), not the mapInPandas pool — touch it once
-    # so the first custom-source query isn't charged its spin-up either
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.pydatasource import (
-        SOURCE_NAME,
-        register_synthetic_source,
-    )
-
-    register_synthetic_source(spark)
-    spark.read.format(SOURCE_NAME).option("n_docs", 32).option("partitions", int(cpus)).load().write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # warmup: one tiny shuffle so exchange/agg machinery (shuffle writers,
-    # codegen of the HashAggregate+Exchange shape) is initialized before the
-    # first timed query instead of being charged to it
-    load_table(spark, sf_dir, "region").groupBy("r_name").count().write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    # build the content-addressed staging artifacts up front (ingest cost,
-    # not query cost — same treatment as the bucketed warehouse below) so
-    # per-query timings don't depend on which dedup-family query happens to
-    # run first against a cold stage; the build cost is reported separately
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
-        ANN_METHODS,
-    )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.stage import (
-        staged_ann_exact_topk,
-        staged_ann_method_topk,
-        staged_embedding_pairs,
-        staged_features,
-        staged_jaccard_pairs,
-        staged_quality_scores,
-        staged_segments,
-        staged_shingles,
-        staged_tfidf_doc_vectors,
-        staged_tfidf_sim_candidates,
-        staged_tfidf_topk,
-        staged_video_phash,
-    )
-
+    # raw-vs-bucketed-warehouse deltas.  Both tiers run at sweep END on a
+    # garbage-heavy heap; timed_run's GC between queries keeps them from
+    # absorbing collection tails the raw tier (GC'd mid-sweep) never paid.
+    # The builds are content-addressed (rebuilt only when the source parquet
+    # or bucket spec changed), so a warm invocation re-attaches the existing
+    # bucket files and the build seconds read ~0.  Build cost is reported
+    # apart from the headline.
     start = time.perf_counter()
-    for build in (
-        staged_features,
-        staged_shingles,
-        staged_jaccard_pairs,
-        staged_embedding_pairs,
-        staged_segments,
-        staged_tfidf_topk,
-        staged_tfidf_sim_candidates,
-        staged_tfidf_doc_vectors,
-        staged_quality_scores,
-        staged_ann_exact_topk,
-        # the video tier's frame-hash table: its synthesize+demux+dHash
-        # build was the ONE staged artifact not warmed here, so a stage-
-        # cold run (the driver's, every round — testdata regenerates)
-        # charged the build to media_video_neardup_phash's timing while
-        # warm pin sweeps didn't — the r8 2.55x pin-gap verdict item
-        staged_video_phash,
-    ):
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # ANN index-build panels: offline once-per-snapshot cost the recall
-    # monitor reads — built here so a cold stage dir doesn't charge four
-    # index probes + parquet writes to ann_recall_report's timing
-    for method, _fn in ANN_METHODS:
-        staged_ann_method_topk(spark, sf_dir, method).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    stage_build_sec = round(time.perf_counter() - start, 4)
-
-    timings: dict[str, float] = {}
-    for name, spec in registry.items():
-        start = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - start, 4)
-        # some queries persist() reused subplans (documented per-query);
-        # drop those blocks between measurements so no query's timing
-        # inherits the previous queries' executor-memory pressure
-        spark.catalog.clearCache()
-        # ... and return the heap to a common baseline OUTSIDE the timed
-        # window: 250+ queries in one JVM accumulate garbage, and a query
-        # that lands mid-collection pays multi-second tails (observed: the
-        # same static plan at 2s solo vs 31s late in a sweep).  The
-        # headline metric sums per-query times, so this costs nothing it
-        # measures.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
-    # raw-vs-bucketed-warehouse deltas for the enriched-view tier (opt-out)
-    warehouse = None
-    if os.environ.get("SPARK_GRAFT_BENCH_WAREHOUSE", "1") != "0":
-        from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
-            build_trip_warehouse,
-        )
-
-        wh_tier = (
-            "enrich_trips",
-            "route_revenue_top30",
-            "corridor_trip_count",
-            "route_pivot_by_business_top10",
-            # TPC-H fact x fact tier: shuffles on orderkey by necessity on
-            # the raw path; bucket-distribution removes every Exchange but
-            # the final tiny rollup (tests/test_bucketing.py)
-            "sole_late_supplier_waits",
-            "late_line_priority_mix",
-        )
-        start = time.perf_counter()
-        # r12: content-addressed build (rebuilds only when the source
-        # parquet or bucket spec changed — same invalidation rule as the
-        # staged frames); a warm invocation re-attaches the existing bucket
-        # files and build_sec reads ~0.  Declared in OPTIMIZATION_r12.md;
-        # the build cost was always reported separately from the headline.
-        build_trip_warehouse(spark, sf_dir)
-        build_sec = round(time.perf_counter() - start, 4)
-        bucketed: dict[str, float] = {}
-        for name in wh_tier:
-            start = time.perf_counter()
-            registry[name].fn(spark, sf_dir, use_warehouse=True).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            bucketed[name] = round(time.perf_counter() - start, 4)
-            spark.catalog.clearCache()
-            # same measurement hygiene as the main loop (r11 fix): the
-            # bucketed tier runs at sweep END on a garbage-heavy heap, and
-            # without the GC its queries absorb collection tails the raw
-            # tier (measured mid-sweep, GC'd between queries) never paid —
-            # r11 sweeps read bucketed_sec ~20 s vs ~7 s measured solo.
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-        warehouse = {
-            "build_sec": build_sec,
-            "raw": {name: timings[name] for name in wh_tier},
-            "bucketed": bucketed,
-        }
-
-        # user-bucketed EVENTS warehouse: same amortized-shuffle story for
-        # the behavioral tier (user-keyed aggs/windows/joins inherit the
-        # scan distribution — tests/test_bucketing.py pins the plans)
-        from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
-            build_events_warehouse,
-        )
-
-        start = time.perf_counter()
-        build_events_warehouse(spark, sf_dir)  # content-addressed, as above
-        warehouse["events_build_sec"] = round(time.perf_counter() - start, 4)
-        ev_tier = (
-            "user_feature_vector",
-            # the window tier: bucketed+sorted scan drops Exchange AND Sort
-            "events_sessionize",
-            "user_session_stats",
-            "user_growth_accounting",
-        )
-        warehouse["events_bucketed"] = {}
-        for name in ev_tier:
-            start = time.perf_counter()
-            registry[name].fn(spark, sf_dir, use_warehouse=True).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            warehouse["events_bucketed"][name] = round(time.perf_counter() - start, 4)
-            spark.catalog.clearCache()
-            try:
-                spark.sparkContext._jvm.System.gc()  # same hygiene as above
-            except Exception:
-                pass
-        warehouse["events_raw"] = {name: timings[name] for name in ev_tier}
+    build_trip_warehouse(spark, sf_dir)
+    warehouse = {
+        "build_sec": round(time.perf_counter() - start, 4),
+        "raw": {name: timings[name] for name in WH_TIER},
+        "bucketed": {name: run(name, use_warehouse=True) for name in WH_TIER},
+    }
+    start = time.perf_counter()
+    build_events_warehouse(spark, sf_dir)
+    warehouse["events_build_sec"] = round(time.perf_counter() - start, 4)
+    warehouse["events_bucketed"] = {name: run(name, use_warehouse=True) for name in EV_TIER}
+    warehouse["events_raw"] = {name: timings[name] for name in EV_TIER}
 
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else None
 
@@ -257,9 +104,8 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(timings),
         "stage_build_sec": stage_build_sec,
+        "warehouse": warehouse,
     }
-    if warehouse is not None:
-        detail["warehouse"] = warehouse
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
@@ -274,13 +120,12 @@ def main() -> None:
         "n_queries": len(timings),
         "stage_build_sec": stage_build_sec,
         "detail": "BENCH_DETAIL.json",
-    }
-    if warehouse is not None:
-        headline["warehouse"] = {
+        "warehouse": {
             "build_sec": warehouse["build_sec"],
             "raw_sec": round(sum(warehouse["raw"].values()), 4),
             "bucketed_sec": round(sum(warehouse["bucketed"].values()), 4),
-        }
+        },
+    }
     print(json.dumps(headline))
     spark.stop()
 

@@ -13,12 +13,13 @@ Run: ``python tools/plan_report.py [sf_dir]`` (writes SCALE.md at repo root).
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.harness import plan_stats  # noqa: E402
 
 HEADER = """# SCALE — physical-plan audit of every registry query
 
@@ -40,6 +41,18 @@ everything else is whole-stage-codegen JVM.
 """
 
 FOOTER = """
+
+**Wall times in these sections predate `tools/harness.py`.** They were
+taken when `scaling_curve.py` timed some steps (stage builds, the ANN
+panel builds) with `.count()` instead of the noop sink, and ran no
+`clearCache` + GC between the steps of a chain.  Every step now
+goes through `harness.timed_run`, the chained ones too (edges →
+`pagerank(edges)`, pairs → `connected_components` →
+`customer_identity_clusters`), so no step inherits the heap or cache its
+predecessor left.  Re-measure a point with today's tool before comparing
+a new timing with the figures below; the static-plan counts and row
+counts do not depend on the method.
+
 
 ## Measured scaling (dedup/curation flagship chain, 1000× sweep)
 
@@ -85,16 +98,15 @@ claim under test: unlike a classic distributed prefix-doubling SA build
 (log₂ rounds, a FULL shuffle per round), this tier's doubling is IN-ROW
 (array transforms per document), so its SHUFFLE COUNT is a plan constant —
 the sweep records each query's static-plan shuffle-Exchange count
-alongside wall time (counts anchored on node names, so BroadcastExchange
-and the child description a ReusedExchange line embeds are NOT counted as
-shuffles — the round-8 metric included broadcasts; corrected round 9):
+alongside wall time (`harness.plan_stats`: BroadcastExchange and
+ReusedExchange nodes are counted apart from shuffles):
 
-| stage | sf0.01 (500 docs) | sf0.1 (5k) | sf1 (50k) | sf10 (500k) | shuffles (all points) | rows at sf0.01→0.1→1→10 |
+| stage | sf0.01 (500 docs) | sf0.1 (5k) | sf1 (50k) | sf10 (500k) | shuffles (static plan)² | rows at sf0.01→0.1→1→10 |
 |---|---|---|---|---|---|---|
 | stage build (featurize) | 7.1 s | 6.9 s | 31.3 s | 11.5 s | — | — |
-| `sa_duplicate_length_profile` | 3.9 s | 4.1 s | 21.7 s | 75.9 s | 4 | 5 at every scale |
-| `sa_longest_duplicates` | 4.1 s | 7.1 s | 30.7 s | 88.8 s | 6 + 4 broadcast¹ | 151 → 1,482 → 14,820 → 148,200 |
-| `dedup_cut_substrings` | 3.5 s | 3.2 s | 12.7 s | 47.2 s | 4 + 2 broadcast | 500 → 5k → 50k → 500k |
+| `sa_duplicate_length_profile` | 3.9 s | 4.1 s | 21.7 s | 75.9 s | 2 | 5 at every scale |
+| `sa_longest_duplicates` | 4.1 s | 7.1 s | 30.7 s | 88.8 s | 3 + 2 broadcast¹ | 151 → 1,482 → 14,820 → 148,200 |
+| `dedup_cut_substrings` | 3.5 s | 3.2 s | 12.7 s | 47.2 s | 2 + 1 broadcast | 500 → 5k → 50k → 500k |
 | **total** | **18.6 s** | **21.3 s** | **96.4 s** | **223.3 s** | constant¹ | |
 
 1000× the documents costs 12× the wall time, sublinear in every decade
@@ -103,9 +115,16 @@ the per-query shuffle counts are scale-INVARIANT — no per-level shuffle
 rounds; the level construction never leaves the row.  ¹The one exception
 is honest adaptive behavior, not drift: at sf10 `sa_longest_duplicates`'
 example-document join-back side outgrows the broadcast threshold and
-re-plans as a shuffle join (one broadcast node becomes a pair of shuffle
-exchanges) — the join carries only
-output-bounded example rows either way.  Output linearity holds exactly:
+re-plans as a shuffle join (one broadcast node becomes shuffle
+exchanges; that reading was taken with the doubling counter of footnote
+², so "a pair" may be one exchange) — the join carries only
+output-bounded example rows either way.  ²Static-plan counts from
+`harness.plan_stats` on the current plans at sf0.01 (sf0.001 gives the
+same counts; counts, not timings, so they do not depend on the host;
+sf0.1 and up were not re-counted).  The figures published before were
+doubled: `formatted` explain prints every node twice — once in the tree
+and once as its numbered `(N)` detail header — and the old counter
+matched both.  Output linearity holds exactly:
 the profile is |levels|-row by construction, longest-duplicate rows and
 cut spans are 10×/decade — duplicate structure is intra-replica, so no
 cross-replica super-linear term appears.  (Stage build at sf1 absorbed a
@@ -166,26 +185,29 @@ medians, quartiles, bucket bounds and decile edges are IDENTICAL at every
 scale and the curve isolates pure rank-machinery cost over 10k → 10M
 events):
 
-| stage | sf0.01 (10k events) | sf0.1 (100k) | sf1 (1M) | sf10 (10M) | shuffles (all points) | rows at sf0.01→0.1→1→10 |
+| stage | sf0.01 (10k events) | sf0.1 (100k) | sf1 (1M) | sf10 (10M) | shuffles (static plan)² | rows at sf0.01→0.1→1→10 |
 |---|---|---|---|---|---|---|
-| `median_value_by_event_type` | 6.0 s | 5.9 s | 7.6 s | 12.7 s | 12 + 4 broadcast | 5 at every scale |
-| `quartiles_by_event_type` | 1.4 s | 1.6 s | 2.0 s | 5.4 s | 14 + 4 broadcast | 5 at every scale |
-| `equi_depth_histogram_by_event_type` | 1.5 s | 1.7 s | 2.0 s | 5.6 s | 14 + 4 broadcast | 40 at every scale |
-| `mad_outlier_events` | 2.7 s | 3.0 s | 4.7 s | 13.1 s | 60 + 30 broadcast | 392 → 4,054 → 40,540 → 405,400 |
-| `psi_click_vs_purchase` | 2.0 s | 2.0 s | 2.5 s | 4.0 s | 40 + 24 broadcast | 10 at every scale |
-| **total** | **13.5 s** | **14.0 s** | **18.8 s** | **40.8 s** | constant | |
+| `median_value_by_event_type` | 6.0 s | 5.9 s | 7.6 s | 12.7 s | 3 + 3 broadcast | 5 at every scale |
+| `quartiles_by_event_type` | 1.4 s | 1.6 s | 2.0 s | 5.4 s | 4 + 3 broadcast | 5 at every scale |
+| `equi_depth_histogram_by_event_type` | 1.5 s | 1.7 s | 2.0 s | 5.6 s | 4 + 3 broadcast | 40 at every scale |
+| `mad_outlier_events` | 2.7 s | 3.0 s | 4.7 s | 13.1 s | 18 + 24 broadcast | 392 → 4,054 → 40,540 → 405,400 |
+| `psi_click_vs_purchase` | 2.0 s | 2.0 s | 2.5 s | 4.0 s | 14 + 14 broadcast | 10 at every scale |
+| **total** | **13.5 s** | **14.0 s** | **18.8 s** | **40.8 s** | | |
 
-(Shuffle counts anchored on node names — the round-8 metric also counted
-BroadcastExchange nodes; wall times are the round-8 measurements, whose
-plans are unchanged by the metric fix.)  1000× the events costs 3.0× the
+(²Static-plan counts from `harness.plan_stats` on the current plans at
+sf0.01, as in the suffix-array table; the figures published before were
+doubled by the same counter defect, and the rank helper has been
+reworked since, so they are not simply twice these.  Wall times are the
+round-8 measurements, taken on the plans of that round.)  1000× the events costs 3.0× the
 wall time (last decade: 2.2× on 10× the
 rows, every stage sublinear in its 10×) — the tier is fixed-cost
 dominated at toy scale precisely because the data-sized work now spreads
 over all partitions (the old single-task window would serialize the
 10M-row sort in one thread and grow linearly from here).  Static-plan
-shuffle counts are identical at every point (no per-scale plan drift;
-mad's 60 is static duplication of the twice-read median subtrees that
-AQE exchange reuse collapses at runtime), and every aggregate output is
+shuffle counts were identical at every point when the sweep ran (no
+per-scale plan drift; mad's count is static duplication of the
+twice-read median subtrees that AQE exchange reuse collapses at
+runtime), and every aggregate output is
 scale-INVARIANT by construction (same value distribution per replica)
 except the deliberately data-sized MAD outlier list at exactly
 10×/decade.
@@ -527,38 +549,6 @@ growing with the corpus.
 """
 
 
-def audit(name: str, plan: str) -> dict:
-    # formatted explain shows each node once in the tree and once as a
-    # numbered "(N) NodeName" detail header — count the unique headers
-    nodes = re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, flags=re.MULTILINE)
-
-    def n(*names: str) -> int:
-        return sum(1 for node in nodes if node in names)
-
-    scans = [m.count(":") for m in re.findall(r"ReadSchema: struct<([^>]*)", plan)]
-    pushed = sum(
-        1
-        for ln in plan.splitlines()
-        if "PushedFilters" in ln and "PushedFilters: []" not in ln
-    )
-    python_ops = sorted(
-        {
-            op
-            for op in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython")
-            if op in plan
-        }
-    )
-    return {
-        "shuffles": n("Exchange"),
-        "bcast": n("BroadcastHashJoin", "BroadcastNestedLoopJoin"),
-        "smj": n("SortMergeJoin", "ShuffledHashJoin"),
-        "pushed": pushed,
-        "widest_scan": max(scans) if scans else 0,
-        "python": ",".join(python_ops) or "—",
-        "topk": "yes" if "TakeOrderedAndProject" in plan else "—",
-    }
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from pyspark.sql import SparkSession
@@ -580,10 +570,11 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover - report, don't die
             rows.append(f"| `{name}` | plan failed: {type(exc).__name__} | | | | | | |")
             continue
-        a = audit(name, plan)
+        a = plan_stats(plan)
         rows.append(
-            f"| `{name}` | {a['shuffles']} | {a['bcast']} | {a['smj']} | "
-            f"{a['pushed']} | {a['widest_scan']} | {a['python']} | {a['topk']} |"
+            f"| `{name}` | {a['shuffle']} | {a['bcast_joins']} | {a['shuffle_joins']} | "
+            f"{a['pushed']} | {a['widest_scan']} | {','.join(a['python']) or '—'} | "
+            f"{'yes' if a['topk'] else '—'} |"
         )
     out = REPO / "SCALE.md"
     out.write_text(HEADER.format(sf_dir=sf_dir) + "\n".join(rows) + FOOTER)

@@ -8,23 +8,21 @@ stage), ``curate_pack_corpus`` — at sf0.01, sf0.1, and a synthesized sf1.
 
 sf1 synthesis (documents only — the chain touches no other table): 10
 replicas of the sf0.1 corpus, replica 0 verbatim, replica k > 0 with every
-CONTENT token suffixed ``k`` and doc_ids offset by k·10⁷.  Language-marker
-and stopword tokens keep their spelling (the lang-ID argmax and stopword
-gates must see them, or replicas 1-9 would all fail the ``en`` gate and
-the packing stage wouldn't scale — observed on the first cut of this
-tool); content-token suffixing still makes replica vocabularies disjoint
-where it matters, because virtually every 2/3-gram shingle contains at
-least one content token.  The corpus is therefore 10 near-isomorphic
-copies: intra-replica duplicate/near-dup structure (the planted pairs) is
+CONTENT token suffixed ``k`` and doc_ids offset by k·10⁷
+(``harness.documents_replica`` says why marker and stopword tokens keep
+their spelling).  The corpus is therefore 10 near-isomorphic copies:
+intra-replica duplicate/near-dup structure (the planted pairs) is
 preserved exactly, cross-replica similarity stays below every threshold,
 and each stage's output scales 10× per decade (verified by the row counts
 the sweep prints) — wall-time deviations from linear are engine behavior
 (banding fan-out, window skew, driver bottlenecks), not data-distribution
-drift.
+drift.  The other tiers' sweeps replicate their own tables the same way
+(``harness.REPLICA_TRANSFORMS``).
 
 Each scale factor runs against a FRESH stage directory so the one-time
 stage build is measured, and in its own forked run (--one) so JVM/page-
-cache state can't bleed between points.
+cache state can't bleed between points.  Timings use ``harness.timed_run``
+(noop sink; clearCache + GC between measurements).
 
 Run:  python tools/scaling_curve.py            # all three points
       python tools/scaling_curve.py --build DIR  # just synthesize sf1
@@ -34,9 +32,7 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
@@ -44,294 +40,47 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage  # noqa: E402
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.plans import plan_string  # noqa: E402
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all  # noqa: E402
+from tools.harness import (  # noqa: E402
+    REPLICA_TRANSFORMS,
+    env_cpus,
+    fork_points,
+    plan_stats,
+    replicate,
+    session,
+    synthesize,
+    timed_run,
+    warm_up,
+)
+
+SRC_DIR = "/root/testdata/sf0.1"
 SF1_DIR = os.path.join(REPO, ".scratch", "sf1")
-SF10_DIR = os.path.join(REPO, ".scratch", "sf10")
 REPLICAS = 10
-ID_STRIDE = 10_000_000
 
 
-def build_sf1(
-    out_dir: str = SF1_DIR, src_dir: str = "/root/testdata/sf0.1", replicas: int = REPLICAS
-) -> str:
-    """Synthesize a replica-scaled documents table (see module docstring).
-    ``replicas=100`` yields the sf10 point (500k docs) for ``--deep``.
-    Caveat quantified by the sweep's row counts: the ≤8 distinct
-    marker-only 3-gram shingles ("the a the", …) are shared across ALL
-    replicas by construction, so their df grows with the replica count and
-    adds a bounded super-linear candidate term to the exact-Jaccard leg —
-    the pairs themselves are sub-threshold (jaccard ≈ 0), so OUTPUTS stay
-    10×/decade."""
-    import hashlib
-    import inspect
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, "documents.parquet")
-    # early-return keyed on a CONTENT marker, not bare file existence
-    # (round-6 advice: a stale corpus must not silently shadow a change to
-    # this synthesis logic or a regenerated source table)
-    st = os.stat(os.path.join(src_dir, "documents.parquet"))
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_sf1).encode()).hexdigest()[:8],
-        str(replicas), str(st.st_size), str(st.st_mtime_ns),
-    ))
-    marker = os.path.join(out_dir, ".synth_key")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_dir
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.textstats import (
-        LANG_MARKERS,
-        STOPWORDS,
-    )
-
-    keep = set(STOPWORDS)
-    for markers in LANG_MARKERS.values():
-        keep.update(markers)
-    src = pq.read_table(os.path.join(src_dir, "documents.parquet"))
-    cols = src.to_pydict()
-    n = len(cols["doc_id"])
-    out = {k: [] for k in cols}
-    for k in range(replicas):
-        if k == 0:
-            texts = cols["text"]
-        else:
-            suf = str(k)
-            texts = [
-                " ".join(t if t in keep else t + suf for t in txt.split())
-                for txt in cols["text"]
-            ]
-        out["doc_id"].extend(d + k * ID_STRIDE for d in cols["doc_id"])
-        out["text"].extend(texts)
-        out["lang"].extend(cols["lang"])
-        out["source"].extend(cols["source"])
-        out["n_chars"].extend(len(t) for t in texts)
-    # multiple row groups so the scan parallelizes like real multi-file input
-    pq.write_table(
-        pa.table(out, schema=src.schema), out_path, row_group_size=max(1, (n * replicas) // 32)
-    )
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_dir
+def timed(spark, times: dict, name: str, build) -> None:
+    """``harness.timed_run`` recorded under ``times[name]``."""
+    times[name] = round(timed_run(spark, name, build), 2)
 
 
-def build_sf1_embeddings(
-    out_dir: str = SF1_DIR, src_dir: str = "/root/testdata/sf0.1", replicas: int = 10
-) -> str:
-    """Synthesize a replica-scaled embeddings table for the ANN chain
-    (round-6 verdict item 7): each replica k applies a SIGNED CYCLIC
-    ROTATION to every vector's dimensions — roll by ``k % dim``, and for
-    ``k >= dim`` (the sf10 point has 100 replicas over 64 dims, so bare
-    rolls would wrap and duplicate replica 0 exactly — brute-force ties)
-    additionally flip a deterministic per-replica sign pattern.  Signed
-    axis permutations are orthogonal: norms and intra-replica pairwise
-    cosines are preserved exactly, so codebook training and recall behave
-    like a larger draw of the same corpus while every replica's vectors
-    stay distinct.  Query panel (vec_id < N_QUERIES) stays the k=0
-    originals, so the recall monitor probes a FIXED panel against a
-    growing corpus — the production shape.  Same content-marker
-    early-return as ``build_sf1``."""
-    import hashlib
-    import inspect
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, "embeddings.parquet")
-    st = os.stat(os.path.join(src_dir, "embeddings.parquet"))
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_sf1_embeddings).encode()).hexdigest()[:8],
-        str(replicas), str(st.st_size), str(st.st_mtime_ns),
-    ))
-    marker = os.path.join(out_dir, ".synth_key_emb")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_dir
-    src = pq.read_table(os.path.join(src_dir, "embeddings.parquet"))
-    vec_ids = src.column("vec_id").to_numpy()
-    labels = src.column("label").to_numpy()
-    vecs = np.asarray(src.column("embedding").to_pylist(), dtype=np.float32)
-    dim = vecs.shape[1]
-    ids_out, lab_out, vec_out = [], [], []
-    for k in range(replicas):
-        v = np.roll(vecs, k % dim, axis=1)
-        if k >= dim:
-            signs = np.random.default_rng(1000 + k).choice(
-                np.float32([-1.0, 1.0]), size=dim
-            )
-            v = v * signs
-        ids_out.append(vec_ids + k * ID_STRIDE)
-        lab_out.append(labels)
-        vec_out.append(v)
-    tbl = pa.table(
-        {
-            "vec_id": np.concatenate(ids_out),
-            "embedding": pa.array(
-                np.concatenate(vec_out).tolist(), type=src.schema.field("embedding").type
-            ),
-            "label": np.concatenate(lab_out),
-        }
-    )
-    n = tbl.num_rows
-    pq.write_table(tbl, out_path, row_group_size=max(1, n // 32))
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_dir
-
-
-def build_sf1_events(
-    out_dir: str = SF1_DIR, src_dir: str = "/root/testdata/sf0.1", replicas: int = REPLICAS
-) -> str:
-    """Synthesize a replica-scaled events table for the rank-selection
-    chain (round-8 window sweep): replica k offsets event_id/user_id by
-    k·ID_STRIDE and leaves (ts, event_type, value, props) verbatim — the
-    per-type value DISTRIBUTION is identical at every scale, so exact
-    medians/quartiles/deciles stay at the same data values while the rank
-    machinery processes 10× the rows per decade (the pure engine-cost
-    axis).  Same content-marker early-return as ``build_sf1``."""
-    import hashlib
-    import inspect
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, "events.parquet")
-    st = os.stat(os.path.join(src_dir, "events.parquet"))
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_sf1_events).encode()).hexdigest()[:8],
-        str(replicas), str(st.st_size), str(st.st_mtime_ns),
-    ))
-    marker = os.path.join(out_dir, ".synth_key_ev")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_dir
-    src = pq.read_table(os.path.join(src_dir, "events.parquet"))
-    cols = src.to_pydict()
-    n = len(cols["event_id"])
-    out = {k: [] for k in cols}
-    for k in range(replicas):
-        out["event_id"].extend(e + k * ID_STRIDE for e in cols["event_id"])
-        out["user_id"].extend(u + k * ID_STRIDE for u in cols["user_id"])
-        out["ts"].extend(cols["ts"])
-        out["event_type"].extend(cols["event_type"])
-        out["value"].extend(cols["value"])
-        out["props"].extend(cols["props"])
-    pq.write_table(
-        pa.table(out, schema=src.schema), out_path, row_group_size=max(1, (n * replicas) // 32)
-    )
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_dir
-
-
-def build_sf1_customers(
-    out_dir: str = SF1_DIR, src_dir: str = "/root/testdata/sf0.1", replicas: int = REPLICAS
-) -> str:
-    """Synthesize a replica-scaled customer table for the iterative-graph
-    chain (round-9 verdict item 3): replica k appends a per-replica
-    4-char suffix built from REPEATED digits (``d₁d₁d₂d₂`` of k), so any
-    two replica suffixes differ in ≥ 2 characters — appending a common
-    suffix preserves every intra-replica Levenshtein distance exactly,
-    while cross-replica name pairs sit at distance ≥ 2 and generate NO
-    edges.  Custkeys offset by k·7,000,000 (a multiple of the
-    ``ER_SAMPLE_MOD`` = 7 sample modulus), so each replica's sampled
-    subset is exactly the base subset — pair and cluster counts scale
-    precisely ``replicas``× per decade.  Same content-marker early-return
-    as ``build_sf1``."""
-    import hashlib
-    import inspect
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, "customer.parquet")
-    st = os.stat(os.path.join(src_dir, "customer.parquet"))
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_sf1_customers).encode()).hexdigest()[:8],
-        str(replicas), str(st.st_size), str(st.st_mtime_ns),
-    ))
-    marker = os.path.join(out_dir, ".synth_key_cust")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_dir
-    src = pq.read_table(os.path.join(src_dir, "customer.parquet"))
-    cols = src.to_pydict()
-    n = len(cols["c_custkey"])
-    out = {k: [] for k in cols}
-    for k in range(replicas):
-        if k == 0:
-            names = cols["c_name"]
-        else:
-            d1, d2 = divmod(k, 10)
-            suf = f"{d1}{d1}{d2}{d2}"
-            names = [nm + suf for nm in cols["c_name"]]
-        out["c_custkey"].extend(c + k * 7_000_000 for c in cols["c_custkey"])
-        out["c_name"].extend(names)
-        for col in ("c_nationkey", "c_acctbal", "c_mktsegment"):
-            out[col].extend(cols[col])
-    pq.write_table(
-        pa.table(out, schema=src.schema), out_path,
-        row_group_size=max(1, (n * replicas) // 32),
-    )
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_dir
-
-
-def build_sf1_orders(
-    out_dir: str = SF1_DIR, src_dir: str = "/root/testdata/sf0.1", replicas: int = REPLICAS
-) -> str:
-    """Synthesize a replica-scaled orders table for the customer-ranking
-    tier (rfm / abc / gini): replica k offsets o_orderkey and o_custkey by
-    k·ID_STRIDE and leaves every other column verbatim — per-customer
-    order-count/revenue distributions are identical at every scale, so the
-    ranking machinery processes 10× the customers per decade over the same
-    value distribution (the pure engine-cost axis).  Same content-marker
-    early-return as ``build_sf1``."""
-    import hashlib
-    import inspect
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, "orders.parquet")
-    st = os.stat(os.path.join(src_dir, "orders.parquet"))
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_sf1_orders).encode()).hexdigest()[:8],
-        str(replicas), str(st.st_size), str(st.st_mtime_ns),
-    ))
-    marker = os.path.join(out_dir, ".synth_key_ord")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_dir
-    src = pq.read_table(os.path.join(src_dir, "orders.parquet"))
-    cols = src.to_pydict()
-    n = len(cols["o_orderkey"])
-    out = {k: [] for k in cols}
-    for k in range(replicas):
-        out["o_orderkey"].extend(o + k * ID_STRIDE for o in cols["o_orderkey"])
-        out["o_custkey"].extend(c + k * ID_STRIDE for c in cols["o_custkey"])
-        for col in cols:
-            if col not in ("o_orderkey", "o_custkey"):
-                out[col].extend(cols[col])
-    pq.write_table(
-        pa.table(out, schema=src.schema), out_path,
-        row_group_size=max(1, (n * replicas) // 32),
-    )
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_dir
+def _time_queries(spark, sf_dir: str, fns: dict, times: dict, plans: bool = False) -> dict:
+    """Time each query, then (untimed) record its output rows and, with
+    ``plans``, its static-plan exchange counts; stops the session."""
+    for q, fn in fns.items():
+        timed(spark, times, q, lambda fn=fn: fn(spark, sf_dir))
+    times["total"] = round(sum(times.values()), 2)
+    for q, fn in fns.items():
+        df = fn(spark, sf_dir)
+        times[f"rows_{q}"] = df.count()
+        if plans:
+            stats = plan_stats(plan_string(df))
+            times[f"exchanges_{q}"] = stats["shuffle"]
+            times[f"broadcast_exchanges_{q}"] = stats["broadcast"]
+            times[f"reused_exchanges_{q}"] = stats["reused"]
+    spark.stop()
+    return times
 
 
 #: The sf1 core-ratio tier (round-11 verdict item 9): the bench top tier,
@@ -360,74 +109,18 @@ TOP_TIER = (
 
 
 def run_top_tier(sf_dir: str, cpus: int) -> dict[str, float]:
-    """Time the bench top tier at one (sf_dir, cpus) point — bench.py
-    methodology (noop sink, clearCache + GC between queries) with the
-    staged artifacts warmed FIRST and reported separately, so per-query
-    numbers measure the query, not the shared one-time stage build."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.stage import (
-        staged_embedding_pairs,
-        staged_features,
-        staged_jaccard_pairs,
-        staged_quality_scores,
-        staged_shingles,
-    )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-
+    """Time the bench top tier at one (sf_dir, cpus) point — bench.py's
+    warm-ups and timed loop, with the staged-artifact build reported
+    separately, so per-query numbers measure the query, not the shared
+    one-time stage build."""
     reg = load_all()
-    spark = get_spark("scaling-top", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    times: dict[str, float] = {}
-    t0 = time.monotonic()
-    for build in (
-        staged_features,
-        staged_shingles,
-        staged_jaccard_pairs,
-        staged_quality_scores,
-        staged_embedding_pairs,
-    ):
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    times["stage_build"] = round(time.monotonic() - t0, 2)
+    spark = session("scaling-top", cpus)
+    times: dict[str, float] = {"cpus": cpus, "stage_build": round(warm_up(spark, sf_dir, cpus), 2)}
     for q in TOP_TIER:
-        t0 = time.monotonic()
-        reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[q] = round(time.monotonic() - t0, 2)
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-    times["total"] = round(sum(v for k, v in times.items() if k != "stage_build"), 2)
+        timed(spark, times, q, lambda q=q: reg[q].fn(spark, sf_dir))
+    times["total"] = round(sum(times[q] for q in TOP_TIER), 2)
     spark.stop()
     return times
-
-
-def timed(times: dict[str, float], name: str, fn) -> None:
-    """Run ``fn`` and record its wall seconds under ``times[name]``."""
-    t0 = time.monotonic()
-    fn()
-    times[name] = round(time.monotonic() - t0, 2)
-
-
-def _exchange_counts(plan: str) -> dict[str, int]:
-    """Per-node-kind exchange counts from an executed-plan string.
-
-    ``plan.count("Exchange ")`` overstates true shuffle counts two ways
-    (round-8 advice): a ``ReusedExchange [...], Exchange hashpartitioning``
-    line embeds the referenced child's description as a substring, and
-    BroadcastExchange matches too.  Anchor on the node NAME at the start
-    of the tree-art-stripped line instead and report the three kinds
-    separately — the scale-invariance claim is about SHUFFLE exchanges."""
-    shuffle = broadcast = reused = 0
-    for line in plan.splitlines():
-        node = re.sub(r"^[\s:+\-*]*(?:\(\d+\)\s*)?", "", line)
-        if node.startswith("ReusedExchange"):
-            reused += 1
-        elif node.startswith("BroadcastExchange"):
-            broadcast += 1
-        elif node.startswith("Exchange"):
-            shuffle += 1
-    return {"shuffle": shuffle, "broadcast": broadcast, "reused": reused}
 
 
 def run_rank_chain(sf_dir: str, cpus: int) -> dict[str, float]:
@@ -438,15 +131,7 @@ def run_rank_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     now range-partitions on (key, value), so wall time scales with the
     corpus at data-proportional parallelism and the static-plan exchange
     count stays constant (no per-scale plan drift)."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.plans import plan_string
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-
     reg = load_all()
-    spark = get_spark("scaling-curve-rank", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    times: dict[str, float] = {}
-
     queries = (
         "median_value_by_event_type",
         "quartiles_by_event_type",
@@ -454,18 +139,8 @@ def run_rank_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         "mad_outlier_events",
         "psi_click_vs_purchase",
     )
-    for q in queries:
-        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
-    times["total"] = round(sum(times.values()), 2)
-    for q in queries:
-        df = reg[q].fn(spark, sf_dir)
-        times[f"rows_{q}"] = df.count()
-        ex = _exchange_counts(plan_string(df))
-        times[f"exchanges_{q}"] = ex["shuffle"]
-        times[f"broadcast_exchanges_{q}"] = ex["broadcast"]
-        times[f"reused_exchanges_{q}"] = ex["reused"]
-    spark.stop()
-    return times
+    spark = session("scaling-curve-rank", cpus)
+    return _time_queries(spark, sf_dir, {q: reg[q].fn for q in queries}, {}, plans=True)
 
 
 def run_ann_chain(sf_dir: str, cpus: int) -> dict[str, float]:
@@ -473,42 +148,33 @@ def run_ann_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     exact query-panel build (the deliberate offline quadratic-in-panel leg),
     the four index builds + panel probes, and the recall monitor that joins
     them — the nightly index-health pipeline end to end."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
         ANN_METHODS,
+        IVF_NPROBE,
+        PQ_SHORTLIST,
+        ann_recall_report_detail,
+        ivf_topk_detail,
+        ivfpq_topk_detail,
+        pq_topk_detail,
+        scaled_ann_knobs,
     )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table
 
     reg = load_all()
-    spark = get_spark("scaling-curve-ann", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling-curve-ann", cpus)
     times: dict[str, float] = {}
 
     n_vecs = load_table(spark, sf_dir, "embeddings").count()  # untimed: corpus size
-    timed(times, "exact_panel", lambda: stage.staged_ann_exact_topk(spark, sf_dir).count())
+    timed(spark, times, "exact_panel", lambda: stage.staged_ann_exact_topk(spark, sf_dir))
     for method, _fn in ANN_METHODS:
-        timed(
-            times,
-            f"build_{method}",
-            lambda m=method: stage.staged_ann_method_topk(spark, sf_dir, m).count(),
-        )
-    timed(
-        times,
-        "ann_recall_report",
-        lambda: reg["ann_recall_report"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
-    )
+        timed(spark, times, f"build_{method}", lambda m=method: stage.staged_ann_method_topk(spark, sf_dir, m))
+    timed(spark, times, "ann_recall_report", lambda: reg["ann_recall_report"].fn(spark, sf_dir))
     times["total"] = round(sum(times.values()), 2)
     times["n_vectors"] = n_vecs
     # untimed: the recall numbers themselves (panel-sized), so the sweep
     # records whether the floors HOLD at each scale, not just the wall —
     # read from the DETAIL surface (the registered query now emits floor
     # booleans only, round-10 oracle-ization)
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
-        ann_recall_report_detail,
-    )
-
     for r in ann_recall_report_detail(spark, sf_dir).collect():
         d = r.asDict()
         m = d.get("method")
@@ -524,15 +190,6 @@ def run_ann_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     # equal — recorded anyway as the equality receipt.  (Before r11 the
     # roles were reversed: default = pinned, "recall_scaled_*" = opt-in
     # scaled; historical sweep JSONs use those keys.)
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
-        IVF_NPROBE,
-        PQ_SHORTLIST,
-        ivf_topk_detail,
-        ivfpq_topk_detail,
-        pq_topk_detail,
-        scaled_ann_knobs,
-    )
-
     knobs = scaled_ann_knobs(n_vecs)
     times["scaled_nprobe"] = knobs["nprobe"]
     times["scaled_shortlist_mult"] = knobs["shortlist_mult"]
@@ -547,6 +204,8 @@ def run_ann_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         ),
     }
     for m, probe in pinned_probes.items():
+        # timed around a collect, not the noop sink: the recall check
+        # needs the probe's rows
         t0 = time.monotonic()
         got: dict[int, set[int]] = {}
         for r in probe().collect():
@@ -572,7 +231,8 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
       large-star/small-star CC converges in O(log diameter) rounds — the
       sweep records pair counts and the executed ROUND count, which must
       stay near-flat while pairs grow 10×/decade."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
+    from pyspark.sql import functions as F
+
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.cluster import (
         connected_components,
     )
@@ -586,36 +246,19 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         ER_SAMPLE_MOD,
         fuzzy_pairs,
     )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table
-    from pyspark.sql import functions as F
 
     reg = load_all()
-    spark = get_spark("scaling-curve-graph", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling-curve-graph", cpus)
     times: dict[str, float] = {}
 
     # --- textrank: stage (tokenize-once), edge build, solve, end-to-end ---
-    timed(times, "stage_build", lambda: stage.staged_features(spark, sf_dir).count())
+    timed(spark, times, "stage_build", lambda: stage.staged_features(spark, sf_dir))
     docs = stage.staged_features(spark, sf_dir)
     edges = cooccurrence_edges(doc_term_pairs(docs))
-    timed(
-        times,
-        "textrank_edge_build",
-        lambda: edges.write.format("noop").mode("overwrite").save(),
-    )
-    timed(
-        times,
-        "textrank_solve",
-        lambda: pagerank(edges).write.format("noop").mode("overwrite").save(),
-    )
-    timed(
-        times,
-        "textrank_keywords",
-        lambda: reg["textrank_keywords"].fn(spark, sf_dir)
-        .write.format("noop").mode("overwrite").save(),
-    )
+    timed(spark, times, "textrank_edge_build", lambda: edges)
+    timed(spark, times, "textrank_solve", lambda: pagerank(edges))
+    timed(spark, times, "textrank_keywords", lambda: reg["textrank_keywords"].fn(spark, sf_dir))
     times["n_textrank_edges"] = edges.count()
     times["n_textrank_vocab"] = VOCAB_SIZE
     times["n_docs"] = docs.count()
@@ -625,24 +268,18 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
         F.col("c_custkey") % ER_SAMPLE_MOD == 0
     )
     pairs = fuzzy_pairs(cust, "c_custkey", "c_name")
-    timed(
-        times,
-        "linkage_pairs",
-        lambda: pairs.write.format("noop").mode("overwrite").save(),
-    )
+    timed(spark, times, "linkage_pairs", lambda: pairs)
     stats: dict = {}
     assign = connected_components(
         pairs.select(F.col("custkey_a").alias("src"), F.col("custkey_b").alias("dst")),
         cust.select(F.col("c_custkey").alias("id")),
         stats=stats,
     )
-    timed(times, "cc_solve", lambda: assign.write.format("noop").mode("overwrite").save())
+    timed(spark, times, "cc_solve", lambda: assign)
     times["cc_rounds"] = stats.get("iterations", -1)
     timed(
-        times,
-        "customer_identity_clusters",
-        lambda: reg["customer_identity_clusters"].fn(spark, sf_dir)
-        .write.format("noop").mode("overwrite").save(),
+        spark, times, "customer_identity_clusters",
+        lambda: reg["customer_identity_clusters"].fn(spark, sf_dir),
     )
     times["total"] = round(
         sum(v for k, v in times.items() if not k.startswith(("n_", "cc_rounds"))), 2
@@ -654,7 +291,7 @@ def run_graph_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     return times
 
 
-def run_cdc_chain(n_changes: int, n_keys: int, cpus: int) -> dict[str, float]:
+def run_cdc_chain(spec: str, cpus: int) -> dict[str, float]:
     """Drive change volume through the streaming CDC merge sink
     (round-9 verdict item 6) and measure what the docstrings claim:
 
@@ -666,22 +303,19 @@ def run_cdc_chain(n_changes: int, n_keys: int, cpus: int) -> dict[str, float]:
       changes (the doubled-key point shows the other axis);
     - time travel = one parquet read of a committed version — flat cost.
 
-    Changes are synthesized deterministically: key = (seq·2654435761)
-    mod n_keys, val derived from seq, 8 micro-batches fed as 8 files
-    each (one file = one partition in a file-source batch — the round-9
-    streaming-receipt lesson)."""
-    import tempfile
-
+    ``spec`` is ``"<n_changes>:<n_keys>"``.  Changes are synthesized
+    deterministically: key = (seq·2654435761) mod n_keys, val derived from
+    seq, 8 micro-batches fed as 8 files each (one file = one partition in
+    a file-source batch — the round-9 streaming-receipt lesson)."""
     from pyspark.sql import functions as F
 
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.streaming.windows import (
         latest_snapshot_version,
         sink_merge_upsert,
     )
 
-    spark = get_spark("scaling-curve-cdc", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    n_changes, n_keys = (int(x) for x in spec.split(":"))
+    spark = session("scaling-curve-cdc", cpus)
     times: dict[str, float] = {}
     base = tempfile.mkdtemp(prefix="cdc_curve_")
     src = os.path.join(base, "src")
@@ -759,33 +393,13 @@ def run_sa_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     distributed prefix-doubling SA build), so the exchange count must stay
     CONSTANT across scale points while rows grow 10×/decade — that pair of
     facts is the scale claim this curve pins."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.plans import plan_string
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-
     reg = load_all()
-    spark = get_spark("scaling-curve-sa", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling-curve-sa", cpus)
     times: dict[str, float] = {}
-
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
-
-    timed(times, "stage_build", lambda: stage.staged_features(spark, sf_dir).count())
+    timed(spark, times, "stage_build", lambda: stage.staged_features(spark, sf_dir))
     queries = ("sa_duplicate_length_profile", "sa_longest_duplicates", "dedup_cut_substrings")
-    for q in queries:
-        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
-    times["total"] = round(sum(times.values()), 2)
-    # untimed: output cardinalities + static-plan shuffle accounting (the
-    # exchange count must NOT grow with the corpus; rows may)
-    for q in queries:
-        df = reg[q].fn(spark, sf_dir)
-        times[f"rows_{q}"] = df.count()
-        ex = _exchange_counts(plan_string(df))
-        times[f"exchanges_{q}"] = ex["shuffle"]
-        times[f"broadcast_exchanges_{q}"] = ex["broadcast"]
-        times[f"reused_exchanges_{q}"] = ex["reused"]
-    spark.stop()
-    return times
+    # the exchange count must NOT grow with the corpus; rows may
+    return _time_queries(spark, sf_dir, {q: reg[q].fn for q in queries}, times, plans=True)
 
 
 def run_media_chain(sf_dir: str, cpus: int) -> dict[str, float]:
@@ -796,22 +410,10 @@ def run_media_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     corpus (hash pass) plus output (banded join), never all-pairs; the
     replica corpus grows media 10×/decade and constructed twin pairs
     10×/decade with it (every 4th media has a twin)."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-
     reg = load_all()
-    spark = get_spark("scaling-curve-media", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    times: dict[str, float] = {}
-
     queries = ("media_image_neardup_phash", "media_audio_neardup_fp", "media_video_neardup_phash")
-    for q in queries:
-        timed(times, q, lambda q=q: reg[q].fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
-    times["total"] = round(sum(times.values()), 2)
-    for q in queries:
-        times[f"rows_{q}"] = reg[q].fn(spark, sf_dir).count()
-    spark.stop()
-    return times
+    spark = session("scaling-curve-media", cpus)
+    return _time_queries(spark, sf_dir, {q: reg[q].fn for q in queries}, {})
 
 
 def build_skew_fact(out_dir: str, rows: int, hot_share: float = 0.4, n_keys: int = 10_000) -> str:
@@ -822,45 +424,31 @@ def build_skew_fact(out_dir: str, rows: int, hot_share: float = 0.4, n_keys: int
     order (hot iff mix(id) % 10 < 4), so every scan partition carries its
     share of the hot key and the skew pressure lands where it does in
     production: on the SHUFFLE, not the scan.  Deterministic (splitmix on
-    the row id); same content-marker early-return as ``build_sf1``."""
-    import hashlib
-    import inspect
-
+    the row id); rebuilt only when ``harness.synthesize``'s marker moves."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, f"skewfact_{rows}.parquet")
-    synth_key = ":".join((
-        hashlib.sha1(inspect.getsource(build_skew_fact).encode()).hexdigest()[:8],
-        str(rows), str(hot_share), str(n_keys),
-    ))
-    marker = os.path.join(out_dir, f".synth_key_skew_{rows}")
-    if os.path.exists(out_path) and os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == synth_key:
-                return out_path
-    ids = np.arange(rows, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        mix = ids * np.uint64(0x9E3779B97F4A7C15)
-        mix ^= mix >> np.uint64(31)
-        mix *= np.uint64(0xFF51AFD7ED558CCD)
-        mix ^= mix >> np.uint64(33)
-    hot = (mix % np.uint64(10)) < np.uint64(int(hot_share * 10))
-    k = np.where(hot, np.uint64(0), np.uint64(1) + (mix >> np.uint64(13)) % np.uint64(n_keys))
-    value = ((mix >> np.uint64(27)) % np.uint64(1000)).astype(np.float64) / 10.0
-    cols = {"k": k.astype(np.int64), "value": value}
-    # 8 payload longs (~80 B/row with key+value): the straggler cost is the
-    # BYTES the hot key drags through one reduce task — 16 B/row rows are
-    # so light that local[32] absorbs a 4M-row hot partition in noise
-    for j in range(8):
-        cols[f"p{j}"] = ((mix >> np.uint64(j)) % np.uint64(1_000_000)).astype(np.int64)
-    tbl = pa.table(cols)
-    pq.write_table(tbl, out_path, row_group_size=max(1, rows // 32))
-    with open(marker, "w") as fh:
-        fh.write(synth_key)
-    return out_path
+    def write(out_path: str) -> None:
+        ids = np.arange(rows, dtype=np.uint64)
+        with np.errstate(over="ignore"):
+            mix = ids * np.uint64(0x9E3779B97F4A7C15)
+            mix ^= mix >> np.uint64(31)
+            mix *= np.uint64(0xFF51AFD7ED558CCD)
+            mix ^= mix >> np.uint64(33)
+        hot = (mix % np.uint64(10)) < np.uint64(int(hot_share * 10))
+        k = np.where(hot, np.uint64(0), np.uint64(1) + (mix >> np.uint64(13)) % np.uint64(n_keys))
+        value = ((mix >> np.uint64(27)) % np.uint64(1000)).astype(np.float64) / 10.0
+        cols = {"k": k.astype(np.int64), "value": value}
+        # 8 payload longs (~80 B/row with key+value): the straggler cost is
+        # the BYTES the hot key drags through one reduce task — 16 B/row
+        # rows are so light that local[32] absorbs a 4M-row hot partition
+        # in noise
+        for j in range(8):
+            cols[f"p{j}"] = ((mix >> np.uint64(j)) % np.uint64(1_000_000)).astype(np.int64)
+        pq.write_table(pa.table(cols), out_path, row_group_size=max(1, rows // 32))
+
+    return synthesize(os.path.join(out_dir, f"skewfact_{rows}.parquet"), write, rows, hot_share, n_keys)
 
 
 SKEW_N_KEYS = 10_000
@@ -899,13 +487,9 @@ def run_skew_chain(fact_path: str, cpus: int) -> dict[str, float]:
         salted_sum_count,
         with_salt,
     )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import (
-        aqe_off_clone,
-        get_spark,
-    )
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import aqe_off_clone
 
-    spark = get_spark("scaling-curve-skew", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling-curve-skew", cpus)
     # simulate the non-broadcastable-dim regime on the parent; the AQE-off
     # clone re-syncs parent confs so both sessions see it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -927,29 +511,23 @@ def run_skew_chain(fact_path: str, cpus: int) -> dict[str, float]:
             (F.col("id") % 97).alias("p2"),
         )
 
-    def drain(df):
-        # consume the JOIN output without collapsing it early: a count-only
-        # sink would let the aggregate absorb the join rows map-side; the
-        # noop write materializes every joined row
-        df.write.format("noop").mode("overwrite").save()
-
     def fact(session):
         return session.read.parquet(fact_path)
 
     n = fact(spark).count()
     times["n_rows"] = n
 
-    timed(times, "join_unsalted_noaqe", lambda: drain(fact(noaqe).join(dim(noaqe), F.col("k") == F.col("dk"))))
-    timed(times, "join_salted_noaqe", lambda: drain(salted_join(fact(noaqe), dim(noaqe), "k", "dk", how="inner")))
-    timed(times, "join_aqe", lambda: drain(fact(spark).join(dim(spark), F.col("k") == F.col("dk"))))
-    timed(times, "agg_unsalted_noaqe", lambda: drain(
-        fact(noaqe).groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        )
+    # the noop sink materializes every joined row; a count-only sink would
+    # let the aggregate absorb the join rows map-side
+    timed(spark, times, "join_unsalted_noaqe", lambda: fact(noaqe).join(dim(noaqe), F.col("k") == F.col("dk")))
+    timed(spark, times, "join_salted_noaqe", lambda: salted_join(fact(noaqe), dim(noaqe), "k", "dk", how="inner"))
+    timed(spark, times, "join_aqe", lambda: fact(spark).join(dim(spark), F.col("k") == F.col("dk")))
+    timed(spark, times, "agg_unsalted_noaqe", lambda: fact(noaqe).groupBy("k").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
     ))
-    timed(times, "agg_salted_noaqe", lambda: drain(
-        salted_sum_count(fact(noaqe), ["k"], "value", count_alias="n", sum_alias="s")
+    timed(spark, times, "agg_salted_noaqe", lambda: salted_sum_count(
+        fact(noaqe), ["k"], "value", count_alias="n", sum_alias="s"
     ))
     times["total"] = round(sum(v for k_, v in times.items() if k_ != "n_rows"), 2)
 
@@ -973,237 +551,122 @@ def run_skew_chain(fact_path: str, cpus: int) -> dict[str, float]:
 
 def run_chain(sf_dir: str, cpus: int) -> dict[str, float]:
     """Time each chain stage against a fresh stage dir; return seconds."""
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
-
-    reg = load_all()
-    spark = get_spark("scaling-curve", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    times: dict[str, float] = {}
-
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import stage
-
-    timed(times, "stage_build", lambda: stage.staged_shingles(spark, sf_dir).count())
-    # neardup_minhash_lsh: the SCREEN (detail surface) is the corpus-linear
-    # leg this curve measures; the registered name is its truth-joined bound
-    # summary since round 10 and would fold the offline quadratic truth
-    # tier's build into the timing
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.dedup import (
         minhash_lsh_detail,
     )
 
-    sweep = {
+    reg = load_all()
+    spark = session("scaling-curve", cpus)
+    times: dict[str, float] = {}
+    timed(spark, times, "stage_build", lambda: stage.staged_shingles(spark, sf_dir))
+    # neardup_minhash_lsh: the SCREEN (detail surface) is the corpus-linear
+    # leg this curve measures; the registered name is its truth-joined bound
+    # summary since round 10 and would fold the offline quadratic truth
+    # tier's build into the timing.  The untimed row counts are the
+    # linearity check on the DATA side: each stage must scale ~10x per
+    # decade for the time curve to mean anything
+    fns = {
         "neardup_minhash_lsh": minhash_lsh_detail,
         "neardup_connected_components": reg["neardup_connected_components"].fn,
         "curate_pack_corpus": reg["curate_pack_corpus"].fn,
     }
-    for q, fn in sweep.items():
-        timed(times, q, lambda fn=fn: fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
-    times["total"] = round(sum(times.values()), 2)
-    # untimed: output cardinalities, the linearity check on the DATA side
-    # (each stage must scale ~10x per decade for the time curve to mean
-    # anything; stages read from the already-built stage so this is cheap)
-    for q, fn in sweep.items():
-        times[f"rows_{q}"] = fn(spark, sf_dir).count()
-    spark.stop()
-    return times
+    return _time_queries(spark, sf_dir, fns, times)
+
+
+#: ``--one-<tier> ARG``: run one point of a tier in this process and print
+#: its JSON row.  ARG is an sf dir, except for cdc ("<n_changes>:<n_keys>")
+#: and skew (the fact parquet path).
+RUNNERS = {
+    "--one": run_chain,
+    "--one-ann": run_ann_chain,
+    "--one-top": run_top_tier,
+    "--one-rank": run_rank_chain,
+    "--one-media": run_media_chain,
+    "--one-sa": run_sa_chain,
+    "--one-graph": run_graph_chain,
+    "--one-cdc": run_cdc_chain,
+    "--one-skew": run_skew_chain,
+}
+
+SF_POINTS = (("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1"), ("1", SF1_DIR))
+DEEP = (("--deep", "10", 100),)
+
+#: sweep flag -> (per-point flag, tables replicated for the sf1 point,
+#: optional (flag, sf, replicas) points past sf1).  No flag: the dedup chain.
+SWEEPS = {
+    # embedding/ANN chain: signed-rotation replicas; --deep100
+    # (1000x-of-sf0.1, 2M vectors) is past IVF_TRAIN_CAP, so that point
+    # measures the cap PLATEAU — trainer cost flat, scans growing
+    "--ann": ("--one-ann", ("embeddings",), DEEP + (("--deep100", "100", 1000),)),
+    # two-phase rank-selection tier over a replica events table
+    "--rank": ("--one-rank", ("events",), ()),
+    # perceptual media triad: payloads synthesize from doc_ids, so 10x docs
+    # = 10x media and 10x twin pairs
+    "--media": ("--one-media", ("documents",), ()),
+    # iterative-graph tier: documents feed textrank; the suffix-per-replica
+    # customers feed the identity-cluster chain (cross-replica edit
+    # distance >= 2 — no cross-replica edges)
+    "--graph": ("--one-graph", ("documents", "customer"), DEEP),
+    # suffix-array tier: reads documents only
+    "--sa": ("--one-sa", ("documents",), ()),
+    "": ("--one", ("documents",), DEEP),
+}
+
+# hot-key receipt: one key = 40% at every point (events-table decade
+# spacing)
+SKEW_ROWS = (100_000, 1_000_000, 10_000_000)
+# CDC merge-sink receipt: 10x -> 100x change volume at a fixed key
+# domain, plus a doubled-key point
+CDC_POINTS = (
+    ("20k:50k", "20000:50000"),
+    ("200k:50k", "200000:50000"),
+    ("2M:50k", "2000000:50000"),
+    ("200k:100k", "200000:100000"),
+)
 
 
 def main() -> None:
-    if "--build" in sys.argv[1:]:
-        idx = sys.argv.index("--build")
-        print(build_sf1(sys.argv[idx + 1] if len(sys.argv) > idx + 1 else SF1_DIR))
+    argv = sys.argv[1:]
+    script = os.path.abspath(__file__)
+    if "--build" in argv:
+        idx = argv.index("--build")
+        out_dir = argv[idx + 1] if len(argv) > idx + 1 else SF1_DIR
+        print(replicate(("documents",), out_dir, SRC_DIR, REPLICAS))
         return
-    if "--one" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_chain(sf_dir, cpus)}))
-        return
-    if "--one-ann" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-ann") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_ann_chain(sf_dir, cpus)}))
-        return
-    if "--one-top" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-top") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, **run_top_tier(sf_dir, cpus)}))
-        return
-    if "--one-rank" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-rank") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_rank_chain(sf_dir, cpus)}))
-        return
-    if "--one-media" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-media") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_media_chain(sf_dir, cpus)}))
-        return
-    if "--one-sa" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-sa") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_sa_chain(sf_dir, cpus)}))
-        return
-    if "--one-graph" in sys.argv[1:]:
-        sf_dir = sys.argv[sys.argv.index("--one-graph") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": sf_dir, **run_graph_chain(sf_dir, cpus)}))
-        return
-    if "--one-cdc" in sys.argv[1:]:
-        spec = sys.argv[sys.argv.index("--one-cdc") + 1]  # "<n_changes>:<n_keys>"
-        n_changes, n_keys = (int(x) for x in spec.split(":"))
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": spec, **run_cdc_chain(n_changes, n_keys, cpus)}))
-        return
-    if "--one-skew" in sys.argv[1:]:
-        fact_path = sys.argv[sys.argv.index("--one-skew") + 1]
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps({"sf_dir": fact_path, **run_skew_chain(fact_path, cpus)}))
-        return
-
-    def sweep(points, mode_flag):
-        results = []
-        for sf, sf_dir in points:
-            stage_dir = tempfile.mkdtemp(prefix="scaling_stage_")
-            env = dict(os.environ, SPARK_GRAFT_STAGE_DIR=stage_dir)
-            try:
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), mode_flag, sf_dir],
-                    env=env, capture_output=True, text=True, check=True, cwd=REPO,
-                )
-                row = json.loads(out.stdout.strip().splitlines()[-1])
-                row["sf"] = sf
-                results.append(row)
-                print(json.dumps(row))
-            finally:
-                shutil.rmtree(stage_dir, ignore_errors=True)
-        print(json.dumps(results))
-
-    if "--ann" in sys.argv[1:]:
-        # embedding/ANN chain (round-6 verdict item 7): sf0.01, sf0.1, and
-        # a synthesized 10x-of-sf0.1 point (signed-rotation replicas);
-        # --deep adds the 100x sf10 point (200k vectors, round-9 item 2)
-        build_sf1_embeddings()
-        points = [
-            ("0.01", "/root/testdata/sf0.01"),
-            ("0.1", "/root/testdata/sf0.1"),
-            ("1", SF1_DIR),
-        ]
-        if "--deep" in sys.argv[1:]:
-            build_sf1_embeddings(SF10_DIR, replicas=100)
-            points.append(("10", SF10_DIR))
-        if "--deep100" in sys.argv[1:]:
-            # 1000x-of-sf0.1 (2M vectors): past IVF_TRAIN_CAP, so this point
-            # measures the cap PLATEAU — trainer cost flat, scans growing
-            sf100 = os.path.join(REPO, ".scratch", "sf100")
-            build_sf1_embeddings(sf100, replicas=1000)
-            points.append(("100", sf100))
-        sweep(points, "--one-ann")
-        return
-    if "--core-ratio" in sys.argv[1:]:
+    for flag, run in RUNNERS.items():
+        if flag in argv:
+            arg = argv[argv.index(flag) + 1]
+            print(json.dumps({"sf_dir": arg, **run(arg, env_cpus())}))
+            return
+    if "--core-ratio" in argv:
         # round-11 verdict item 9: the top tier at sf1 on 8 AND 32 cores —
         # at sf0.1 per-query fixed overhead floors the 8-vs-32 ratio, so
         # the serialization-vs-overhead question needs the larger point.
-        # One forked run per core count; the stage dir is SHARED (content-
-        # addressed) so the second run reads a warm stage.
-        build_sf1()
-        build_sf1_embeddings()
-        build_sf1_events()
-        build_sf1_customers()
-        build_sf1_orders()
+        # The stage dir is SHARED (content-addressed) so the second run
+        # reads a warm stage.
+        replicate(tuple(REPLICA_TRANSFORMS), SF1_DIR, SRC_DIR, REPLICAS)
         stage_dir = os.path.join(REPO, ".scratch", "stage_sf1_top")
         os.makedirs(stage_dir, exist_ok=True)
-        results = []
-        for cpus in ("32", "8"):
-            env = dict(os.environ, SPARK_GRAFT_STAGE_DIR=stage_dir, SPARK_GRAFT_CPUS=cpus)
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--one-top", SF1_DIR],
-                env=env, capture_output=True, text=True, check=True, cwd=REPO,
-            )
-            row = json.loads(out.stdout.strip().splitlines()[-1])
-            results.append(row)
-            print(json.dumps(row), flush=True)
-        by = {r["cpus"]: r for r in results}
-        ratios = {
-            q: round(by[8][q] / by[32][q], 2)
-            for q in TOP_TIER
-            if by[32].get(q)
-        }
+        runs = [(["--one-top", SF1_DIR], {"SPARK_GRAFT_CPUS": c}, {}) for c in ("32", "8")]
+        by = {r["cpus"]: r for r in fork_points(script, runs, stage_dir)}
+        ratios = {q: round(by[8][q] / by[32][q], 2) for q in TOP_TIER if by[32].get(q)}
         print(json.dumps({"ratios_8_over_32": ratios}))
         return
-    if "--rank" in sys.argv[1:]:
-        # round-8 two-phase rank-selection tier over a replica events table
-        build_sf1_events()
-        sweep(
-            [("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1"), ("1", SF1_DIR)],
-            "--one-rank",
-        )
-        return
-    if "--media" in sys.argv[1:]:
-        # perceptual media triad: same replica corpus (payloads synthesize
-        # from doc_ids, so 10x docs = 10x media and 10x twin pairs)
-        build_sf1()
-        sweep(
-            [("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1"), ("1", SF1_DIR)],
-            "--one-media",
-        )
-        return
-    if "--skew" in sys.argv[1:]:
-        # hot-key receipt (round-8 verdict item 3): 100k → 1M → 10M rows,
-        # one key = 40% at every point (events-table decade spacing)
+    if "--skew" in argv:
         skew_dir = os.path.join(REPO, ".scratch", "skew")
-        pts = []
-        for rows in (100_000, 1_000_000, 10_000_000):
-            pts.append((str(rows), build_skew_fact(skew_dir, rows)))
-        sweep(pts, "--one-skew")
-        return
-    if "--cdc" in sys.argv[1:]:
-        # CDC merge-sink receipt (round-9 verdict item 6): 10x -> 100x
-        # change volume at a fixed key domain, plus a doubled-key point —
-        # "<n_changes>:<n_keys>" specs, each in its own forked run
-        sweep(
-            [
-                ("20k:50k", "20000:50000"),
-                ("200k:50k", "200000:50000"),
-                ("2M:50k", "2000000:50000"),
-                ("200k:100k", "200000:100000"),
-            ],
-            "--one-cdc",
-        )
-        return
-    if "--graph" in sys.argv[1:]:
-        # iterative-graph tier (round-9 verdict item 3): documents replicas
-        # feed textrank; the suffix-per-replica customer replicas feed the
-        # identity-cluster chain (cross-replica edit distance >= 2 — no
-        # cross-replica edges); --deep adds the 100x point
-        build_sf1()
-        build_sf1_customers()
-        points = [
-            ("0.01", "/root/testdata/sf0.01"),
-            ("0.1", "/root/testdata/sf0.1"),
-            ("1", SF1_DIR),
-        ]
-        if "--deep" in sys.argv[1:]:
-            build_sf1(SF10_DIR, replicas=100)
-            build_sf1_customers(SF10_DIR, replicas=100)
-            points.append(("10", SF10_DIR))
-        sweep(points, "--one-graph")
-        return
-    if "--sa" in sys.argv[1:]:
-        # suffix-array tier (round-7 verdict item 3): same replica corpus as
-        # the dedup chain (the tier reads documents only)
-        build_sf1()
-        sweep(
-            [("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1"), ("1", SF1_DIR)],
-            "--one-sa",
-        )
-        return
-    build_sf1()
-    points = [("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1"), ("1", SF1_DIR)]
-    if "--deep" in sys.argv[1:]:  # add the 1000x point (500k docs)
-        build_sf1(SF10_DIR, replicas=100)
-        points.append(("10", SF10_DIR))
-    sweep(points, "--one")
+        runs = [(["--one-skew", build_skew_fact(skew_dir, r)], {}, {"sf": str(r)}) for r in SKEW_ROWS]
+    elif "--cdc" in argv:
+        runs = [(["--one-cdc", spec], {}, {"sf": label}) for label, spec in CDC_POINTS]
+    else:
+        one, tables, deep = next(v for flag, v in SWEEPS.items() if flag in argv or not flag)
+        replicate(tables, SF1_DIR, SRC_DIR, REPLICAS)
+        points = list(SF_POINTS)
+        for flag, sf, replicas in deep:
+            if flag in argv:
+                out_dir = os.path.join(REPO, ".scratch", f"sf{sf}")
+                points.append((sf, replicate(tables, out_dir, SRC_DIR, replicas)))
+        runs = [([one, sf_dir], {}, {"sf": sf}) for sf, sf_dir in points]
+    print(json.dumps(fork_points(script, runs)))
 
 
 if __name__ == "__main__":

@@ -39,18 +39,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import env_cpus, fork_points, session  # noqa: E402
 
 SRC_SF_DIR = "/root/testdata/sf0.1"
 N_MICROBATCHES = 10
 FILES_PER_BATCH = 8
-ID_STRIDE = 10_000_000
 
 
 def build_traffic(out_dir: str, traffic: int, distinct: int) -> str:
@@ -96,16 +95,12 @@ def build_traffic(out_dir: str, traffic: int, distinct: int) -> str:
 
 
 def run_point(mode: str, traffic: int, distinct: int, cpus: int) -> dict:
-    from pyspark.sql import functions as F  # noqa: F401  (schema imports)
-
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.streaming.stateful import (
         exact_dedup_stream,
         minhash_dedup_stream,
     )
 
-    spark = get_spark("streaming-curve", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("streaming-curve", cpus)
     data_dir = tempfile.mkdtemp(prefix="stream_curve_data_")
     ckpt = tempfile.mkdtemp(prefix="stream_curve_ckpt_")
     try:
@@ -158,8 +153,7 @@ def main() -> None:
     if "--one" in sys.argv[1:]:
         i = sys.argv.index("--one")
         mode, traffic, distinct = sys.argv[i + 1], int(sys.argv[i + 2]), int(sys.argv[i + 3])
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps(run_point(mode, traffic, distinct, cpus)))
+        print(json.dumps(run_point(mode, traffic, distinct, env_cpus())))
         return
 
     # traffic axis: D fixed at 2000, T grows 10x then 10x again — the
@@ -175,16 +169,8 @@ def main() -> None:
         ("minhash", 2_000_000, 2_000),
         ("minhash", 200_000, 4_000),
     ]
-    results = []
-    for mode, t, d in points:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", mode, str(t), str(d)],
-            capture_output=True, text=True, check=True, cwd=REPO,
-        )
-        row = json.loads(out.stdout.strip().splitlines()[-1])
-        results.append(row)
-        print(json.dumps(row))
-    print(json.dumps(results))
+    runs = [(["--one", mode, str(t), str(d)], {}, {}) for mode, t, d in points]
+    print(json.dumps(fork_points(os.path.abspath(__file__), runs)))
 
 
 if __name__ == "__main__":

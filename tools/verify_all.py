@@ -6,7 +6,10 @@ Runs (1) the bare-session driver-contract smoke from a NEUTRAL cwd (catches
 sys.path / worker-pickling assumptions pytest can't — see
 .claude/skills/verify/SKILL.md), (2) the full DuckDB oracle replica at
 sf0.01 on a bare session, (3) the pytest suite, (4) a bench.py smoke at
-sf0.001 asserting the single-JSON-line stdout contract.  ``--fast`` skips
+sf0.001 asserting the single-JSON-line stdout contract, (5) a smoke of the
+timing tools built on ``tools/harness.py`` (``profile_query.py`` and
+``scaling_curve.py --one-sa`` at sf0.001, ``--one-top`` on a 2-replica
+point synthesized from it) asserting their output shape.  ``--fast`` skips
 (3) and (4)'s sweep cost by running bench at sf0.001 only (it already
 does) and pytest with -x.
 
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import tempfile
@@ -88,6 +92,49 @@ def main() -> None:
     assert {"metric", "value", "unit", "queries", "sf"} <= set(payload), payload.keys()
     # the headline line carries the slowest-10 preview; n_queries is the count
     print(f"   bench OK: {payload['value']}s over {payload.get('n_queries')} queries")
+
+    # 5. harness smoke at the bench smoke's scale factor: no test runs the
+    #    timing tools, so check here that they still print their documented
+    #    line shapes
+    smoke_sf = env["SPARK_GRAFT_SF_DIR"]
+    with tempfile.TemporaryDirectory() as stage_dir, tempfile.TemporaryDirectory() as point_dir:
+        env = dict(env, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_STAGE_DIR=stage_dir)
+        out = run(
+            "profile-query",
+            [sys.executable, os.path.join(REPO, "tools", "profile_query.py"), "--reps", "1",
+             "--sf-dir", smoke_sf, "median_value_by_event_type"],
+            cwd=REPO, env=env,
+        )
+        shape = r"^median_value_by_event_type +med +[\d.]+  reps \[[\d.]+\]  compiles \[\d+\]  jobs \[\d+\]$"
+        assert re.search(shape, out, flags=re.MULTILINE), out
+        out = run(
+            "scaling-sa",
+            [sys.executable, os.path.join(REPO, "tools", "scaling_curve.py"), "--one-sa", smoke_sf],
+            cwd=REPO, env=env,
+        )
+        row = json.loads(out.strip().splitlines()[-1])
+        queries = ("sa_duplicate_length_profile", "sa_longest_duplicates", "dedup_cut_substrings")
+        per_query = ("rows", "exchanges", "broadcast_exchanges", "reused_exchanges")
+        expected = {"sf_dir", "stage_build", "total", *queries}
+        expected |= {f"{p}_{q}" for p in per_query for q in queries}
+        assert set(row) == expected, sorted(set(row) ^ expected)
+        # --one-top warms every table, so run it on a synthesized point
+        # (2 replicas of the smoke sf): a replica dir must be a complete
+        # sf dir
+        sys.path.insert(0, REPO)
+        from tools.harness import REPLICA_TRANSFORMS, replicate
+        from tools.scaling_curve import TOP_TIER
+
+        point = replicate(tuple(REPLICA_TRANSFORMS), point_dir, smoke_sf, 2)
+        out = run(
+            "scaling-top",
+            [sys.executable, os.path.join(REPO, "tools", "scaling_curve.py"), "--one-top", point],
+            cwd=REPO, env=env,
+        )
+        top = json.loads(out.strip().splitlines()[-1])
+        expected = {"sf_dir", "cpus", "stage_build", "total", *TOP_TIER}
+        assert set(top) == expected, sorted(set(top) ^ expected)
+        print(f"   harness tools OK: sa total {row['total']}s, top-tier total {top['total']}s")
 
     print("ALL SURFACES GREEN")
 
