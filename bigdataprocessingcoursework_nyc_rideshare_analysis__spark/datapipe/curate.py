@@ -32,7 +32,7 @@ from ..functions.skew import global_running_sum, keyed_row_number, keyed_running
 from ..functions.text import normalize_text, tokens_col
 from ..registry import register
 from ..sources import load_table
-from .textstats import BPE_PATTERN, LANG_MARKERS
+from .textstats import BPE_PATTERN, LANG_MARKERS, _lang_score_sql
 
 TARGET_LANG = "en"
 MIN_TOKENS = 20
@@ -118,11 +118,6 @@ def prepare_training_corpus(
     return manifest_from_features(
         featurize_documents(docs), target_lang, min_tokens, max_tokens
     ).select("doc_id", "lang", "predicted_lang", "fingerprint", "n_tokens", "n_bpe_tokens")
-
-
-def _lang_score_sql(lang: str) -> str:
-    markers = list(LANG_MARKERS[lang])
-    return f"CAST(len(list_intersect(list_distinct(toks), {markers!r})) AS INTEGER)"
 
 
 _CURATE_ORACLE = f"""
@@ -920,7 +915,7 @@ def q_pack_bestfit_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the golden rows and the pure-Python FFD replica.
 
     Plan: the detail's scan + packing pass runs once for its readout
-    (|sources|-row output, localCheckpointed) and this function's pass
+    (|sources|-row output, broadcast into the final join) and this function's pass
     runs once for the per-bin booleans — two corpus passes by design,
     the price of keeping the two code paths independent enough to check
     each other."""
@@ -929,7 +924,6 @@ def q_pack_bestfit_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     detail = (
         pack_bestfit_efficiency_detail(spark, sf_dir)
         .select("source", F.col("padding_tokens").alias("detail_padding"))
-        .localCheckpoint(eager=True)  # |sources| rows
     )
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(

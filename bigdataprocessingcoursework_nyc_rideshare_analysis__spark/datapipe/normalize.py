@@ -193,16 +193,15 @@ def q_quantile_normalized_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(
         F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " "
     )
-    from ..functions.cachectl import query_scoped_persist
-
-    scored = query_scoped_persist(docs.select(
+    scored = docs.select(
         "doc_id",
         "source",
         (F.col("n_chars").cast("double") / F.size(toks)).alias("score"),
-    ))  # feeds the rank chain AND the per-score histogram (+ its
-    # 1-row total): without the pin the tokenize pass re-runs per consumer
-    # (r12; |docs|-sized narrow cache, released by the harness's clearCache)
-    # per-source frame size rides out of the helper (count_alias) — the old
+    )
+    # scored feeds the rank chain AND the per-score histogram (+ its 1-row
+    # total); each consumer re-runs the narrow tokenize pass, which is
+    # cheaper than pinning it.  The per-source frame size rides out of the
+    # helper (count_alias) — the old
     # broadcast per_src join was a third tokenize pass (r12)
     ranked = keyed_row_number(
         scored, ["source"], ["score", "doc_id"], "i", count_alias="ns"

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles_col
 from ..sources import load_table
-from ..sources.tables import read_parquet
+from ..sources.tables import file_version, read_parquet
 
 #: bump to invalidate every staged frame after a change to staged schemas
 #: or to the tokenization/shingling expressions they bake in
@@ -61,19 +61,10 @@ def stage_root() -> str:
 
 
 def _source_key(sf_dir: str, table: str = "documents") -> str:
-    """Content key for one source table: abs path + file size(s) + mtime(s),
+    """Content key for one source table (``sources.tables.file_version``),
     so a regenerated source file maps to a fresh stage directory."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    parts = [os.path.abspath(path), f"v{STAGE_VERSION}"]
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for fname in sorted(files):
-                st = os.stat(os.path.join(root, fname))
-                parts.append(f"{fname}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(path)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()[:16]
+    version = file_version(os.path.join(sf_dir, f"{table}.parquet"))
+    return hashlib.sha1(f"v{STAGE_VERSION}|{version!r}".encode()).hexdigest()[:16]
 
 
 def _fn_version(fn) -> str:

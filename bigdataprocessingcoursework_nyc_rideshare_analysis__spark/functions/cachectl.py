@@ -1,64 +1,14 @@
-"""Query-scoped cache registry: track helper-internal ``persist()`` pins so
-embedded consumers can release them deterministically.
-
-A few operators pin a multiply-consumed subtree with ``persist()`` INSIDE
-the query body (the session-span / basket aggregates, the converted-click
-frame, the thrice-consumed score frame in ``datapipe.normalize``).  These
-pins only avoid recomputation: every branch of those plans is a
-deterministic function of its input, so no result depends on a pin being
-alive, and releasing one before the consumer's action just re-executes the
-subtree per branch.  They are not unpersisted inside the query because the
-query returns a LAZY frame — the pin has to outlive the consumer's action
-to save anything.
-
-Ownership contract (round-12, VERDICT r11 item 7):
-
-- The bench harness and the verification driver run ``clearCache()``
-  between queries — they never accumulate these blocks.
-- A library consumer composing several queries in one session calls
-  ``release_query_caches(spark)`` once the results of the previous query
-  are materialized (or ``spark.catalog.clearCache()`` if it owns no other
-  cached data).  ``tests/test_session.py`` pins that a two-query session
-  holds zero cached blocks after release.
-
-The registry keeps STRONG references until release: a weakly-referenced
-frame could be collected while its blocks stay in the cache manager, which
-would leak exactly the blocks this module exists to free.
-"""
+"""Query bodies do not pin caches; ``release_query_caches`` is what is left
+of the old query-scoped pin registry."""
 
 from __future__ import annotations
 
-import weakref
-
-from pyspark.sql import DataFrame, SparkSession
-
-#: per-session list of query-scoped persisted frames (session weakly keyed:
-#: a stopped/collected session drops its whole entry)
-_REGISTRY: "weakref.WeakKeyDictionary[SparkSession, list[DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def query_scoped_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + register the frame for ``release_query_caches``."""
-    df = df.persist()
-    try:
-        _REGISTRY.setdefault(df.sparkSession, []).append(df)
-    except TypeError:
-        pass  # non-weakref-able session shim: pin still works, release via clearCache
-    return df
+from pyspark.sql import SparkSession
 
 
 def release_query_caches(spark: SparkSession) -> int:
-    """Unpersist every query-scoped frame registered on ``spark``; returns
-    the number of frames released.  Blocking=False: eviction is async, the
-    blocks are dereferenced immediately."""
-    frames = _REGISTRY.pop(spark, [])
-    released = 0
-    for df in frames:
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:
-            pass  # session shutting down mid-release: nothing to free
-    return released
+    """Release the query-scoped caches on ``spark``: always 0, because no
+    query body persists anything any more.  Kept so that existing callers
+    (the benchmark runner imports it) keep working; a consumer that caches
+    its own frames releases them with ``spark.catalog.clearCache()``."""
+    return 0

@@ -1070,17 +1070,8 @@ def q_basket_part_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 counts rounded to 9 dp, so both engines agree bitwise.
     The final top-K is a TakeOrderedAndProject, not a global sort."""
     li = load_table(spark, sf_dir, "lineitem")
-    # persist(): the basket frame feeds THREE aggregates (total count, per-
-    # item counts, pair counts) and without the pin the orderkey shuffle +
-    # collect_set over the lineitem fact re-executes once per consumer
-    # (measured: the scan+groupBy subtree planned 3× at sf0.1; exchange
-    # reuse across the differing parent aggregates is not guaranteed).
-    # Lazy, LRU-evicted, cleared by the harness between queries.
-    from ..functions.cachectl import query_scoped_persist
-
-    baskets = query_scoped_persist(
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
+    baskets = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("baskets"))
     item_counts = (

@@ -768,14 +768,10 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by ranges of (latency, user_id), so no task ever holds more
     than its share of converted users; the frame size comes from a
     broadcast 1-row count."""
-    from ..functions.cachectl import query_scoped_persist
     from ..functions.skew import global_row_number
 
     ev = load_table(spark, sf_dir, "events")
-    # |clickers|-sized aggregate consumed THREE times (purchase funnel
-    # join, latency join, n_clickers denominator) — without the pin the
-    # click scan+agg re-executes per consumer (r12)
-    clicks = query_scoped_persist(
+    clicks = (
         ev.filter(F.col("event_type") == "click")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_click"))
@@ -994,15 +990,7 @@ def q_session_overlap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour ≈ the 30-min-gap session scale.  The histogram tail is bounded by
     peak concurrency, so the final aggregate is tiny."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    # persist(): the spans aggregate (|sessions|-sized) feeds THREE legs —
-    # both sides of the binned self-join and the final left join back — and
-    # without the pin the sessionize windows over the events fact re-execute
-    # once per leg (measured: the scan+sessionize subtree planned 3× at
-    # sf0.1).  Lazy, so plan construction stays job-free; blocks are
-    # LRU-evicted / cleared by the harness between queries.
-    from ..functions.cachectl import query_scoped_persist
-
-    spans = query_scoped_persist(
+    spans = (
         sessionize(ev, "user_id", "ts", SESSION_GAP_MIN)
         .groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
@@ -1014,20 +1002,26 @@ def interval_overlap_histogram(spans: DataFrame) -> DataFrame:
     """Core of ``session_overlap_histogram``, factored over an arbitrary
     interval table (user_id, session_id, s, e) so the bin-ownership
     exactly-once invariant is property-testable on generated intervals
-    (``tests/test_properties.py``), independent of sessionization."""
+    (``tests/test_properties.py``), independent of sessionization.
+
+    ``spans`` is read once: ``explode_outer`` keeps a session whose span
+    is NULL (one NULL bin), the LEFT self-join keeps every session's bins,
+    and ``count(b.user_id)`` counts only real partners — so sessions that
+    overlap nothing, NULL spans included, land in bucket 0 with no join
+    back to ``spans``."""
     binned = spans.select(
         "user_id",
         "session_id",
         "s",
         "e",
-        F.explode(
+        F.explode_outer(
             F.sequence(
                 F.date_trunc("hour", "s"), F.date_trunc("hour", "e"), F.expr("interval 1 hour")
             )
         ).alias("bin"),
     )
     a, b = binned.alias("a"), binned.alias("b")
-    partner = (
+    return (
         a.join(
             b,
             (F.col("a.bin") == F.col("b.bin"))
@@ -1038,13 +1032,10 @@ def interval_overlap_histogram(spans: DataFrame) -> DataFrame:
                 | (F.col("a.session_id") != F.col("b.session_id"))
             )
             & (F.col("a.bin") == F.date_trunc("hour", F.greatest(F.col("a.s"), F.col("b.s")))),
+            "left",
         )
-        .groupBy(F.col("a.user_id").alias("user_id"), F.col("a.session_id").alias("session_id"))
-        .agg(F.count(F.lit(1)).alias("n_overlapping"))
-    )
-    return (
-        spans.join(partner, ["user_id", "session_id"], "left")
-        .select(F.coalesce(F.col("n_overlapping"), F.lit(0).cast("long")).alias("n_overlapping"))
+        .groupBy("a.user_id", "a.session_id")
+        .agg(F.count("b.user_id").alias("n_overlapping"))
         .groupBy("n_overlapping")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
     )

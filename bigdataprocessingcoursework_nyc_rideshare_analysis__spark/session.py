@@ -13,14 +13,9 @@ design point:
   driver's ``events`` table) are readable; ``sources.tables`` converts them
   to proper timestamps.
 
-Cache ownership contract: some query bodies pin multiply-consumed subtrees
-with a query-scoped ``persist()`` to avoid recomputing them; no result
-depends on a pin being alive (see ``functions.cachectl``).  The bench
-harness and the verification driver clear these between queries
-(``clearCache``); a consumer composing several queries in ONE session
-should call ``functions.cachectl.release_query_caches(spark)`` after
-materializing each query's results, or the pinned blocks accumulate until
-LRU eviction.
+Caching rule: query bodies do not persist.  A subtree with several
+consumers is recomputed or shared through exchange reuse; an iterative
+loop persists its frame and unpersists it inside the same call.
 """
 
 from __future__ import annotations

@@ -61,10 +61,13 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _file_version(path: str) -> tuple:
-    """(name, size, st_mtime_ns) of the file at ``path``; for a directory,
-    of its ``_SUCCESS`` commit marker (rewritten by every committed Spark
-    write) or, without one, of every file under it."""
+def file_version(path: str) -> tuple:
+    """(abs path, size, st_mtime_ns) of the file at ``path``; for a
+    directory, of its ``_SUCCESS`` commit marker (rewritten by every
+    committed Spark write) or, without one, of every file under it.  The
+    one file-identity rule: the schema memo, the stage keys and the
+    warehouse markers all change exactly when this does."""
+    path = os.path.abspath(path)
     if os.path.isdir(path):
         stamp = os.path.join(path, "_SUCCESS")
         files = [stamp] if os.path.exists(stamp) else sorted(
@@ -87,7 +90,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     inferred type (the ``events.ts`` normalization) always see the file's
     real type."""
     key = os.path.abspath(path)
-    version = (_file_version(key), *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    version = (file_version(key), *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
     hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == version:
         return spark.read.schema(hit[1]).parquet(path)

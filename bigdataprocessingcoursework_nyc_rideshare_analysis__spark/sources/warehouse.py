@@ -27,7 +27,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import load_table
+from .tables import file_version, load_table
 from .sinks import write_bucketed_table
 
 #: (table, bucket key) — the two sides of the fact×fact edge
@@ -50,22 +50,15 @@ MARKER_NAME = "_BDPC_WAREHOUSE_MARKER.json"
 
 
 def _source_key(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """Content key of the warehouse's source parquet: abs path + size +
-    mtime per file — the same invalidation rule as ``datapipe.stage``, so
-    regenerated testdata rebuilds and an unchanged source reuses."""
-    parts = [f"wh1:{os.path.abspath(sf_dir)}"]
+    """Content key of the warehouse's source parquet
+    (``sources.tables.file_version``, the same rule as ``datapipe.stage``),
+    so regenerated testdata rebuilds and an unchanged source reuses; a
+    missing source keys as absent."""
+    versions = []
     for tbl in tables:
-        path = os.path.join(sf_dir, f"{tbl}.parquet")
-        if os.path.isdir(path):
-            for fname in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, fname))
-                parts.append(f"{tbl}/{fname}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(path):
-            st = os.stat(path)
-            parts.append(f"{tbl}:{st.st_size}:{st.st_mtime_ns}")
-        else:
-            parts.append(f"{tbl}:absent")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
+        path = os.path.abspath(os.path.join(sf_dir, f"{tbl}.parquet"))
+        versions.append(file_version(path) if os.path.exists(path) else (path, "absent"))
+    return hashlib.md5(f"wh1|{versions!r}".encode()).hexdigest()
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:

@@ -61,3 +61,33 @@ def test_rows_only_queries_run(spark, name):
     spec = REGISTRY[name]
     df = spec.fn(spark, SF_SMOKE)
     assert df.count() >= 0
+
+
+def test_session_overlap_histogram_matches_oracle_with_null_ts(spark, tmp_path):
+    """Events whose ts is NULL each form a session with a NULL span, which
+    overlaps nothing and must still land in bucket 0.  Today's oracle data
+    has no NULL ts, so a rewrite that drops NULL spans (an inner self-join
+    counting the self-pair) would pass test_oracle_parity; this fixture
+    nulls ts where event_id % 7 = 0 and links every other table."""
+    for name in TABLE_NAMES:
+        if name != "events":
+            (tmp_path / f"{name}.parquet").symlink_to(f"{SF_SMOKE}/{name}.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * REPLACE (CASE WHEN event_id % 7 = 0 THEN NULL ELSE ts END AS ts) "
+        f"FROM read_parquet('{SF_SMOKE}/events.parquet')) "
+        f"TO '{tmp_path}/events.parquet' (FORMAT PARQUET)"
+    )
+    for name in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{tmp_path}/{name}.parquet')"
+        )
+    assert con.execute("SELECT count(*) FROM events WHERE ts IS NULL").fetchone()[0] > 0
+    spec = REGISTRY["session_overlap_histogram"]
+    sdf = spec.fn(spark, str(tmp_path))
+    rel = con.execute(spec.oracle)
+    ocols = [d[0] for d in rel.description]
+    assert _normalize([tuple(r) for r in sdf.collect()], sdf.columns) == _normalize(
+        rel.fetchall(), ocols
+    )
+    con.close()

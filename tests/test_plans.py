@@ -436,23 +436,18 @@ def test_rank_helpers_stay_exact_with_query_caches_released(spark):
     (per-partition totals and the offset join-back), and both must label
     every row with the same partition id.  That id is a pure function of
     the row (its count of hash-sampled bounds below it), so the result
-    must not depend on any cache pin: build customer_rfm_segments, release
-    every query-scoped cache BEFORE the action (the embedded-consumer
-    contract in functions.cachectl), and the output must still equal the
+    must not depend on any cache pin: build customer_rfm_segments, clear
+    every cache BEFORE the action, and the output must still equal the
     DuckDB oracle — with no cached relation and no range exchange left in
     the executed plan."""
     import os
 
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.functions.cachectl import (
-        release_query_caches,
-    )
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
     from tools.check_oracle import duck_connection, normalize
 
     sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
     spec = load_all()["customer_rfm_segments"]
     df = spec.fn(spark, sf)
-    release_query_caches(spark)
     spark.catalog.clearCache()
     rows = [tuple(r) for r in df.collect()]
     oracle = duck_connection(sf).execute(spec.oracle)

@@ -450,7 +450,9 @@ _INTERVAL = st.tuples(
 )
 
 
-@given(ivs=st.lists(_INTERVAL, min_size=1, max_size=10))
+# None = a NULL span (a session whose events all have a NULL ts): it
+# overlaps nothing, is overlapped by nothing, and still lands in bucket 0
+@given(ivs=st.lists(st.one_of(st.none(), _INTERVAL), min_size=1, max_size=10))
 @SETTINGS
 def test_interval_overlap_histogram_matches_brute_force(spark, ivs):
     from datetime import datetime, timedelta
@@ -461,15 +463,22 @@ def test_interval_overlap_histogram_matches_brute_force(spark, ivs):
 
     base = datetime(2026, 3, 1)
     spans = []
-    for i, (h, m, dh, dm) in enumerate(ivs):
+    for i, iv in enumerate(ivs):
+        if iv is None:
+            spans.append((i, 0, None, None))
+            continue
+        h, m, dh, dm = iv
         s = base + timedelta(hours=h, minutes=m)
         spans.append((i, 0, s, s + timedelta(hours=dh, minutes=dm)))
     df = spark.createDataFrame(spans, "user_id long, session_id long, s timestamp, e timestamp")
     got = {
         r.n_overlapping: r.n_sessions for r in interval_overlap_histogram(df).collect()
     }
+    real = [(i, s, e) for i, (_, _, s, e) in enumerate(spans) if s is not None]
     counts = [
-        sum(1 for j, (_, _, s2, e2) in enumerate(spans) if i != j and s1 <= e2 and s2 <= e1)
+        sum(1 for j, s2, e2 in real if i != j and s1 <= e2 and s2 <= e1)
+        if s1 is not None
+        else 0
         for i, (_, _, s1, e1) in enumerate(spans)
     ]
     want: dict[int, int] = {}

@@ -60,6 +60,23 @@ def test_stage_key_tracks_source_identity(tmp_path):
     assert k1 != k2
 
 
+def test_warehouse_key_tracks_source_presence_and_identity(tmp_path):
+    """The warehouse marker key follows the same file-identity rule as the
+    stage key, and a missing source keys differently from a present one."""
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
+        _source_key as warehouse_key,
+    )
+
+    absent = warehouse_key(str(tmp_path), ("orders",))
+    src = tmp_path / "orders.parquet"
+    src.write_bytes(b"x" * 16)
+    present = warehouse_key(str(tmp_path), ("orders",))
+    os.utime(src, ns=(1, 1))
+    touched = warehouse_key(str(tmp_path), ("orders",))
+    assert len({absent, present, touched}) == 3
+    assert warehouse_key(str(tmp_path), ("orders",)) == touched
+
+
 def test_staged_ann_panels_equal_direct_probes(spark):
     """Each staged ANN panel (what the recall monitor reads) must be
     byte-identical to running its index probe directly — the stage is a

@@ -2,7 +2,9 @@
 
 Runs every registered query on Spark and (where present) its oracle SQL on
 DuckDB over the same parquet tables, then compares row count, column names,
-and an order-insensitive value comparison.  Run before every commit:
+and an order-insensitive value comparison.  A query that leaves a cached
+relation behind fails too: query bodies must not persist.  Run before
+every commit:
 
     python tools/check_oracle.py [sf_dir] [name ...]
     python tools/check_oracle.py --bare [sf_dir] [name ...]
@@ -100,6 +102,17 @@ def compare(name: str, spark, con, sf_dir: str, spec) -> str:
     return "OK" if not problems else "FAIL " + "; ".join(problems)
 
 
+def _cached_relations(spark) -> int:
+    """Number of relations left in the session's cache manager.  Query
+    bodies must not persist, so ``main`` fails a query that leaves any."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    if cm.isEmpty():
+        return 0
+    field = cm.getClass().getDeclaredField("cachedData")  # no public size
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
 def _bare_session():
     """A session shaped like the verification driver's: no engine confs."""
     from pyspark.sql import SparkSession
@@ -132,6 +145,10 @@ def main() -> int:
             status = compare(name, spark, con, sf_dir, spec)
         except Exception as e:  # noqa: BLE001
             status = f"ERROR {type(e).__name__}: {str(e)[:300]}"
+        pinned = _cached_relations(spark)
+        if pinned:
+            status = f"FAIL left {pinned} cached relation(s) ({status})"
+            spark.catalog.clearCache()  # so the next query starts clean
         print(f"{name:40s} {status}")
         if status.startswith(("FAIL", "ERROR")):
             failed.append(name)

@@ -157,9 +157,9 @@ def timed_run(spark, name: str, build) -> float:
     start = time.perf_counter()
     _sink(build())
     seconds = time.perf_counter() - start
-    # some queries persist() reused subplans (documented per-query); drop
-    # those blocks between measurements so no query's timing inherits the
-    # previous queries' executor-memory pressure
+    # query bodies do not persist, but a caller-built frame may have been
+    # cached (e.g. build_enriched_view(cache=True)); drop those blocks so no
+    # query's timing inherits the previous queries' executor-memory pressure
     spark.catalog.clearCache()
     # ... and return the heap to a common baseline OUTSIDE the timed
     # window: 250+ queries in one JVM accumulate garbage, and a query that
