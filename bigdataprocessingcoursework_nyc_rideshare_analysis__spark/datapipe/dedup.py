@@ -320,44 +320,29 @@ def q_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the screen (the measured leg) is corpus-linear as before; the
     truth side reads ``staged_jaccard_pairs`` (the detection output its
-    graph consumers already share) — pair-set-sized joins and one 1-row
-    aggregate after that."""
+    graph consumers already share) — one pair-set-sized FULL OUTER join
+    and one 1-row aggregate after that."""
     from .stage import staged_jaccard_pairs
 
-    # Pair-set-sized rows, but the PLAN is the corpus-sized screen — and it
-    # feeds TWO legs (recall join + false-positive anti-join).  Exchange
-    # reuse is not guaranteed across those shapes, so without pinning, the
-    # screen executes once per leg (the r10 driver bench measured exactly
-    # that on the textrank sibling).  localCheckpoint = one execution.
-    found = (
-        minhash_lsh_detail(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    # One FULL OUTER join reads the screen once, inside one plan: its rows
+    # are the matched pairs, the truth-only pairs and the found-only pairs
+    # (the false positives), each counted by its side's marker.  COUNT of
+    # a CASE is 0 over an empty pair set, never NULL (the oracle emits
+    # 0 / TRUE there).
+    found = minhash_lsh_detail(spark, sf_dir).select("doc_a", "doc_b", F.lit(True).alias("in_found"))
+    truth = staged_jaccard_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b", "jaccard", F.lit(True).alias("in_truth")
     )
-    truth = staged_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
-    hit = F.col("found").isNotNull()
+    hit = F.col("in_truth") & F.col("in_found")
     strong = F.col("jaccard") >= STRONG_JACCARD
-    # coalesce each SUM: over an empty truth frame they are NULL, and
-    # NULL == NULL would poison the booleans (the oracle emits 0 / TRUE)
-    stats = (
-        truth.join(found.withColumn("found", F.lit(True)), ["doc_a", "doc_b"], "left")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_true_pairs"),
-            F.coalesce(F.sum(F.when(strong, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("n_strong_true_pairs"),
-            F.coalesce(F.sum(F.when(strong & hit, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("n_strong_found"),
-            F.coalesce(F.sum(F.when(hit, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("n_found_true"),
-        )
+    stats = truth.join(found, ["doc_a", "doc_b"], "full").agg(
+        F.count("in_truth").alias("n_true_pairs"),
+        F.count(F.when(strong, 1)).alias("n_strong_true_pairs"),
+        F.count(F.when(strong & hit, 1)).alias("n_strong_found"),
+        F.count(F.when(hit, 1)).alias("n_found_true"),
+        F.count(F.when(F.col("in_truth").isNull(), 1)).alias("n_false_positives"),
     )
-    fp = found.join(truth.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti").agg(
-        F.count(F.lit(1)).cast("long").alias("n_false_positives")
-    )
-    return stats.crossJoin(F.broadcast(fp)).select(
+    return stats.select(
         "n_true_pairs",
         "n_strong_true_pairs",
         (F.col("n_false_positives") == 0).alias("found_subset_of_truth"),
@@ -601,40 +586,25 @@ def q_neardup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the screen stays corpus-linear (signatures + bounded-bucket
     GEMMs); the truth side reads ``staged_embedding_pairs`` (the offline
     all-pairs table, staged exactly like the text tier's
-    ``staged_jaccard_pairs``); everything after is pair-set-sized."""
+    ``staged_jaccard_pairs``); one pair-set-sized FULL OUTER join and one
+    1-row aggregate after that."""
     from .stage import staged_embedding_pairs
 
-    # localCheckpoint: `found` feeds both the recall join and the
-    # false-positive anti-join — pin ONE execution of the LSH screen
-    # (see q_neardup_minhash).  Pair-set-sized, so the pin is free.
-    found = embedding_lsh_detail(spark, sf_dir).localCheckpoint(eager=True)
-    truth = staged_embedding_pairs(spark, sf_dir)
-    hit = F.col("found_sim").isNotNull()
-    # coalesce each SUM: NULL over an empty truth frame would poison the
-    # booleans (the oracle emits 0 / TRUE on an empty pair set)
-    stats = (
-        truth.join(
-            found.select("vec_a", "vec_b", F.col("cos_sim").alias("found_sim")),
-            ["vec_a", "vec_b"],
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_true_pairs"),
-            F.coalesce(F.sum(F.when(hit, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("n_found_true"),
-            F.coalesce(
-                F.sum(F.when(hit & (F.col("found_sim") != F.col("cos_sim")), 1).otherwise(0)),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_sim_mismatch"),
-        )
+    # One FULL OUTER join reads the screen once (see q_neardup_minhash).
+    found = embedding_lsh_detail(spark, sf_dir).select(
+        "vec_a", "vec_b", F.col("cos_sim").alias("found_sim"), F.lit(True).alias("in_found")
     )
-    fp = found.join(truth.select("vec_a", "vec_b"), ["vec_a", "vec_b"], "left_anti").agg(
-        F.count(F.lit(1)).cast("long").alias("n_false_positives")
+    truth = staged_embedding_pairs(spark, sf_dir).select(
+        "vec_a", "vec_b", "cos_sim", F.lit(True).alias("in_truth")
     )
-    return stats.crossJoin(F.broadcast(fp)).select(
+    hit = F.col("in_truth") & F.col("in_found")
+    stats = truth.join(found, ["vec_a", "vec_b"], "full").agg(
+        F.count("in_truth").alias("n_true_pairs"),
+        F.count(F.when(hit, 1)).alias("n_found_true"),
+        F.count(F.when(hit & (F.col("found_sim") != F.col("cos_sim")), 1)).alias("n_sim_mismatch"),
+        F.count(F.when(F.col("in_truth").isNull(), 1)).alias("n_false_positives"),
+    )
+    return stats.select(
         "n_true_pairs",
         (F.col("n_false_positives") == 0).alias("found_subset_of_truth"),
         (F.col("n_sim_mismatch") == 0).alias("sims_match_truth"),
@@ -780,37 +750,22 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the screen is unchanged (banded join over 64-bit fingerprints);
     the identical-pair truth is the ``staged_jaccard_pairs`` table
-    filtered to jaccard = 1.0 — pair-set-sized joins after that."""
+    filtered to jaccard = 1.0 — one pair-set-sized FULL OUTER join and one
+    1-row aggregate after that."""
     from .stage import staged_jaccard_pairs
 
-    # localCheckpoint: `found` feeds both the hamming-0 join and the
-    # over-threshold leg — pin ONE execution of the banded screen
-    # (see q_neardup_minhash).  Pair-set-sized, so the pin is free.
-    found = dedup_simhash_detail(spark, sf_dir).localCheckpoint(eager=True)
-    identical = staged_jaccard_pairs(spark, sf_dir).filter(
-        F.col("jaccard") >= 1.0
-    ).select("doc_a", "doc_b")
-    hit0 = F.col("hamming").isNotNull() & (F.col("hamming") == 0)
-    stats = (
-        identical.join(found, ["doc_a", "doc_b"], "left")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_identical_pairs"),
-            # coalesce: SUM over the empty frame (no identical pairs in the
-            # corpus) is NULL, and NULL == 0 would poison the boolean
-            F.coalesce(F.sum(F.when(hit0, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("n_found_h0"),
-        )
+    # One FULL OUTER join reads the screen once (see q_neardup_minhash);
+    # hamming is NULL exactly on the identical pairs the screen missed.
+    found = dedup_simhash_detail(spark, sf_dir)
+    identical = staged_jaccard_pairs(spark, sf_dir).filter(F.col("jaccard") >= 1.0).select(
+        "doc_a", "doc_b", F.lit(True).alias("in_truth")
     )
-    over = found.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("hamming") > SIMHASH_MAX_HAMMING, 1).otherwise(0)),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_over_threshold")
+    stats = identical.join(found, ["doc_a", "doc_b"], "full").agg(
+        F.count("in_truth").alias("n_identical_pairs"),
+        F.count(F.when(F.col("in_truth") & (F.col("hamming") == 0), 1)).alias("n_found_h0"),
+        F.count(F.when(F.col("hamming") > SIMHASH_MAX_HAMMING, 1)).alias("n_over_threshold"),
     )
-    return stats.crossJoin(F.broadcast(over)).select(
+    return stats.select(
         "n_identical_pairs",
         (F.col("n_found_h0") == F.col("n_identical_pairs")).alias("identical_pairs_found_h0"),
         (F.col("n_over_threshold") == 0).alias("all_pairs_within_threshold"),

@@ -181,12 +181,10 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = staged_features(spark, sf_dir)
     dt = doc_term_pairs(docs)
     # localCheckpoint: `edges` (≤ |vocab|²/2 rows) feeds pagerank's
-    # driver-side collect AND the node-universe leg.  Without the pin the
-    # corpus containment pass — the only corpus-sized work here —
-    # re-executes once per leg (measured: 12.7 s vs the 5.5 s single-pass
-    # detail in the r10 driver bench).  `top` needs no pin since round
-    # 11: pagerank returns a LocalRelation, so both its consumers re-run
-    # only a 50-row local sort.
+    # build-time collect AND the node-universe leg, so without the pin the
+    # corpus containment pass runs twice (A/B: 12 → 15 jobs per run, slower
+    # at sf0.01 and sf0.1).  `top` needs no pin: pagerank returns a
+    # LocalRelation, so both its consumers re-run only a 50-row local sort.
     edges = cooccurrence_edges(dt).localCheckpoint(eager=True)
     top = (
         pagerank(edges)

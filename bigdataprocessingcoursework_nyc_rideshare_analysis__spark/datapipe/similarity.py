@@ -1418,50 +1418,44 @@ def ann_bound_summary(spark: SparkSession, sf_dir: str, method: str) -> DataFram
     Plan: the probe (the measured leg) is the tier's own index scan; the
     truth side reads ``staged_ann_exact_topk`` (the once-per-snapshot
     offline table every recall consumer joins); everything after is
-    query-panel-sized (joins and aggregates over {N_QUERIES} rows).  The
-    mean accumulates per-query recalls as DECIMAL(14,12) casts — exact and
-    order-free — so the boolean cannot flap on partial-aggregation order."""
+    query-panel-sized (one FULL OUTER join, one per-query aggregate and
+    one whole-panel window over {N_QUERIES} rows).  The mean accumulates
+    per-query recalls as DECIMAL(14,12) casts — exact and order-free — so
+    the boolean cannot flap on partial-aggregation order."""
     from .stage import staged_ann_exact_topk
 
-    # localCheckpoint: the probe panel feeds TWO legs (n_results + hits
-    # join) and its plan is the full index scan — without the pin the
-    # index probe executes once per leg (exchange reuse is not guaranteed
-    # across the shapes).  Panel-sized ({N_QUERIES}×k rows), so free.
-    probe = (
-        dict(ANN_METHODS)[method](spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+    # One FULL OUTER join reads the probe once, inside one plan: per query
+    # its rows are the hits, the missed truth neighbours and the probe's
+    # non-neighbours, each counted by its side's marker.  Truth's query
+    # universe is the queries with a truth row.
+    probe = dict(ANN_METHODS)[method](spark, sf_dir).select(
+        "query_id", "neighbor_id", F.lit(True).alias("in_probe")
     )
-    truth = staged_ann_exact_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    n_true = truth.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-    n_res = probe.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_results"))
-    hits = (
-        probe.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+    truth = staged_ann_exact_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.lit(True).alias("in_truth")
     )
     per_q = (
-        n_true.join(n_res, "query_id", "left")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_results", F.lit(0).cast("long")).alias("n_results"),
-            "n_true",
-            (F.coalesce("n_hits", F.lit(0)).cast("double") / F.col("n_true")).alias("recall"),
+        truth.join(probe, ["query_id", "neighbor_id"], "full")
+        .groupBy("query_id")
+        .agg(
+            F.count("in_probe").alias("n_results"),
+            F.count("in_truth").alias("n_true"),
+            F.count(F.when(F.col("in_truth") & F.col("in_probe"), 1)).alias("n_hits"),
         )
+        .filter(F.col("n_true") > 0)
     )
-    mean = per_q.agg(
-        (
-            F.sum(F.col("recall").cast("decimal(14,12)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean_recall")
+    panel = Window.partitionBy()
+    recall = F.col("n_hits").cast("double") / F.col("n_true")
+    mean_recall = (
+        F.sum(recall.cast("decimal(14,12)")).over(panel).cast("double")
+        / F.count(F.lit(1)).over(panel)
     )
     floor = ANN_MEAN_RECALL_FLOORS[method]
-    return per_q.crossJoin(F.broadcast(mean)).select(
+    return per_q.select(
         "query_id",
         "n_results",
         "n_true",
-        (F.col("mean_recall") >= F.lit(floor)).alias("mean_recall_ge_floor"),
+        (mean_recall >= F.lit(floor)).alias("mean_recall_ge_floor"),
     )
 
 

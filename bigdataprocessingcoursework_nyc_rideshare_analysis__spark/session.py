@@ -16,6 +16,10 @@ design point:
 Caching rule: query bodies do not persist.  A subtree with several
 consumers is recomputed or shared through exchange reuse; an iterative
 loop persists its frame and unpersists it inside the same call.
+``localCheckpoint`` cuts an iterative loop's lineage (``cluster.py``,
+``bpe.py``).  It pins a subtree for several consumers only where deleting
+the pin measured slower at some scale (``textrank_keywords``,
+``semantic_dedup_docs``), with the reason at the call site.
 """
 
 from __future__ import annotations

@@ -525,53 +525,58 @@ def test_no_data_sized_single_partition_windows(spark):
 
 
 def test_bound_summaries_pin_one_detail_execution(spark):
-    """The r10 bound-summary wrappers consume their detail frame in two
-    legs of one output (recall join + anti-join, stats + over-threshold,
-    pagerank + node universe, n_results + hits).  Exchange reuse is not
-    guaranteed across those shapes, so each wrapper must localCheckpoint
-    the detail — the corpus-sized screen executes exactly ONCE and the
-    summary's plan reads the pinned RDD, never the corpus again (r10
-    driver bench: textrank_keywords 12.7 s vs its 5.5 s single-pass
-    detail, the double corpus pass made visible)."""
+    """Each bound-summary wrapper reads its corpus-sized detail exactly
+    once, inside one lazy plan: one FULL OUTER join of found and truth
+    feeds one aggregate.  So no checkpointed RDD stands in for the detail,
+    and the summary's plan holds the detail's subtree exactly as often as
+    the detail's own plan does — a second leg over the unpinned detail
+    would double the count, a pin would drop it to zero (r10 driver bench:
+    textrank_keywords 12.7 s vs its 5.5 s single-pass detail, the double
+    corpus pass made visible)."""
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.dedup import (
+        dedup_simhash_detail,
+        embedding_lsh_detail,
+        minhash_lsh_detail,
         q_dedup_simhash,
         q_neardup_embedding_lsh,
         q_neardup_minhash,
     )
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.graphrank import q_textrank_keywords
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import q_ann_ivf_topk, q_ann_lsh_topk
-
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.dedup import (
-        dedup_simhash_detail,
-        embedding_lsh_detail,
-        minhash_lsh_detail,
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
+        ivf_topk_detail,
+        lsh_topk_detail,
+        q_ann_ivf_topk,
+        q_ann_lsh_topk,
     )
-    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import ivf_topk_detail, lsh_topk_detail
 
     # marker = a plan fragment only the corpus-sized detail subtree
-    # contains.  Self-validating: the marker must appear in the DETAIL's
-    # own plan (else the pin is vacuous) and must be absent from the
-    # summary's plan (the checkpoint replaced the subtree).
+    # contains.  Self-validating: it must appear in the DETAIL's own plan.
     cases = [
         (q_neardup_minhash, minhash_lsh_detail, "shingles"),
         (q_dedup_simhash, dedup_simhash_detail, "shingles"),
         (q_neardup_embedding_lsh, embedding_lsh_detail, "embeddings.parquet"),
         (q_ann_lsh_topk, lsh_topk_detail, "embeddings.parquet"),
         (q_ann_ivf_topk, ivf_topk_detail, "embeddings.parquet"),
-        # textrank's detail checkpoints its own edge frame (pagerank UNIONs
-        # the subtree), so only the summary-side assertions apply
-        (q_textrank_keywords, None, "FlatMapGroupsInPandas"),
     ]
     for fn, detail_fn, marker in cases:
-        if detail_fn is not None:
-            detail_plan = plan_string(detail_fn(spark, SF_SMOKE))
-            assert marker in detail_plan, (
-                f"{detail_fn.__name__}: marker {marker!r} not in the detail "
-                f"plan — pick a new marker\n{detail_plan}"
-            )
-        plan = plan_string(fn(spark, SF_SMOKE))
-        assert "ExistingRDD" in plan, f"{fn.__name__}: detail leg not checkpointed\n{plan}"
-        assert marker not in plan, (
-            f"{fn.__name__}: corpus subtree ({marker!r}) still in the summary "
-            f"plan — the detail would re-execute per leg\n{plan}"
+        detail_plan = plan_string(detail_fn(spark, SF_SMOKE))
+        n_detail = detail_plan.count(marker)
+        assert n_detail, (
+            f"{detail_fn.__name__}: marker {marker!r} not in the detail "
+            f"plan — pick a new marker\n{detail_plan}"
         )
+        plan = plan_string(fn(spark, SF_SMOKE))
+        assert "ExistingRDD" not in plan, f"{fn.__name__}: detail leg checkpointed\n{plan}"
+        assert plan.count(marker) == n_detail, (
+            f"{fn.__name__}: corpus subtree ({marker!r}) {plan.count(marker)}× in the "
+            f"summary plan, {n_detail}× in the detail's — the detail is not read "
+            f"exactly once\n{plan}"
+        )
+    # textrank's co-occurrence edges feed pagerank's driver-side collect
+    # (a build-time job) and the node-universe leg, so the summary keeps
+    # its edge checkpoint: the plan reads the pinned RDD, never the corpus
+    plan = plan_string(q_textrank_keywords(spark, SF_SMOKE))
+    assert "ExistingRDD" in plan, f"textrank_keywords: edges not checkpointed\n{plan}"
+    assert "FlatMapGroupsInPandas" not in plan, (
+        f"textrank_keywords: corpus containment pass still in the summary plan\n{plan}"
+    )
