@@ -1534,23 +1534,6 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_geometry_key() -> str:
-    """Short content key over every constant that shapes an ANN tier's
-    output — query panel geometry plus per-index tuning.  Folded into each
-    staged panel's directory name (``stage.staged_ann_method_topk``) so
-    retuning any constant invalidates the staged results instead of
-    silently serving stale ones."""
-    import hashlib
-
-    parts = (
-        N_QUERIES, TOP_K,
-        LSH_TABLES, LSH_BITS, LSH_SEED,
-        IVF_LISTS, IVF_NPROBE, IVF_SEED, IVF_KMEANS_ITERS, IVF_TRAIN_CAP,
-        PQ_SUBSPACES, PQ_CODEBOOK, PQ_SEED, PQ_KMEANS_ITERS, PQ_SHORTLIST,
-    )
-    return hashlib.sha1(":".join(map(str, parts)).encode()).hexdigest()[:12]
-
-
 # --- contrastive hard-pair mining ----------------------------------------------
 
 _HARD_PAIRS_ORACLE = f"""

@@ -21,9 +21,14 @@ dedup, contamination sweep, packing, index build — reads the stage instead
 of re-tokenizing 100 TB of text per stage.  (SURVEY.md §7.2's "cache the
 enriched view" principle, applied to the documents corpus.)
 
-The stage is a CACHE, not a source of truth: the directory key folds in
-the source parquet's path + size + mtime, so regenerating testdata
-invalidates it automatically, and deleting the stage root is always safe.
+The stage is a CACHE, not a source of truth.  Its directory key is the
+source parquet's file version (path + size + mtime,
+``sources.tables.source_key``), plus the fingerprint of the code that
+builds it (``registry.code_fingerprint``: the builder and every package
+def or constant it reaches), plus the runtime arguments (``k``, ``t``,
+``w``, ``method``).  Regenerating testdata or editing any reachable code
+re-keys exactly the stages it can change, never needs a hand bump, and
+deleting the stage root is always safe.
 Results are byte-identical to the unstaged expressions (same JVM
 functions, materialized through parquet's lossless string/array codecs),
 so every DuckDB oracle is unchanged.
@@ -31,24 +36,15 @@ so every DuckDB oracle is unchanged.
 
 from __future__ import annotations
 
-import hashlib
-import inspect
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_col
+from ..registry import code_fingerprint
 from ..sources import load_table
-from ..sources.tables import file_version, read_parquet
-
-#: bump to invalidate every staged frame after a change to staged schemas
-#: or to the tokenization/shingling expressions they bake in
-#: v2: stage builds spread the source to the session's default parallelism
-#: before the heavy transform and therefore write multi-file stages — the
-#: testdata parquet is single-rowgroup (unsplittable), so v1 stages were
-#: one file and every staged consumer's scan stage ran single-threaded
-STAGE_VERSION = 2
+from ..sources.tables import read_parquet, source_key
 
 
 def stage_root() -> str:
@@ -60,31 +56,11 @@ def stage_root() -> str:
     return os.path.join(os.path.dirname(pkg_dir), ".stage")
 
 
-def _source_key(sf_dir: str, table: str = "documents") -> str:
-    """Content key for one source table (``sources.tables.file_version``),
-    so a regenerated source file maps to a fresh stage directory."""
-    version = file_version(os.path.join(sf_dir, f"{table}.parquet"))
-    return hashlib.sha1(f"v{STAGE_VERSION}|{version!r}".encode()).hexdigest()[:16]
-
-
-def _fn_version(fn) -> str:
-    """Code-version token for a stage key: a short hash of the builder
-    function's SOURCE, so an algorithm change with unchanged constants
-    invalidates its staged results instead of serving stale frames from a
-    persistent ``.stage/`` dir until the next pytest sweep (round-6 advice:
-    ``staged_ann_method_topk`` folded index constants but not the probe
-    implementation itself)."""
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # builtins / REPL-defined: fall back to name
-        src = getattr(fn, "__qualname__", repr(fn))
-    return hashlib.sha1(src.encode()).hexdigest()[:8]
-
-
 def _ensure(
     spark: SparkSession, name: str, sf_dir: str, build, table: str = "documents"
 ) -> DataFrame:
-    """Materialize ``build()`` under the stage key unless already present
+    """Materialize ``build(spark, sf_dir)`` under
+    ``<source key>/<name>_<code_fingerprint(build)>`` unless already present
     (parquet ``_SUCCESS`` marker = committed write; a torn earlier write
     without the marker is simply overwritten), and read the stage back.
     ``table`` picks which source parquet's content hash keys the stage
@@ -92,9 +68,9 @@ def _ensure(
     just because ``documents`` is unchanged).  The read's schema is memoized
     on the ``_SUCCESS`` marker (``sources.tables.read_parquet``), so only
     the first read after a (re)build infers it."""
-    out = os.path.join(stage_root(), _source_key(sf_dir, table), name)
+    out = os.path.join(stage_root(), source_key(sf_dir, table), f"{name}_{code_fingerprint(build)}")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build().write.mode("overwrite").parquet(out)
+        build(spark, sf_dir).write.mode("overwrite").parquet(out)
     return read_parquet(spark, out)
 
 
@@ -114,13 +90,11 @@ def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan stage too.  On real multi-rowgroup 100 TB inputs the scan is
     # already parallel and the round-robin exchange is a no-op cost-wise
     # (it moves rows once, before the expensive transform).
-    par = spark.sparkContext.defaultParallelism
-    return _ensure(
-        spark,
-        "doc_features",
-        sf_dir,
-        lambda: featurize_documents(load_table(spark, sf_dir, "documents").repartition(par)),
-    )
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        par = spark.sparkContext.defaultParallelism
+        return featurize_documents(load_table(spark, sf_dir, "documents").repartition(par))
+
+    return _ensure(spark, "doc_features", sf_dir, build)
 
 
 def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -128,7 +102,7 @@ def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     arrays (documents shorter than ``k`` tokens drop out via the empty-array
     explode, mirroring the oracles' ``WHERE len(toks) >= k``)."""
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         feat = staged_features(spark, sf_dir)
         return feat.select(
             "doc_id", F.explode(shingles_col("toks", k)).alias("shingle")
@@ -145,19 +119,13 @@ def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) 
     its lifetime (round-3 advice), and (b) the two boilerplate queries
     share the segmentation work the way a real curation run would.  The
     width is part of the stage key."""
-
-    def build() -> DataFrame:
-        from .boilerplate import SEG_TOKENS, segment_table
-
-        w = SEG_TOKENS if width is None else width
-        return (
-            segment_table(staged_features(spark, sf_dir), w)
-            .withColumn("h", F.md5("seg"))
-        )
-
-    from .boilerplate import SEG_TOKENS
+    from .boilerplate import SEG_TOKENS, segment_table
 
     w = SEG_TOKENS if width is None else width
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return segment_table(staged_features(spark, sf_dir), w).withColumn("h", F.md5("seg"))
+
     return _ensure(spark, f"doc_segments_w{w}", sf_dir, build)
 
 
@@ -175,7 +143,7 @@ def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | No
 
     t = JACCARD_THRESHOLD if threshold is None else threshold
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         return jaccard_pairs(staged_shingles(spark, sf_dir), t)
 
     return _ensure(spark, f"jaccard_pairs_t{t}", sf_dir, build)
@@ -189,17 +157,12 @@ def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection runs once per corpus snapshot and every recall/precision
     consumer joins the table.  ``neardup_embedding_cosine`` (the truth
     query itself) deliberately does NOT read this stage — it IS the
-    computation being measured.  Threshold and the truth implementation
-    version key the stage; the source key hashes ``embeddings.parquet``."""
-    from .dedup import COSINE_DUP_THRESHOLD, q_neardup_embedding
+    computation being measured.  The truth query itself is the builder, so
+    its code and threshold key the stage; the source key hashes
+    ``embeddings.parquet``."""
+    from .dedup import q_neardup_embedding
 
-    return _ensure(
-        spark,
-        f"embedding_pairs_t{COSINE_DUP_THRESHOLD}_{_fn_version(q_neardup_embedding)}",
-        sf_dir,
-        lambda: q_neardup_embedding(spark, sf_dir),
-        table="embeddings",
-    )
+    return _ensure(spark, "embedding_pairs", sf_dir, q_neardup_embedding, table="embeddings")
 
 
 def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
@@ -215,7 +178,7 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
 
     kk = TFIDF_TOP_K if k is None else k
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread the write across the session's parallelism: AQE coalesces
         # the small top-k window shuffle into ONE partition, and a one-file
         # stage is one ROWGROUP — unsplittable, so every consumer (norms,
@@ -226,8 +189,7 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
         # repartition collapses into the window's identical required
         # distribution and the AQE-coalescible shuffle is all that
         # remains — the exact same trap with an extra step.  Same fix as
-        # the documents source in staged_features above.  "_p" in the
-        # stage name versions the layout so pre-fix stages rebuild.
+        # the documents source in staged_features above.
         par = spark.sparkContext.defaultParallelism
         return (
             tfidf_scored_topk(staged_features(spark, sf_dir), kk)
@@ -235,7 +197,7 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
             .repartition(par)
         )
 
-    return _ensure(spark, f"tfidf_topk_k{kk}_p", sf_dir, build)
+    return _ensure(spark, f"tfidf_topk_k{kk}", sf_dir, build)
 
 
 def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,30 +208,20 @@ def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production the AllPairs candidate index is built once per corpus
     snapshot — the same offline cadence as the staged ANN panels — and
     similarity queries score + verify candidates against the vector table;
-    they do not re-run the index build per query.  The stage key folds the
-    top-k / threshold constants AND a hash of the candidate-generation
-    source (``_fn_version``), so retuning or re-deriving the filter rebuilds
-    the stage.  Lossless by construction (see
-    ``textstats.tfidf_sim_candidate_pairs``), so the DuckDB oracle — which
-    states the naive all-shared-terms semantics — is unchanged."""
-    from .textstats import (
-        TFIDF_SIM_THRESHOLD,
-        TFIDF_TOP_K,
-        tfidf_sim_candidate_pairs,
-    )
+    they do not re-run the index build per query.  Retuning or re-deriving
+    the filter re-keys the stage (see ``_ensure``).  Lossless by
+    construction (see ``textstats.tfidf_sim_candidate_pairs``), so the
+    DuckDB oracle — which states the naive all-shared-terms semantics — is
+    unchanged."""
+    from .textstats import tfidf_sim_candidate_pairs
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread like staged_tfidf_topk: the distinct's AQE-coalesced output
         # would otherwise land as one rowgroup and single-thread consumers
         par = spark.sparkContext.defaultParallelism
         return tfidf_sim_candidate_pairs(staged_tfidf_topk(spark, sf_dir)).repartition(par)
 
-    return _ensure(
-        spark,
-        f"tfidf_sim_cand_k{TFIDF_TOP_K}_t{TFIDF_SIM_THRESHOLD}_{_fn_version(tfidf_sim_candidate_pairs)}",
-        sf_dir,
-        build,
-    )
+    return _ensure(spark, "tfidf_sim_cand", sf_dir, build)
 
 
 def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,18 +231,13 @@ def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, so the whole table is broadcast-sized relative to the corpus;
     the term-sorted entry array keeps the dot product's float summation
     order deterministic (the 9-dp round absorbs the engine-vs-engine ulp)."""
-    from .textstats import TFIDF_TOP_K, tfidf_doc_vectors
+    from .textstats import tfidf_doc_vectors
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return tfidf_doc_vectors(staged_tfidf_topk(spark, sf_dir)).repartition(par)
 
-    return _ensure(
-        spark,
-        f"tfidf_doc_vecs_k{TFIDF_TOP_K}_{_fn_version(tfidf_doc_vectors)}",
-        sf_dir,
-        build,
-    )
+    return _ensure(spark, "tfidf_doc_vecs", sf_dir, build)
 
 
 def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,21 +251,16 @@ def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, ``budget_select_by_quality``.  ``quality_model_score`` — the
     scoring query itself — deliberately does NOT read this stage: it IS the
     inference pass being measured (same discipline as
-    ``staged_jaccard_pairs``).  The stage key folds a source hash of the
-    score construction, so retuning QUALITY_WEIGHTS or the feature
+    ``staged_jaccard_pairs``).  The stage key reaches the score
+    construction, so retuning ``QUALITY_WEIGHTS`` or the feature
     expressions rebuilds it."""
     from .textstats import _quality_score_frame
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return _quality_score_frame(spark, sf_dir).repartition(par)
 
-    return _ensure(
-        spark,
-        f"quality_scores_{_fn_version(_quality_score_frame)}",
-        sf_dir,
-        build,
-    )
+    return _ensure(spark, "quality_scores", sf_dir, build)
 
 
 def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
@@ -331,42 +273,14 @@ def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> Dat
     the staged exact truth — it does NOT re-probe every index per report
     run.  The per-method registry queries (``ann_lsh_topk`` …) deliberately
     do NOT read this stage: each IS the index probe being measured.  The
-    stage key folds the query-panel geometry AND every index constant
-    (tables/bits/seeds, lists/nprobe, codebook shape/iters/caps) via
-    ``similarity.ann_geometry_key`` so retuning any tier invalidates only
-    its own staged results; the source key hashes ``embeddings.parquet``."""
-    from .similarity import (
-        ANN_METHODS,
-        _group_means_into,
-        ann_geometry_key,
-        train_ivf_centroids,
-        train_pq_codebooks,
-    )
+    probe itself is the builder, so its key reaches the query-panel
+    geometry and only its own tier's constants and trainers: retuning one
+    tier invalidates only its own staged results.  The source key hashes
+    ``embeddings.parquet``."""
+    from .similarity import ANN_METHODS
 
-    fn = dict(ANN_METHODS)[method]
-    # ann_geometry_key covers the constants; _fn_version covers the probe
-    # CODE, so an algorithm change with unchanged constants rebuilds too.
-    # The TRAINERS live outside the probe's source (same one-closure-deeper
-    # staleness class the video stage key closed in round 9), so fold them
-    # in as well — a k-means change must rebuild every staged panel that
-    # TRAINS (round-9 advice: 'lsh' never calls the trainers, so its key
-    # skips them — a k-means edit no longer spuriously rebuilds the LSH
-    # panel).
-    key = f"ann_{method}_topk_{ann_geometry_key()}_{_fn_version(fn)}"
-    if method in ("ivf", "pq", "ivfpq"):
-        trainers = hashlib.sha1(
-            "|".join(
-                _fn_version(f)
-                for f in (train_ivf_centroids, train_pq_codebooks, _group_means_into)
-            ).encode()
-        ).hexdigest()[:8]
-        key = f"{key}_{trainers}"
     return _ensure(
-        spark,
-        key,
-        sf_dir,
-        lambda: fn(spark, sf_dir),
-        table="embeddings",
+        spark, f"ann_{method}_topk", sf_dir, dict(ANN_METHODS)[method], table="embeddings"
     )
 
 
@@ -381,19 +295,16 @@ def staged_ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (offline, quadratic, the cost you pay deliberately) and every index
     build / nightly health check joins against that table.
     ``ann_cosine_topk`` (the ground-truth query itself) does NOT read this
-    stage — it IS the computation being measured.  Query-set geometry
-    (N_QUERIES, TOP_K) is part of the stage key; the source key hashes
+    stage — it IS the computation being measured.  The stage key reaches
+    the query-set geometry (N_QUERIES, TOP_K); the source key hashes
     ``embeddings.parquet``, so a regenerated corpus invalidates it."""
     from .similarity import N_QUERIES, TOP_K, cosine_topk
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return cosine_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K)
 
-    return _ensure(
-        spark,
-        f"ann_exact_topk_q{N_QUERIES}_k{TOP_K}", sf_dir, build, table="embeddings"
-    )
+    return _ensure(spark, "ann_exact_topk", sf_dir, build, table="embeddings")
 
 
 def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,41 +314,12 @@ def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``media_video_neardup_phash`` consumes the frame three times (banding
     plus both sides of the exact verify join); in production the ingest
     hashes each clip once and every dedup consumer reads the table.  The
-    stage key folds the hash-construction source, so retuning the geometry
-    (VPH_*, dHash) rebuilds it."""
-    from .multimodal import (
-        DHASH_H,
-        DHASH_W,
-        VPH_N_FRAMES,
-        VPH_STRIDE,
-        VPH_H,
-        VPH_W,
-        _build_frame_dhash,
-        _build_mixed_raster,
-        _build_video_codec,
-        video_phash_frame,
-    )
+    stage key reaches the hash construction and its geometry (VPH_*,
+    dHash), so retuning either rebuilds it."""
+    from .multimodal import video_phash_frame
 
-    def build() -> DataFrame:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         return video_phash_frame(spark, sf_dir).repartition(par)
 
-    # the geometry constants AND the helper implementations live OUTSIDE the
-    # builder's source, so fold them into the key explicitly —
-    # _fn_version(video_phash_frame) alone would serve stale hashes across a
-    # VPH_*/DHASH_* retune (caught when the 16x16 entropy fix landed) or an
-    # edit to the frame-hash / codec / raster builders the query calls
-    # (round-8 advice: the same staleness class, one closure deeper)
-    geo = f"{VPH_W}x{VPH_H}x{VPH_N_FRAMES}s{VPH_STRIDE}_d{DHASH_W}x{DHASH_H}"
-    helpers = hashlib.sha1(
-        "|".join(
-            _fn_version(f)
-            for f in (_build_frame_dhash, _build_video_codec, _build_mixed_raster)
-        ).encode()
-    ).hexdigest()[:8]
-    return _ensure(
-        spark,
-        f"video_phash_{geo}_{_fn_version(video_phash_frame)}_{helpers}",
-        sf_dir,
-        build,
-    )
+    return _ensure(spark, "video_phash", sf_dir, build)

@@ -75,12 +75,13 @@ def _canon(node) -> str:
 
 
 @functools.cache
-def _fingerprints(root: str) -> dict[str, str]:
-    """Fingerprint of every query the package under ``root`` registers: a
-    hash of the registered function plus every package-level def or
-    constant it reaches through names, relative imports and re-exports,
-    ``registry`` excluded.  Module-level calls count for every query of
-    their module (they wire oracles after definition)."""
+def _walk(root: str):
+    """One parse and walk of the package under ``root``, returned as
+    (registered query name -> its ``(module, symbol)`` key, fingerprint of a
+    key).  A key's fingerprint hashes its def plus every package-level def
+    or constant it reaches through names, relative imports and re-exports,
+    ``registry`` excluded.  Module-level calls count for every def of their
+    module (they wire oracles after definition)."""
     trees, packages = {}, set()  # module path tuple -> AST; () is the root package
     for dirpath, _, filenames in os.walk(root):
         for fname in (f for f in filenames if f.endswith(".py")):
@@ -100,7 +101,7 @@ def _fingerprints(root: str) -> dict[str, str]:
 
     symbols, aliases, queries = {}, {}, {}
     for mod, tree in trees.items():
-        aliases[mod] = {}
+        aliases[mod], symbols[(mod, "")] = {}, []  # (mod, ""): module-level calls, maybe none
         for stmt in tree.body:
             names = [""] if isinstance(stmt, ast.Expr) else []
             if isinstance(stmt, ast.ImportFrom) and stmt.level:
@@ -136,22 +137,33 @@ def _fingerprints(root: str) -> dict[str, str]:
     def digest(key: tuple) -> str:
         return hashlib.sha256(f"{key}{_canon(symbols[key])}".encode()).hexdigest()
 
-    out = {}
-    for query, key in queries.items():
+    @functools.cache
+    def reach(key: tuple) -> str:
         seen, stack = set(), [key, (key[0], "")]
         while stack:
             if (k := stack.pop()) not in seen:
                 seen.add(k)
                 stack += refs(k)
         text = "\n".join(sorted(digest(k) for k in seen if k in symbols))
-        out[query] = hashlib.sha256(text.encode()).hexdigest()[:16]
-    return out
+        return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+    return queries, reach
 
 
 def fingerprint(name: str, root: str = PACKAGE_DIR) -> str | None:
     """Source fingerprint of query ``name`` in the package under ``root``
     (None if it registers no such query); memoized per root."""
-    return _fingerprints(root).get(name)
+    queries, reach = _walk(root)
+    return reach(queries[name]) if name in queries else None
+
+
+def code_fingerprint(fn: Callable, root: str = PACKAGE_DIR) -> str:
+    """Source fingerprint of the package-level def that defines ``fn`` (a
+    nested function, lambda or method maps to its enclosing module-level
+    def), in the package under ``root``: it moves exactly when code or a
+    constant ``fn`` can reach does."""
+    module = tuple(fn.__module__.split(".")[1:])  # drop the package name
+    return _walk(root)[1]((module, fn.__qualname__.split(".")[0]))
 
 
 def load_all() -> dict[str, QuerySpec]:

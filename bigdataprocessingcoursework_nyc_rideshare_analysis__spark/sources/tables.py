@@ -20,6 +20,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,6 +78,17 @@ def file_version(path: str) -> tuple:
         files = [path]
     stats = [(f, os.stat(f)) for f in files]
     return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
+def source_key(sf_dir: str, *tables: str) -> str:
+    """Content key of source tables under ``sf_dir`` (``file_version`` of
+    each ``<table>.parquet``; a missing one keys as absent), so a
+    regenerated source maps to a fresh stage directory or warehouse marker."""
+    versions = []
+    for tbl in tables:
+        path = os.path.abspath(os.path.join(sf_dir, f"{tbl}.parquet"))
+        versions.append(file_version(path) if os.path.exists(path) else (path, "absent"))
+    return hashlib.sha1(repr(versions).encode()).hexdigest()[:16]
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -18,7 +18,6 @@ warehouse would be a side effect, not a query.  Pipelines opt in via
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -27,7 +26,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import file_version, load_table
+from .tables import load_table, source_key
 from .sinks import write_bucketed_table
 
 #: (table, bucket key) — the two sides of the fact×fact edge
@@ -47,18 +46,6 @@ def warehouse_table_names(sf_dir: str) -> dict[str, str]:
 
 
 MARKER_NAME = "_BDPC_WAREHOUSE_MARKER.json"
-
-
-def _source_key(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """Content key of the warehouse's source parquet
-    (``sources.tables.file_version``, the same rule as ``datapipe.stage``),
-    so regenerated testdata rebuilds and an unchanged source reuses; a
-    missing source keys as absent."""
-    versions = []
-    for tbl in tables:
-        path = os.path.abspath(os.path.join(sf_dir, f"{tbl}.parquet"))
-        versions.append(file_version(path) if os.path.exists(path) else (path, "absent"))
-    return hashlib.md5(f"wh1|{versions!r}".encode()).hexdigest()
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:
@@ -96,7 +83,7 @@ def _ensure_bucketed(
     want = None
     if loc is not None:
         want = {
-            "src_key": _source_key(sf_dir, (src_tbl,)),
+            "src_key": source_key(sf_dir, src_tbl),
             "bucket_by": bucket_by,
             "n_buckets": n_buckets,
             "sort_by": list(sort_by or [bucket_by]),
@@ -163,11 +150,8 @@ def trip_tables(
 def _remove_stray_location(spark: SparkSession, table: str) -> None:
     """Delete an orphaned managed-table directory (location exists on the
     local filesystem, table absent from the current catalog)."""
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    if wh.scheme not in ("", "file"):
-        return  # non-local warehouse: nothing we should touch
-    loc = os.path.join(wh.path or wh.netloc, table.lower())
-    if os.path.exists(loc):
+    loc = _table_location(spark, table)
+    if loc is not None and os.path.exists(loc):
         shutil.rmtree(loc, ignore_errors=True)
 
 

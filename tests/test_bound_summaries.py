@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
@@ -81,6 +82,41 @@ def test_simhash_summary_flags_pair_over_threshold(spark, monkeypatch):
     assert not got.all_pairs_within_threshold
     assert got.n_identical_pairs == want.n_identical_pairs
     assert got.identical_pairs_found_h0 == want.identical_pairs_found_h0
+
+
+def test_simhash_summary_finds_and_flags_identical_pair(spark, tmp_path, monkeypatch):
+    """The smoke and sf0.01 corpora hold no identical documents, so there
+    ``identical_pairs_found_h0`` is TRUE over zero pairs.  With one document
+    duplicated under a new doc_id the pair is counted, found at hamming 0
+    and agrees with the DuckDB twin; a screen that drops the hamming-0
+    pairs reads FALSE."""
+    from tools.check_oracle import compare, duck_connection
+
+    sf_dir = tmp_path / "sf_dup"
+    sf_dir.mkdir()
+    for name in TABLE_NAMES:
+        if name != "documents":
+            os.symlink(os.path.join(SF_SMOKE, f"{name}.parquet"), sf_dir / f"{name}.parquet")
+    docs = pq.read_table(os.path.join(SF_SMOKE, "documents.parquet"))
+    longest = max(range(docs.num_rows), key=lambda i: docs["n_chars"][i].as_py())
+    dup = docs.slice(longest, 1).to_pylist()
+    dup[0]["doc_id"] = max(docs["doc_id"].to_pylist()) + 1
+    pq.write_table(pa.concat_tables([docs, pa.Table.from_pylist(dup, docs.schema)]),
+                   sf_dir / "documents.parquet")
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stage"))
+
+    want = dedup.q_dedup_simhash(spark, str(sf_dir)).first()
+    assert want.n_identical_pairs >= 1
+    assert want.identical_pairs_found_h0
+    assert compare("dedup_simhash", spark, duck_connection(str(sf_dir)), str(sf_dir),
+                   load_all()["dedup_simhash"]) == "OK"
+
+    detail = dedup.dedup_simhash_detail(spark, str(sf_dir))
+    monkeypatch.setattr(dedup, "dedup_simhash_detail",
+                        lambda spark, sf_dir: detail.filter(F.col("hamming") > 0))
+    got = dedup.q_dedup_simhash(spark, str(sf_dir)).first()
+    assert got.n_identical_pairs == want.n_identical_pairs
+    assert not got.identical_pairs_found_h0
 
 
 def test_embedding_summary_flags_cosine_mismatch(spark, monkeypatch):
