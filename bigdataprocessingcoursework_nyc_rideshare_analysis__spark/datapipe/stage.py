@@ -21,14 +21,16 @@ dedup, contamination sweep, packing, index build — reads the stage instead
 of re-tokenizing 100 TB of text per stage.  (SURVEY.md §7.2's "cache the
 enriched view" principle, applied to the documents corpus.)
 
-The stage is a CACHE, not a source of truth.  Its directory key is the
-source parquet's file version (path + size + mtime,
-``sources.tables.source_key``), plus the fingerprint of the code that
-builds it (``registry.code_fingerprint``: the builder and every package
-def or constant it reaches), plus the runtime arguments (``k``, ``t``,
-``w``, ``method``).  Regenerating testdata or editing any reachable code
-re-keys exactly the stages it can change, never needs a hand bump, and
-deleting the stage root is always safe.
+The stage is a CACHE, not a source of truth, written and reused by the
+rule the bucketed warehouse tables share (``sources.tables.materialize``):
+a stage lives at ``<stage root>/<source key>/<name>_<code fingerprint>``,
+where the source key is the source parquet's file version and the code
+fingerprint covers the builder and every package def or constant it
+reaches (``registry.code_fingerprint``).  Regenerating testdata or editing
+any reachable code re-keys exactly the stages it can change, the rebuild
+deletes the directory it supersedes, and deleting the stage root is always
+safe.  Every stage name is fixed (``ann_<method>_topk`` carries its one
+runtime argument), so a name has exactly one live directory per source.
 Results are byte-identical to the unstaged expressions (same JVM
 functions, materialized through parquet's lossless string/array codecs),
 so every DuckDB oracle is unchanged.
@@ -36,42 +38,28 @@ so every DuckDB oracle is unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_col
-from ..registry import code_fingerprint
 from ..sources import load_table
-from ..sources.tables import read_parquet, source_key
-
-
-def stage_root() -> str:
-    """Staging directory: ``$SPARK_GRAFT_STAGE_DIR`` or ``<repo>/.stage``."""
-    env = os.environ.get("SPARK_GRAFT_STAGE_DIR")
-    if env:
-        return env
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(os.path.dirname(pkg_dir), ".stage")
+from ..sources.tables import materialize, read_parquet
 
 
 def _ensure(
     spark: SparkSession, name: str, sf_dir: str, build, table: str = "documents"
 ) -> DataFrame:
-    """Materialize ``build(spark, sf_dir)`` under
-    ``<source key>/<name>_<code_fingerprint(build)>`` unless already present
-    (parquet ``_SUCCESS`` marker = committed write; a torn earlier write
-    without the marker is simply overwritten), and read the stage back.
-    ``table`` picks which source parquet's content hash keys the stage
-    (stages over ``embeddings`` must not survive an embeddings regeneration
-    just because ``documents`` is unchanged).  The read's schema is memoized
-    on the ``_SUCCESS`` marker (``sources.tables.read_parquet``), so only
-    the first read after a (re)build infers it."""
-    out = os.path.join(stage_root(), source_key(sf_dir, table), f"{name}_{code_fingerprint(build)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return read_parquet(spark, out)
+    """Stage ``build(spark, sf_dir)`` as parquet by the shared rule, keyed by
+    ``table``'s source files and ``build``'s code, and read it back.
+    ``table`` picks the source (stages over ``embeddings`` must not survive
+    an embeddings regeneration just because ``documents`` is unchanged).
+    The read's schema is memoized on the ``_SUCCESS`` marker, so only the
+    first read after a (re)build infers it."""
+
+    def write(path: str) -> None:
+        build(spark, sf_dir).write.mode("overwrite").parquet(path)
+
+    return read_parquet(spark, materialize(sf_dir, table, name, build, write))
 
 
 def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,39 +85,35 @@ def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ensure(spark, "doc_features", sf_dir, build)
 
 
-def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Distinct (doc_id, shingle) k-gram pairs, built FROM the staged token
-    arrays (documents shorter than ``k`` tokens drop out via the empty-array
-    explode, mirroring the oracles' ``WHERE len(toks) >= k``)."""
+def staged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, shingle) 3-gram pairs, built FROM the staged token
+    arrays (documents shorter than 3 tokens drop out via the empty-array
+    explode, mirroring the oracles' ``WHERE len(toks) >= 3``)."""
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         feat = staged_features(spark, sf_dir)
-        return feat.select(
-            "doc_id", F.explode(shingles_col("toks", k)).alias("shingle")
-        ).distinct()
+        return feat.select("doc_id", F.explode(shingles_col("toks")).alias("shingle")).distinct()
 
-    return _ensure(spark, f"doc_shingles_k{k}", sf_dir, build)
+    return _ensure(spark, "doc_shingles", sf_dir, build)
 
 
-def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) -> DataFrame:
+def staged_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashed fixed-width segment table (doc_id, seg_idx, seg, h) the
     boilerplate family self-joins — staged instead of ``persist()``-ed so
     (a) the frequency branch and the join-back branch share one
     materialization WITHOUT leaking a cached frame into the session for
     its lifetime (round-3 advice), and (b) the two boilerplate queries
     share the segmentation work the way a real curation run would.  The
-    width is part of the stage key."""
+    stage key reaches the width (``SEG_TOKENS``)."""
     from .boilerplate import SEG_TOKENS, segment_table
 
-    w = SEG_TOKENS if width is None else width
-
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return segment_table(staged_features(spark, sf_dir), w).withColumn("h", F.md5("seg"))
+        return segment_table(staged_features(spark, sf_dir), SEG_TOKENS).withColumn("h", F.md5("seg"))
 
-    return _ensure(spark, f"doc_segments_w{w}", sf_dir, build)
+    return _ensure(spark, "doc_segments", sf_dir, build)
 
 
-def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | None = None) -> DataFrame:
+def staged_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified exact near-dup pair set (doc_a, doc_b, jaccard ≥
     threshold) — the DETECTION stage's output, staged for its graph
     consumers (connected components, triangles, survivor selection).
@@ -138,15 +122,14 @@ def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | No
     table; clustering and graph analytics read it — they do not re-run the
     shingle self-join each.  ``neardup_jaccard_pairs`` (the detection query
     itself) deliberately does NOT read this stage: it IS the computation
-    being measured.  The threshold is part of the stage key."""
+    being measured.  The stage key reaches the threshold
+    (``JACCARD_THRESHOLD``)."""
     from .dedup import JACCARD_THRESHOLD, jaccard_pairs
 
-    t = JACCARD_THRESHOLD if threshold is None else threshold
-
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return jaccard_pairs(staged_shingles(spark, sf_dir), t)
+        return jaccard_pairs(staged_shingles(spark, sf_dir), JACCARD_THRESHOLD)
 
-    return _ensure(spark, f"jaccard_pairs_t{t}", sf_dir, build)
+    return _ensure(spark, "jaccard_pairs", sf_dir, build)
 
 
 def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,18 +148,16 @@ def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ensure(spark, "embedding_pairs", sf_dir, q_neardup_embedding, table="embeddings")
 
 
-def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
+def staged_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each document's top-k TF-IDF terms (doc_id, term, df, w) — the sparse
-    lexical vector table the similarity tier consumes.  Staged (k in the
-    stage key) instead of ``persist()``-ed so the AllPairs query's four
+    lexical vector table the similarity tier consumes.  Staged (the key
+    reaches ``TFIDF_TOP_K``) instead of ``persist()``-ed so the AllPairs query's four
     consumers (norms, head/indexed split, and both verification sides)
     share one materialization without leaking a session-lifetime cached
     frame — same discipline as ``staged_segments``.  The weight is the
     smoothed ratio IDF ``tf·(N+1)/(df+1)`` (exact-integer multiply + one
     divide, bit-identical cross-engine; see ``tfidf_top_terms``)."""
     from .textstats import TFIDF_TOP_K, tfidf_scored_topk
-
-    kk = TFIDF_TOP_K if k is None else k
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread the write across the session's parallelism: AQE coalesces
@@ -192,12 +173,12 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
         # the documents source in staged_features above.
         par = spark.sparkContext.defaultParallelism
         return (
-            tfidf_scored_topk(staged_features(spark, sf_dir), kk)
+            tfidf_scored_topk(staged_features(spark, sf_dir), TFIDF_TOP_K)
             .select("doc_id", "term", "df", "w")
             .repartition(par)
         )
 
-    return _ensure(spark, f"tfidf_topk_k{kk}", sf_dir, build)
+    return _ensure(spark, "tfidf_topk", sf_dir, build)
 
 
 def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

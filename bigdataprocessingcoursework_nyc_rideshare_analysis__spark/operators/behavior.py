@@ -961,12 +961,7 @@ def q_user_feature_vector(
     exchanges (pinned in ``tests/test_bucketing.py``)."""
     from . import events as events_ops
 
-    if use_warehouse:
-        from ..sources.warehouse import events_warehouse_name
-
-        ev = spark.table(events_warehouse_name(sf_dir))
-    else:
-        ev = load_table(spark, sf_dir, "events")
+    ev = events_ops.load_events(spark, sf_dir, use_warehouse)
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.countDistinct(F.to_date("ts")).cast("long").alias("n_active_days"),

@@ -34,13 +34,14 @@ def load_events(spark: SparkSession, sf_dir: str, use_warehouse: bool = False) -
     ``sources.warehouse.build_events_warehouse`` — user-keyed aggregations
     then inherit their distribution from the scan (no Exchange) and
     user-partitioned windows inherit the sort too (no Sort), which is the
-    whole point of paying the bucketing shuffle once at ingest.  Same
-    opt-in discipline as ``enriched_trips(use_warehouse=...)``: registered
-    queries default to raw parquet (the driver's harness owns no warehouse)."""
+    whole point of paying the bucketing shuffle once at ingest.  The
+    warehouse is built on first use.  Same opt-in discipline as
+    ``enriched_trips(use_warehouse=...)``: registered queries default to
+    raw parquet (the driver's harness owns no warehouse)."""
     if use_warehouse:
-        from ..sources.warehouse import events_warehouse_name
+        from ..sources.warehouse import build_events_warehouse
 
-        return spark.table(events_warehouse_name(sf_dir))
+        return spark.table(build_events_warehouse(spark, sf_dir))
     return load_table(spark, sf_dir, "events")
 
 

@@ -87,8 +87,8 @@ def write_bucketed_table(
     )
     if path is not None:
         # EXTERNAL table: the bucket files outlive the (in-memory) catalog,
-        # so a later session can re-attach them without re-shuffling — the
-        # content-addressed warehouse reuse in ``sources.warehouse`` (r12)
+        # so a later session can re-attach them without re-shuffling (the
+        # warehouse reuse in ``sources.warehouse``)
         writer = writer.option("path", os.path.abspath(path))
     writer.saveAsTable(table)
 

@@ -16,17 +16,23 @@ Scale notes (100 TB design point):
 - reads pass a schema (``read_parquet``): inferring one runs a Spark job
   per read, so each file's schema is inferred once per process and
   memoized until the file changes.
+- derived artifacts (staged frames, bucketed warehouse tables) are written
+  once and reused by one rule, ``materialize``, keyed by the source files
+  and the code that builds them.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..registry import code_fingerprint
 from ..session import configure
 
 TABLE_NAMES = (
@@ -66,8 +72,8 @@ def file_version(path: str) -> tuple:
     """(abs path, size, st_mtime_ns) of the file at ``path``; for a
     directory, of its ``_SUCCESS`` commit marker (rewritten by every
     committed Spark write) or, without one, of every file under it.  The
-    one file-identity rule: the schema memo, the stage keys and the
-    warehouse markers all change exactly when this does."""
+    one file-identity rule: the schema memo and the artifact keys of
+    ``materialize`` both change exactly when this does."""
     path = os.path.abspath(path)
     if os.path.isdir(path):
         stamp = os.path.join(path, "_SUCCESS")
@@ -83,12 +89,52 @@ def file_version(path: str) -> tuple:
 def source_key(sf_dir: str, *tables: str) -> str:
     """Content key of source tables under ``sf_dir`` (``file_version`` of
     each ``<table>.parquet``; a missing one keys as absent), so a
-    regenerated source maps to a fresh stage directory or warehouse marker."""
+    regenerated source maps to a fresh artifact directory."""
     versions = []
     for tbl in tables:
         path = os.path.abspath(os.path.join(sf_dir, f"{tbl}.parquet"))
         versions.append(file_version(path) if os.path.exists(path) else (path, "absent"))
     return hashlib.sha1(repr(versions).encode()).hexdigest()[:16]
+
+
+def stage_root() -> str:
+    """Root of every materialized artifact: ``$SPARK_GRAFT_STAGE_DIR`` or
+    ``<repo>/.stage``."""
+    env = os.environ.get("SPARK_GRAFT_STAGE_DIR")
+    if env:
+        return env
+    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(os.path.dirname(pkg_dir), ".stage")
+
+
+def materialize(
+    sf_dir: str,
+    table: str,
+    name: str,
+    builder: Callable,
+    write: Callable[[str], None],
+    force: bool = False,
+) -> str:
+    """The one materialize-or-reuse rule of the staged frames and the
+    bucketed warehouse tables; returns the artifact directory
+    ``<stage root>/<source_key(sf_dir, table)>/<name>_<code_fingerprint(builder)>``.
+
+    ``write(path)`` runs only when the directory holds no ``_SUCCESS``
+    (Spark's commit marker: a torn earlier write is simply overwritten) or
+    ``force`` is set.  The key moves whenever the source table's files or
+    any package code ``builder`` reaches move, so an artifact is never
+    served stale and needs no hand-bumped version.  After a write, the
+    superseded ``<name>_*`` siblings under the same source key are deleted;
+    other names and other source keys are left alone.  Deleting the stage
+    root is always safe."""
+    parent = os.path.join(stage_root(), source_key(sf_dir, table))
+    out = os.path.join(parent, f"{name}_{code_fingerprint(builder)}")
+    if force or not os.path.exists(os.path.join(out, "_SUCCESS")):
+        write(out)
+        for entry in os.listdir(parent):
+            if entry.rsplit("_", 1)[0] == name and entry != os.path.basename(out):
+                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    return out
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

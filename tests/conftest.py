@@ -17,3 +17,13 @@ def spark():
     spark = get_spark("tests", master="local[4]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def tmp_stage(tmp_path, monkeypatch):
+    """Stage root under the test's ``tmp_path``: a test that points queries
+    at a ``tmp_path`` sf dir materializes there, so its source keys never
+    outlive the dir in the repo's ``.stage/``."""
+    root = tmp_path / "stage"
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(root))
+    return root

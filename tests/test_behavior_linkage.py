@@ -34,7 +34,7 @@ def _events(spark, rows):
     )
 
 
-def test_entropy_zero_for_single_type_uniform_for_even_mix(spark, tmp_path):
+def test_entropy_zero_for_single_type_uniform_for_even_mix(spark, tmp_path, tmp_stage):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.behavior import (
         q_user_event_entropy,
     )
@@ -51,7 +51,7 @@ def test_entropy_zero_for_single_type_uniform_for_even_mix(spark, tmp_path):
     assert out[2]["n_events"] == 4
 
 
-def test_transition_probs_row_normalized_and_ordered(spark, tmp_path):
+def test_transition_probs_row_normalized_and_ordered(spark, tmp_path, tmp_stage):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.behavior import (
         q_event_transition_probs,
     )

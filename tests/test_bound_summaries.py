@@ -84,7 +84,7 @@ def test_simhash_summary_flags_pair_over_threshold(spark, monkeypatch):
     assert got.identical_pairs_found_h0 == want.identical_pairs_found_h0
 
 
-def test_simhash_summary_finds_and_flags_identical_pair(spark, tmp_path, monkeypatch):
+def test_simhash_summary_finds_and_flags_identical_pair(spark, tmp_path, tmp_stage, monkeypatch):
     """The smoke and sf0.01 corpora hold no identical documents, so there
     ``identical_pairs_found_h0`` is TRUE over zero pairs.  With one document
     duplicated under a new doc_id the pair is counted, found at hamming 0
@@ -103,7 +103,6 @@ def test_simhash_summary_finds_and_flags_identical_pair(spark, tmp_path, monkeyp
     dup[0]["doc_id"] = max(docs["doc_id"].to_pylist()) + 1
     pq.write_table(pa.concat_tables([docs, pa.Table.from_pylist(dup, docs.schema)]),
                    sf_dir / "documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stage"))
 
     want = dedup.q_dedup_simhash(spark, str(sf_dir)).first()
     assert want.n_identical_pairs >= 1
@@ -160,7 +159,7 @@ def test_ann_summary_flags_recall_under_floor(spark, monkeypatch):
     assert {q: r.n_true for q, r in got.items()} == {q: r.n_true for q, r in want.items()}
 
 
-def test_bound_summaries_match_oracle_on_empty_tables(spark, tmp_path, monkeypatch):
+def test_bound_summaries_match_oracle_on_empty_tables(spark, tmp_path, tmp_stage):
     """Zero-row copies of every table, with a fresh stage dir: each summary
     still equals its DuckDB twin (one row of 0 / TRUE for the pair
     summaries, no rows for the per-query ANN summary)."""
@@ -171,7 +170,6 @@ def test_bound_summaries_match_oracle_on_empty_tables(spark, tmp_path, monkeypat
     for name in TABLE_NAMES:
         src = os.path.join(SF_SMOKE, f"{name}.parquet")
         pq.write_table(pq.read_schema(src).empty_table(), empty / f"{name}.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stage"))
     reg = load_all()
     con = duck_connection(str(empty))
     for name in ("neardup_minhash_lsh", "neardup_embedding_lsh", "dedup_simhash", "ann_lsh_topk"):

@@ -8,14 +8,17 @@ and with sorted buckets no Sort either.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.plans import plan_string
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import code_fingerprint
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.sinks import write_bucketed_table
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import source_key, stage_root
 
 from .conftest import SF_SMOKE
 
@@ -82,7 +85,7 @@ def test_enriched_trips_warehouse_path_is_exchange_free(spark):
         build_trip_warehouse,
     )
 
-    names = build_trip_warehouse(spark, SF_SMOKE, n_buckets=8)
+    names = build_trip_warehouse(spark, SF_SMOKE)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -119,7 +122,7 @@ def test_tpch_factxfact_tier_warehouse_path_is_exchange_free(spark):
         build_trip_warehouse,
     )
 
-    names = build_trip_warehouse(spark, SF_SMOKE, n_buckets=8)
+    names = build_trip_warehouse(spark, SF_SMOKE)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -145,6 +148,44 @@ def test_tpch_factxfact_tier_warehouse_path_is_exchange_free(spark):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def test_trip_warehouse_reattaches_its_committed_files(spark, tmp_stage):
+    """A catalog without the warehouse entries (what a fresh JVM sees)
+    re-attaches the bucket files at the shared rule's directory without
+    rewriting them, and the re-attached tables keep the exchange-free
+    lineitem⋈orders plan."""
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.enrich import (
+        enriched_trips,
+    )
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
+        build_trip_warehouse,
+    )
+
+    names = build_trip_warehouse(spark, SF_SMOKE)
+    stamps = {
+        tbl: os.path.join(
+            stage_root(), source_key(SF_SMOKE, tbl),
+            f"wh_{tbl}_{code_fingerprint(build_trip_warehouse)}", "_SUCCESS",
+        )
+        for tbl in names
+    }
+    before = {tbl: os.stat(path).st_mtime_ns for tbl, path in stamps.items()}
+    try:
+        for name in names.values():
+            spark.sql(f"DROP TABLE {name}")
+        assert build_trip_warehouse(spark, SF_SMOKE) == names
+        assert all(spark.catalog.tableExists(name) for name in names.values())
+        assert {tbl: os.stat(path).st_mtime_ns for tbl, path in stamps.items()} == before
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            wh_plan = plan_string(enriched_trips(spark, SF_SMOKE, use_warehouse=True))
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        assert _exchanges(wh_plan) == 0, wh_plan
+    finally:
+        for name in names.values():
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 # --- user-bucketed events warehouse ----------------------------------------------
 
 
@@ -152,13 +193,31 @@ def test_tpch_factxfact_tier_warehouse_path_is_exchange_free(spark):
 def events_warehouse(spark):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse import (
         build_events_warehouse,
-        events_warehouse_name,
     )
 
-    name = build_events_warehouse(spark, SF_SMOKE, n_buckets=8, force=True)
-    assert name == events_warehouse_name(SF_SMOKE)
+    name = build_events_warehouse(spark, SF_SMOKE, force=True)
+    assert spark.catalog.tableExists(name)
     yield name
     spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_events_warehouse_builds_on_first_use(spark):
+    """A session whose catalog holds no events warehouse (a fresh JVM, or
+    one that never built it) builds or re-attaches it on the first
+    ``use_warehouse=True`` read instead of failing, and the sessionizer
+    still plans with neither Exchange nor Sort."""
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
+
+    for table in spark.catalog.listTables():
+        if table.name.startswith("wh_events"):
+            spark.sql(f"DROP TABLE {table.name}")
+    query = load_all()["events_sessionize"].fn
+    wh = query(spark, SF_SMOKE, use_warehouse=True)
+    wh_plan = plan_string(wh)
+    assert _exchanges(wh_plan) == 0, wh_plan
+    assert _sorts(wh_plan) == 0, wh_plan
+    key = lambda r: (r.user_id, r.session_id)
+    assert sorted(wh.collect(), key=key) == sorted(query(spark, SF_SMOKE).collect(), key=key)
 
 
 def test_events_warehouse_user_agg_is_exchange_free(spark, events_warehouse):

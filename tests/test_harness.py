@@ -106,6 +106,21 @@ def test_replicate_rewrites_only_when_the_source_moves(tmp_path):
     assert out_path.stat().st_mtime_ns != 1_000_000_000
 
 
+def test_replicate_rewrites_when_a_kept_token_set_moves(tmp_path, monkeypatch):
+    # _KEEP comes from the package's STOPWORDS / LANG_MARKERS, outside the
+    # harness source, and decides every document replica's text
+    from tools import harness
+
+    out_path = tmp_path / "documents.parquet"
+    replicate(("documents",), str(tmp_path), SRC, REPLICAS)
+    os.utime(out_path, ns=(1_000_000_000, 1_000_000_000))
+    monkeypatch.setattr(harness, "_KEEP", _KEEP - {"the"})
+    replicate(("documents",), str(tmp_path), SRC, REPLICAS)
+    assert out_path.stat().st_mtime_ns != 1_000_000_000
+    texts = pq.read_table(out_path).slice(pq.read_metadata(SRC + "/documents.parquet").num_rows)
+    assert "the" not in " ".join(texts["text"].to_pylist()).split()
+
+
 def test_replicate_makes_a_complete_sf_dir(tmp_path):
     # a scale point is read like any sf dir (warm_up touches every table),
     # so the tables it does not replicate are linked from the source

@@ -92,7 +92,7 @@ def test_boilerplate_frequency_counts_distinct_docs(spark):
     assert dfs == [(BOILERPLATE_MIN_DOCS, BOILERPLATE_MIN_DOCS), (BOILERPLATE_MIN_DOCS, 2 * BOILERPLATE_MIN_DOCS)]
 
 
-def test_boilerplate_dedup_reassembles_in_order(spark):
+def test_boilerplate_dedup_reassembles_in_order(spark, tmp_stage):
     """End-to-end on a hand-built corpus: the shared banner is removed from
     every doc, unique bodies survive verbatim, and a doc whose every
     segment is boilerplate comes back empty (not dropped)."""
@@ -120,7 +120,7 @@ def test_boilerplate_dedup_reassembles_in_order(spark):
     assert out[99]["n_removed"] == 1
 
 
-def test_unigram_cross_entropy_hand_computed(spark, tmp_path):
+def test_unigram_cross_entropy_hand_computed(spark, tmp_path, tmp_stage):
     """Two docs, vocab {a:3, b:1}: p(a)=(3+1)/(4+2), p(b)=(1+1)/(4+2).
     doc0 = 'a a a' → H = -ln(2/3); doc1 = 'b' → H = -ln(1/3)."""
     import math
@@ -141,7 +141,7 @@ def test_unigram_cross_entropy_hand_computed(spark, tmp_path):
     assert out[1]["cross_entropy"] > out[0]["cross_entropy"]
 
 
-def test_vocab_coverage_counts_hits(spark, tmp_path):
+def test_vocab_coverage_counts_hits(spark, tmp_path, tmp_stage):
     from pyspark.sql import Row
     import bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.lm as lm
 

@@ -63,7 +63,7 @@ def test_rows_only_queries_run(spark, name):
     assert df.count() >= 0
 
 
-def test_session_overlap_histogram_matches_oracle_with_null_ts(spark, tmp_path):
+def test_session_overlap_histogram_matches_oracle_with_null_ts(spark, tmp_path, tmp_stage):
     """Events whose ts is NULL each form a session with a NULL span, which
     overlaps nothing and must still land in bucket 0.  Today's oracle data
     has no NULL ts, so a rewrite that drops NULL spans (an inner self-join

@@ -81,7 +81,7 @@ def test_substring_spans_cover_known_near_duplicates(spark):
         assert spans[doc] >= int(0.8 * n_toks[doc])
 
 
-def test_substring_spans_cross_doc_only_span(spark):
+def test_substring_spans_cross_doc_only_span(spark, tmp_stage):
     """A synthetic corpus where two docs share an interior run of exactly
     L+2 tokens (hosts otherwise unique) must yield one span of L+2 tokens
     in each, at the right offsets — and a third unique doc yields none."""
@@ -311,7 +311,7 @@ def test_bootstrap_ci_brackets_mean_and_is_deterministic(spark):
         assert tuple(rows2[t]) == tuple(r)  # bit-deterministic
 
 
-def test_theilsen_recovers_planted_trend(spark):
+def test_theilsen_recovers_planted_trend(spark, tmp_stage):
     """On a planted series (day d has 3d+10 events, one wild 1000-event
     outlier day), the median-of-pairwise-slopes estimate must recover slope
     3 exactly — only 10 of 55 pairs touch the outlier — where OLS would be
@@ -347,7 +347,7 @@ def test_theilsen_recovers_planted_trend(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_compression_ratio_orders_repetition_prose_noise(spark):
+def test_compression_ratio_orders_repetition_prose_noise(spark, tmp_stage):
     """The signal's reason to exist: looping text compresses far below
     prose, and random noise barely compresses at all — plus bounds and
     determinism on the real corpus."""
@@ -384,7 +384,7 @@ def test_compression_ratio_orders_repetition_prose_noise(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_label_outliers_flag_planted_mislabel(spark):
+def test_label_outliers_flag_planted_mislabel(spark, tmp_stage):
     """A vector planted far from its own class centroid (near the OPPOSITE
     of the class mean direction) must surface as that label's rank-1
     outlier, and every label reports exactly OUTLIER_TOP_K rows with

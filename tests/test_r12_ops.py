@@ -367,7 +367,7 @@ def test_matryoshka_recall_bounds_and_full_dim_identity(spark):
     assert a == b
 
 
-def test_source_unigram_kl_nonneg_and_detects_divergent_source(spark):
+def test_source_unigram_kl_nonneg_and_detects_divergent_source(spark, tmp_stage):
     """KL >= 0 for every source on real data, and a constructed corpus
     where one source uses a disjoint vocabulary scores that source far
     above a source drawn from the blend."""

@@ -12,7 +12,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 
-def test_skyline_domination_semantics(spark, tmp_path):
+def test_skyline_domination_semantics(spark, tmp_path, tmp_stage):
     """Later-or-equal date + strictly higher price dominates; equal price at
     a strictly later date dominates; same-date equal-price duplicates are
     both kept."""
@@ -38,7 +38,7 @@ def test_skyline_domination_semantics(spark, tmp_path):
     assert got == {3, 4, 6}
 
 
-def test_ewma_matches_pandas_adjust_true(spark, tmp_path):
+def test_ewma_matches_pandas_adjust_true(spark, tmp_path, tmp_stage):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.temporal import (
         EWMA_ALPHA,
         q_daily_ewma_counts,
@@ -58,7 +58,7 @@ def test_ewma_matches_pandas_adjust_true(spark, tmp_path):
         assert got[day.date().isoformat()] == pytest.approx(want.iloc[i], abs=1e-8), i
 
 
-def test_abc_classes_band_by_cumulative_share(spark, tmp_path):
+def test_abc_classes_band_by_cumulative_share(spark, tmp_path, tmp_stage):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.analytics import (
         q_customer_abc,
     )

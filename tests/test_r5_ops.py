@@ -284,7 +284,7 @@ def test_per_source_sample_exact_k_and_deterministic(spark):
 # --- MAD robust z-score ------------------------------------------------------
 
 
-def test_mad_outliers_match_python_reference(spark):
+def test_mad_outliers_match_python_reference(spark, tmp_stage):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.analytics import (
         MAD_Z_CUTOFF,
         q_mad_outlier_events,
@@ -330,7 +330,7 @@ def _events_dir(spark, rows):
     return d
 
 
-def test_longest_streak_hand_case(spark):
+def test_longest_streak_hand_case(spark, tmp_stage):
     from datetime import datetime
 
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.temporal import (
@@ -366,7 +366,7 @@ def test_longest_streak_hand_case(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_conversion_latency_hand_case(spark):
+def test_conversion_latency_hand_case(spark, tmp_stage):
     from datetime import datetime
 
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.operators.events import (
@@ -520,7 +520,7 @@ def test_cusum_closed_form_equals_recursion(spark):
         assert got[day][1] == (s / mu > CUSUM_THRESH)
 
 
-def test_cusum_burst_from_day_one(spark):
+def test_cusum_burst_from_day_one(spark, tmp_stage):
     """Positive-start regression case: when the cumulative deviation is
     positive from the very first day (level shift at t=1 — the detector's
     target), the closed form must clamp the running min at the empty
@@ -562,7 +562,7 @@ def test_cusum_burst_from_day_one(spark):
 # --- absorbing Markov --------------------------------------------------------
 
 
-def test_absorption_gamblers_ruin_hand_case(spark):
+def test_absorption_gamblers_ruin_hand_case(spark, tmp_stage):
     """Chain A where 2 of 3 observed transitions go to purchase and 1 to
     error → P(purchase|A) = 2/3.  And a 2-hop chain B→A only → B inherits
     A's absorption probabilities exactly."""

@@ -127,7 +127,7 @@ def test_session_overlap_histogram_matches_python_reference(spark):
     assert got == dict(expected)
 
 
-def test_session_overlap_multibin_pair_counted_once(spark, tmp_path):
+def test_session_overlap_multibin_pair_counted_once(spark, tmp_path, tmp_stage):
     """Hand case exercising the bin-ownership exactly-once rule (absent
     from the sf0.001 smoke data, where no overlapping pair spans two hour
     bins): session A [10:30, 12:10] and session B [11:50, 12:05] share TWO
@@ -239,7 +239,7 @@ def test_theilsen_matches_python_reference(spark):
 # --- text normalization audit ------------------------------------------------
 
 
-def test_text_normalization_flags_fire_on_dirty_docs(spark, tmp_path):
+def test_text_normalization_flags_fire_on_dirty_docs(spark, tmp_path, tmp_stage):
     """The synthetic corpus is clean (all flags zero — oracle parity is
     vacuous for the flag columns), so pin each detector on constructed
     dirty documents: control char, non-ASCII, doubled space, edge

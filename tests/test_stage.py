@@ -1,14 +1,16 @@
-"""Staged tokenization frame (datapipe.stage): correctness of the cache
-contract — staged results are byte-identical to the unstaged expressions,
-rebuilds only happen when the source or the building code changes, and the
-key tracks the source file's identity and exactly the code each stage
-reaches."""
+"""Staged tokenization frame (datapipe.stage) and the materialize rule it
+shares with the bucketed warehouses (sources.tables.materialize):
+correctness of the cache contract — staged results are byte-identical to
+the unstaged expressions, rebuilds only happen when the source or the
+building code changes, the key tracks the source file's identity and
+exactly the code each stage or warehouse reaches, and a rebuild deletes
+only the directory it supersedes."""
 
 from __future__ import annotations
 
 import ast
+import contextlib
 import os
-import re
 import shutil
 from urllib.parse import urlparse
 
@@ -24,12 +26,11 @@ from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.dedup im
 )
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import ANN_METHODS
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.stage import (
-    stage_root,
     staged_features,
     staged_shingles,
 )
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import source_key
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table, tables, warehouse
+from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import source_key, stage_root
 
 from .conftest import SF_SMOKE
 
@@ -72,8 +73,8 @@ def test_stage_key_tracks_source_identity(tmp_path):
 
 
 def test_warehouse_key_tracks_source_presence_and_identity(tmp_path):
-    """The warehouse marker key is the stage's source key, and a missing
-    source keys differently from a present one."""
+    """The warehouse tables are keyed by the stages' source key, and a
+    missing source keys differently from a present one."""
     absent = source_key(str(tmp_path), "orders")
     src = tmp_path / "orders.parquet"
     src.write_bytes(b"x" * 16)
@@ -99,26 +100,38 @@ def test_staged_ann_panels_equal_direct_probes(spark):
         assert staged == direct, method
 
 
-def call_every_stage(spark) -> None:
-    """Call every ``staged_*`` function, the ANN panel once per method."""
+def stage_calls(spark):
+    """One call per ``staged_*`` function, the ANN panel once per method."""
     for name in dir(stage):
         if name == "staged_ann_method_topk":
             for method, _fn in ANN_METHODS:
-                stage.staged_ann_method_topk(spark, SF_SMOKE, method)
+                yield lambda m=method: stage.staged_ann_method_topk(spark, SF_SMOKE, m)
         elif name.startswith("staged_"):
-            getattr(stage, name)(spark, SF_SMOKE)
+            yield lambda f=getattr(stage, name): f(spark, SF_SMOKE)
 
 
-def staged_builders(monkeypatch) -> dict[str, object]:
-    """Stage name (runtime arguments stripped) -> the builder ``_ensure``
-    keys it by, for every stage, without building."""
+def materialized_builders(monkeypatch) -> dict[str, object]:
+    """Artifact name -> the builder the shared materialize rule keys it by,
+    for every stage and both warehouses, without building.  The trip
+    warehouse records as ``wh_lineitem``: its orders side has the same
+    builder."""
     builders = {}
 
-    def record(spark, name, sf_dir, build, table="documents"):
-        builders[re.sub(r"_[ktw][0-9.]+$", "", name)] = build
+    class Recorded(Exception):
+        pass
 
-    monkeypatch.setattr(stage, "_ensure", record)
-    call_every_stage(None)
+    def record(sf_dir, table, name, builder, write, force=False):
+        builders[name] = builder
+        raise Recorded
+
+    monkeypatch.setattr(stage, "materialize", record)
+    monkeypatch.setattr(warehouse, "materialize", record)
+    calls = [*stage_calls(None),
+             lambda: warehouse.build_trip_warehouse(None, SF_SMOKE),
+             lambda: warehouse.build_events_warehouse(None, SF_SMOKE)]
+    for call in calls:
+        with contextlib.suppress(Recorded):
+            call()
     return builders
 
 
@@ -142,15 +155,18 @@ TFIDF = {"tfidf_topk", "tfidf_sim_cand", "tfidf_doc_vecs"}
         ("datapipe/boilerplate.py", "SEG_TOKENS = 16\n", "SEG_TOKENS = 12\n", {"doc_segments"}),
         ("datapipe/dedup.py", "COSINE_DUP_THRESHOLD = 0.45 ", "COSINE_DUP_THRESHOLD = 0.5 ",
          {"embedding_pairs"}),
+        ("sources/sinks.py", "df.repartition(n_buckets, F.col(bucket_by))",
+         "df.repartition(n_buckets, bucket_by)", {"wh_lineitem", "wh_events"}),
     ],
     ids=["featurize_body", "featurize_doc", "quality_weights", "tfidf_top_k", "lsh_bits",
-         "ivf_kmeans_iters", "vph_stride", "seg_tokens", "cosine_dup_threshold"],
+         "ivf_kmeans_iters", "vph_stride", "seg_tokens", "cosine_dup_threshold",
+         "write_bucketed_table"],
 )
 def test_stage_keys_follow_reachable_code(tmp_path, monkeypatch, module, old, new, moved):
-    """An edit to a copy of the package re-keys exactly the stages whose
-    builder reaches the edited def or constant; a docstring edit re-keys
-    none."""
-    builders = staged_builders(monkeypatch)
+    """An edit to a copy of the package re-keys exactly the stages and
+    warehouses whose builder reaches the edited def or constant; a
+    docstring edit re-keys none."""
+    builders = materialized_builders(monkeypatch)
     path = os.path.join(registry.PACKAGE_DIR, module)
     with open(path) as f:
         src = f.read()
@@ -166,7 +182,7 @@ def test_stage_keys_follow_reachable_code(tmp_path, monkeypatch, module, old, ne
 def test_stage_key_survives_a_module_without_docstring(tmp_path, monkeypatch):
     """A module with no module-level expression keys its stages as usual:
     dropping ``stage.py``'s docstring moves no key."""
-    builders = staged_builders(monkeypatch)
+    builders = materialized_builders(monkeypatch)
     root = tmp_path / "pkg"
     shutil.copytree(registry.PACKAGE_DIR, root, ignore=shutil.ignore_patterns("__pycache__"))
     path = root / "datapipe" / "stage.py"
@@ -183,7 +199,34 @@ def test_package_is_parsed_once_for_queries_and_stages(spark, monkeypatch):
     monkeypatch.setattr(ast, "parse", lambda *a, **k: parses.append(1) or parse(*a, **k))
     registry._walk.cache_clear()
     registry.load_all()
-    call_every_stage(spark)
+    for call in stage_calls(spark):
+        call()
     n_files = sum(f.endswith(".py") for _d, _s, fs in os.walk(registry.PACKAGE_DIR) for f in fs)
     assert len(parses) == n_files
     assert registry._walk.cache_info().misses == 1
+
+
+def test_rebuild_prunes_only_its_superseded_sibling(tmp_stage, monkeypatch):
+    """A re-keyed rebuild deletes the ``<name>_*`` directory it supersedes;
+    another name (even one that extends this name) and the same name under
+    another source key are left alone."""
+    monkeypatch.setattr(tables, "code_fingerprint", lambda fn: fn.__name__)
+
+    def v1():
+        pass
+
+    def v2():
+        pass
+
+    def write(path: str) -> None:
+        os.makedirs(path, exist_ok=True)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    old = tables.materialize(SF_SMOKE, "documents", "frame", v1, write)
+    kept = [tables.materialize(SF_SMOKE, "documents", "frame_wide", v1, write),
+            tables.materialize(SF_SMOKE, "events", "frame", v1, write)]
+    new = tables.materialize(SF_SMOKE, "documents", "frame", v2, write)
+    assert old.startswith(str(tmp_stage)) and os.path.basename(old) == "frame_v1"
+    assert not os.path.exists(old)
+    assert os.path.exists(new)
+    assert all(os.path.exists(path) for path in kept)

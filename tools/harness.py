@@ -24,7 +24,6 @@ here once:
 from __future__ import annotations
 
 import hashlib
-import inspect
 import json
 import os
 import re
@@ -270,13 +269,15 @@ REPLICA_TRANSFORMS = {
 
 def synthesize(out_path: str, write, *params) -> str:
     """Call ``write(out_path)`` unless the output exists and its content
-    marker records the same ``write`` source and ``params``; return
-    ``out_path``."""
+    marker records the same key; return ``out_path``.  The key hashes the
+    whole source file that defines ``write`` (so every helper and constant
+    beside it counts) and ``params``, which must carry every input from
+    elsewhere: source file identities and imported values."""
     # keyed on a CONTENT marker, not bare file existence: a stale output
     # must not silently shadow a change to the synthesis logic or a
     # regenerated source table
-    code = hashlib.sha1(inspect.getsource(write).encode()).hexdigest()[:8]
-    synth_key = ":".join([code, *map(str, params)])
+    with open(write.__code__.co_filename, "rb") as fh:
+        synth_key = hashlib.sha1(fh.read() + repr(params).encode()).hexdigest()
     out_dir, name = os.path.split(out_path)
     marker = os.path.join(out_dir, f".synth_key_{name}")
     if os.path.exists(out_path) and os.path.exists(marker):
@@ -314,8 +315,8 @@ def replicate(tables, out_dir: str, src_dir: str, replicas: int) -> str:
             pq.write_table(out, out_path, row_group_size=max(1, out.num_rows // 32))
 
         st = os.stat(src_path)
-        transform_code = hashlib.sha1(inspect.getsource(transform).encode()).hexdigest()[:8]
-        synthesize(out_path, write, transform_code, replicas, st.st_size, st.st_mtime_ns)
+        # _KEEP is the one input imported from the package
+        synthesize(out_path, write, replicas, st.st_size, st.st_mtime_ns, sorted(_KEEP))
     return out_dir
 
 
