@@ -7,26 +7,21 @@ canonical representative before dropping rows.  No reference counterpart
 (the reference has no iterative algorithms at all; SURVEY.md §2.9) — this is
 the engine-extension tier for LLM training-data curation.
 
-Two algorithms behind one signature (the same fixpoint GraphFrames/GraphX
-converge to):
-
-- ``algorithm="star"`` (default): alternating large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-  O(log diameter) rounds, each one edge-keyed groupBy/join pair; the shape
-  that survives web-graph-deep components at 100 TB.
-- ``algorithm="label_prop"``: one-hop min-label propagation — one join +
-  one min-aggregation per round, O(diameter) rounds; fine for shallow
-  near-dup clusters and kept as the readable baseline the deep-chain
-  pytest compares against.
-
-Both shuffle on node id every round, so consecutive iterations reuse the
-same hash partitioning and AQE coalesces the tiny frontier exchanges.
+Connected components is alternating large-star/small-star (Kiveris et
+al., "Connected Components in MapReduce and Beyond"; the same fixpoint
+GraphFrames/GraphX converge to): O(log diameter) rounds, each one
+edge-keyed groupBy/join pair, so consecutive rounds shuffle on node id with
+the same hash partitioning and AQE coalesces the tiny frontier exchanges.
 ``localCheckpoint`` truncates lineage each round (without it the plan
 doubles per iteration and the driver re-optimizes an exponentially growing
 tree).
 
-The driver loop is *control flow only* (one scalar count per iteration —
-the convergence test); all data stays distributed.
+The driver loop is *control flow only*, and each round's one action is
+its checkpoint: the round's convergence scalar (the CC edge-set
+fingerprint, the BFS frontier size) is an ``observe`` metric attached to
+the frame the round checkpoints and read after
+``localCheckpoint(eager=True)`` — no second action re-runs the round's
+plan to read one number.
 
 Oracle: DuckDB ``WITH RECURSIVE`` min-label reachability over the exact
 Jaccard pair set — the textbook SQL formulation of the same fixpoint.
@@ -34,19 +29,28 @@ Jaccard pair set — the textbook SQL formulation of the same fixpoint.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dq import observe_audit
 from ..registry import register
 from ..sources import load_table
 from .dedup import _JACCARD_CTES
+
+
+def _checkpoint_observed(df: DataFrame, metrics: dict[str, Column], name: str):
+    """``df`` eagerly checkpointed, plus ``metrics`` over its rows read from
+    that same checkpoint job (``(checkpointed_df, metrics_dict)``).  A
+    metric over zero rows may be absent from the dict (e.g. a null
+    ``bit_xor``)."""
+    observed, obs = observe_audit(df, metrics, name)
+    return observed.localCheckpoint(eager=True), obs.get
 
 
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
     max_iter: int = 25,
-    algorithm: str = "star",
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, label) with label = min vertex id reachable in the undirected
@@ -54,67 +58,8 @@ def connected_components(
 
     ``edges``: (src, dst) one row per undirected edge (either orientation).
     ``vertices``: (id) — every node, including isolated ones.
-    ``algorithm``: ``"star"`` (default) = alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log diameter) rounds, the 100 TB choice; ``"label_prop"``
-    = one-hop min-label propagation — O(diameter) rounds, kept as the
-    simple/readable baseline the deep-chain pytest compares against.
     ``stats``: optional dict; on return ``stats["iterations"]`` holds the
     executed round count (observability for the convergence tests).
-    """
-    if algorithm == "star":
-        return _cc_two_phase(edges, vertices, max_iter, stats)
-    return _cc_label_prop(edges, vertices, max_iter, stats)
-
-
-def _cc_label_prop(
-    edges: DataFrame, vertices: DataFrame, max_iter: int, stats: dict | None = None
-) -> DataFrame:
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # the edge set is re-joined every iteration — materialize it once and cut
-    # its lineage (at 100 TB: write to parquet bucketed by src instead)
-    sym = sym.localCheckpoint(eager=True)
-    # iterate ONLY over nodes that touch an edge: in a dedup workload the
-    # duplicate-pair graph covers a small fraction of the corpus, so the
-    # per-iteration join/agg runs on |edge-nodes| rows, not |corpus| rows —
-    # isolated vertices are attached as singletons in one pass at the end
-    labels = sym.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-
-    converged = False
-    for it in range(max_iter):
-        neigh = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        merged = labels.join(neigh, "id", "left").localCheckpoint(eager=True)
-        changed = merged.filter(F.col("nmin") < F.col("label")).limit(1).count()
-        labels = merged.select(
-            "id",
-            F.when(F.col("nmin") < F.col("label"), F.col("nmin"))
-            .otherwise(F.col("label"))
-            .alias("label"),
-        )
-        if changed == 0:
-            converged = True
-            if stats is not None:
-                stats["iterations"] = it + 1
-            break
-    if not converged:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-    return vertices.join(labels, "id", "left").select(
-        "id", F.coalesce("label", F.col("id")).alias("label")
-    )
-
-
-def _cc_two_phase(
-    edges: DataFrame, vertices: DataFrame, max_iter: int, stats: dict | None = None
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
 
     Each round rewires edges toward per-neighborhood minima:
 
@@ -129,29 +74,24 @@ def _cc_two_phase(
     is a forest of depth-1 stars rooted at each component's min id —
     provably O(log diameter) rounds, vs O(diameter) for one-hop label
     propagation.  Every step is edge-keyed groupBy/join (shuffle on node
-    id, same key every round), nothing driver-side but the convergence
-    fingerprint: (count, xor-of-hashes) of the canonical edge set — one
-    tiny aggregate per round, robust to row order.
+    id, same key every round).  The convergence test compares the
+    fingerprint (count, xor-of-hashes) of consecutive canonical edge sets —
+    robust to row order — observed on each round's checkpoint, so the
+    checkpoint is the round's only action and the driver sees two scalars.
     """
-    canon = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
 
-    def fingerprint(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and can't overflow under ANSI mode
-            # (a 64-bit SUM of hashes can)
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+    def checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
+        cur, m = _checkpoint_observed(
+            e,
+            {
+                "n": F.count(F.lit(1)),
+                # bit_xor: order-independent and can't overflow under ANSI
+                # mode (a 64-bit SUM of hashes can)
+                "h": F.bit_xor(F.xxhash64("src", "dst")),
+            },
+            "cc_fingerprint",
+        )
+        return cur, (m["n"], m.get("h"))
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -165,7 +105,7 @@ def _cc_two_phase(
         # sym row, so duplicates arise only when distinct edges re-point to
         # the same (v, m) pair.  (The groupBy/join form is kept over a
         # window: joins get AQE skew splitting on hot hub nodes, windows
-        # don't — see the module docstring's 100 TB rationale.)
+        # don't.)
         return (
             sym.join(mins, "src")
             .filter(F.col("dst") > F.col("src"))  # only larger neighbors re-point
@@ -186,12 +126,18 @@ def _cc_two_phase(
             .distinct()
         )
 
-    cur, fp = canon, fingerprint(canon)
+    cur, fp = checkpoint(
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.greatest("src", "dst").alias("src"),
+            F.least("src", "dst").alias("dst"),
+        )
+        .distinct()
+    )
     converged = False
     for it in range(max_iter):
-        nxt = small_star(large_star(cur)).localCheckpoint(eager=True)
-        nfp = fingerprint(nxt)
-        cur = nxt
+        cur, nfp = checkpoint(small_star(large_star(cur)))
         if nfp == fp:
             converged = True
             if stats is not None:
@@ -199,7 +145,7 @@ def _cc_two_phase(
             break
         fp = nfp
     if not converged:
-        raise RuntimeError(f"connected_components(star) did not converge in {max_iter} iterations")
+        raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
     # fixpoint edges are (node, root) stars; roots label themselves
     labels = (
@@ -419,25 +365,27 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataF
     undirected graph); ``seeds`` is a one-column (doc_id) frame.  Each round
     expands only the FRONTIER (nodes first reached last round) — visited
     nodes are anti-joined away, so total work is O(|E reachable|) across all
-    rounds, not O(|E| · rounds).  The per-round ``isEmpty`` is
-    control-flow-sized (same rule as the CC fingerprint) and
-    ``localCheckpoint`` cuts the growing lineage exactly as the CC loop
-    does.  This is the iterative-frontier shape Pregel/GraphX express —
-    here as plain DataFrame joins so Catalyst handles the physical plan."""
+    rounds, not O(|E| · rounds).  Each frontier is checkpointed with its
+    row count observed on that same action (the CC loop's rule: one action
+    per round), and ``dist`` is the union of checkpointed frontiers, so its
+    lineage stays flat without a checkpoint of its own.  This is the
+    iterative-frontier shape Pregel/GraphX express — here as plain
+    DataFrame joins so Catalyst handles the physical plan."""
     dist = seeds.select("doc_id").distinct().withColumn("hop", F.lit(0)).localCheckpoint(eager=True)
     frontier = dist.select("doc_id")
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, m = _checkpoint_observed(
             frontier.join(edges, frontier["doc_id"] == edges["src"])
             .select(F.col("dst").alias("doc_id"))
             .distinct()
             .join(dist.select("doc_id"), "doc_id", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
+            .withColumn("hop", F.lit(h)),
+            {"n": F.count(F.lit(1))},
+            "bfs_frontier",
         )
-        if nxt.isEmpty():
+        if m["n"] == 0:
             break
-        dist = dist.union(nxt).localCheckpoint(eager=True)
+        dist = dist.union(nxt)
         frontier = nxt.select("doc_id")
     return dist
 

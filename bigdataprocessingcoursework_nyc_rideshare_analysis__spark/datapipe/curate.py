@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..functions.skew import global_running_sum, keyed_row_number, keyed_running_sum
+from ..functions.skew import global_running_sum, keyed_row_number
 from ..functions.text import normalize_text, tokens_col
 from ..registry import register
 from ..sources import load_table
@@ -217,35 +217,19 @@ FROM c
 """
 
 
-@register("curate_pack_corpus", oracle=_CURATE_PACK_ORACLE, tags=("datapipe", "pipeline", "scrub"))
-def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE pretraining-data pipeline, one declarative plan:
-
-    exact dedup → language gate → token-count band (``prepare_training_
-    corpus``) → repetition gate (``scrub``) → eval-split exclusion +
-    contamination anti-join → concat-and-chunk sequence packing of the
-    survivors.  Output is the packed training manifest: where each
-    surviving document lands in the fixed-token-budget sequence stream.
-
-    Every stage is the already-tested operator, composed via doc_id-keyed
-    joins; Catalyst fuses the per-row stages and the only exchanges are the
-    dedup window, the gate joins, and the per-source packing window — the
-    same shapes at 100 TB, just wider.
+def _pack_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, n_tokens) of the documents every curation gate
+    keeps: exact dedup → language gate → token-count band
+    (``manifest_from_features``) → repetition gate (``scrub``) → eval-split
+    exclusion + contamination anti-join.
 
     The whole fan-out derives from ONE staged ``featurize_documents``
     frame (``datapipe.stage``): the manifest, the repetition gate, and both
     contamination shingle sides all read the same tokenized projection, so
     the text is scanned and tokenized exactly once no matter how many
-    stages — or sibling queries — consume it (previously each branch
-    re-scanned the parquet and re-ran the regex — the per-branch tax is
-    what kills a 100 TB run)."""
+    stages — or sibling queries — consume it."""
     from ..functions.text import shingles_col
-    from .scrub import (
-        _EVAL_MOD,
-        PACK_TOKEN_BUDGET,
-        REPETITION_MAX_DUP_FRAC,
-        contamination_pairs,
-    )
+    from .scrub import _EVAL_MOD, REPETITION_MAX_DUP_FRAC, contamination_pairs
     from .stage import staged_features, staged_shingles
 
     feat = staged_features(spark, sf_dir)
@@ -272,24 +256,28 @@ def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    surv = (
+    return (
         manifest.filter(F.col("doc_id") % _EVAL_MOD != 0)
         .join(repkeep, "doc_id")
         .join(contaminated, "doc_id", "left_anti")
     )
-    # round-6 verdict item 2: per-source cumsum via the two-level
-    # pattern, not Window.partitionBy("source") —
-    # parallelism must scale with the data, not |sources|.
-    c = keyed_running_sum(surv, ["source"], ["doc_id"], "n_tokens", "cum")
-    budget = PACK_TOKEN_BUDGET
-    return c.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor((F.col("cum") - F.col("n_tokens")) / budget).cast("long").alias("first_seq"),
-        F.floor((F.col("cum") - 1) / budget).cast("long").alias("last_seq"),
-        ((F.col("cum") - F.col("n_tokens")) % budget).cast("long").alias("seq_offset"),
-    )
+
+
+@register("curate_pack_corpus", oracle=_CURATE_PACK_ORACLE, tags=("datapipe", "pipeline", "scrub"))
+def q_curate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The COMPLETE pretraining-data pipeline, one declarative plan: the
+    gated survivors (``_pack_survivors``) → concat-and-chunk sequence
+    packing (``scrub.pack_sequences``).  Output is the packed training
+    manifest: where each surviving document lands in the fixed-token-budget
+    sequence stream.
+
+    Every stage is the already-tested operator, composed via doc_id-keyed
+    joins; Catalyst fuses the per-row stages and the only exchanges are the
+    dedup window, the gate joins, and the per-source packing running sum —
+    the same shapes at 100 TB, just wider."""
+    from .scrub import pack_sequences
+
+    return pack_sequences(_pack_survivors(spark, sf_dir))
 
 
 # --- quality-classifier-gated packing -------------------------------------------
@@ -299,61 +287,16 @@ def pack_corpus_gated(spark: SparkSession, sf_dir: str, keep: DataFrame) -> Data
     """``curate_pack_corpus`` with a PLUGGABLE classifier gate: the packing
     stream is rebuilt over ``survivors ∩ keep`` — filtering the packed
     manifest after the fact would be WRONG (removing a document shifts
-    every later document's sequence offsets), so the gate must join in
-    before the per-source packing window, which this does.
+    every later document's sequence offsets), so the gate joins in before
+    the packing running sum.
 
     ``keep`` is any (doc_id) frame — the deployed linear classifier for the
     registered query below, the IRLS-trained distilled classifier in
     ``test_trainer.py`` (same code path, swapped model), or a real neural
-    scorer's output table in production.  Deliberately NOT a refactor of
-    ``q_curate_pack`` (its driver-verified implementation stays
-    byte-untouched per the registry's implementation-change rule); the
-    stage fan-out is identical: every branch reads the one staged
-    ``featurize_documents`` frame, and the only new plan node is one
-    doc_id-keyed join before the window."""
-    from ..functions.text import shingles_col
-    from .scrub import (
-        _EVAL_MOD,
-        PACK_TOKEN_BUDGET,
-        REPETITION_MAX_DUP_FRAC,
-        contamination_pairs,
-    )
-    from .stage import staged_features, staged_shingles
+    scorer's output table in production."""
+    from .scrub import pack_sequences
 
-    feat = staged_features(spark, sf_dir)
-    manifest = manifest_from_features(feat).select(
-        "doc_id", "source", F.col("n_tokens").cast("long").alias("n_tokens")
-    )
-    grams = feat.filter(F.size("toks") >= 2).select(
-        "doc_id", shingles_col("toks", 2).alias("grams")
-    )
-    dup_frac = F.lit(1.0) - F.size(F.array_distinct("grams")).cast("double") / F.size("grams")
-    repkeep = grams.filter(dup_frac <= REPETITION_MAX_DUP_FRAC).select("doc_id")
-    sh = staged_shingles(spark, sf_dir)
-    contaminated = (
-        contamination_pairs(
-            sh.filter(F.col("doc_id") % _EVAL_MOD != 0),
-            sh.filter(F.col("doc_id") % _EVAL_MOD == 0),
-        )
-        .select(F.col("train_doc_id").alias("doc_id"))
-        .distinct()
-    )
-    surv = (
-        manifest.filter(F.col("doc_id") % _EVAL_MOD != 0)
-        .join(repkeep, "doc_id")
-        .join(contaminated, "doc_id", "left_anti")
-        .join(keep.select("doc_id"), "doc_id")  # the classifier gate
-    )
-    c = keyed_running_sum(surv, ["source"], ["doc_id"], "n_tokens", "cum")
-    budget = PACK_TOKEN_BUDGET
-    return c.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor((F.col("cum") - F.col("n_tokens")) / budget).cast("long").alias("first_seq"),
-        F.floor((F.col("cum") - 1) / budget).cast("long").alias("last_seq"),
-        ((F.col("cum") - F.col("n_tokens")) % budget).cast("long").alias("seq_offset"),
-    )
+    return pack_sequences(_pack_survivors(spark, sf_dir).join(keep.select("doc_id"), "doc_id"))
 
 
 def _gated_pack_oracle() -> str:

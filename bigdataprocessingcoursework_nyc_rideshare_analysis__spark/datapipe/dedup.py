@@ -674,32 +674,41 @@ def simhash_from_shingles(sh: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return hashes.mapInPandas(sig, schema="doc_id long, simhash long")
 
 
-def dedup_simhash_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with hamming ≤ 3, found via 4×16-bit chunk
-    bucketing (pigeonhole guarantee), verified with ``bit_count(xor)``.
-    The registered ``dedup_simhash`` wraps this screen in the
-    exact-duplicate bound summary; golden rows pin this pair surface."""
-    from .stage import staged_shingles
+def banded_hamming_pairs(
+    sig: DataFrame, id_col: str, hash_col: str, bands: int, max_hamming: int
+) -> DataFrame:
+    """Pairs of rows whose 64-bit ``hash_col`` values differ in at most
+    ``max_hamming`` bits: ``(<stem>_a, <stem>_b, hamming)`` with
+    ``<stem>_a < <stem>_b``, where ``<stem>`` is ``id_col`` without its
+    ``_id`` suffix.
 
-    sig = simhash_from_shingles(staged_shingles(spark, sf_dir))
-    n_chunks = 4
-    chunk_bits = SIMHASH_BITS // n_chunks
+    The hash is cut into ``bands`` equal bit bands; a self-join on
+    (band, band value, id_a < id_b) proposes candidates, ``distinct`` folds
+    pairs that match in several bands, and ``bit_count(xor)`` verifies.
+    With ``max_hamming < bands`` the pigeonhole principle makes the search
+    exact: two hashes within ``max_hamming`` bits agree on some whole band.
+    The candidate set is output-bounded plus band-collision noise, never
+    all-pairs, and only the 64-bit hashes shuffle."""
+    stem = id_col.removesuffix("_id")
+    chunk_bits = 64 // bands
     mask = (1 << chunk_bits) - 1
     stacked = sig.select(
-        "doc_id",
-        "simhash",
+        id_col,
+        hash_col,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(c).alias("chunk"),
-                        F.shiftright("simhash", c * chunk_bits).bitwiseAND(F.lit(mask).cast("long")).alias("val"),
+                        F.shiftright(hash_col, c * chunk_bits)
+                        .bitwiseAND(F.lit(mask).cast("long"))
+                        .alias("val"),
                     )
-                    for c in range(n_chunks)
+                    for c in range(bands)
                 ]
             )
         ).alias("cv"),
-    ).select("doc_id", "simhash", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
+    ).select(id_col, hash_col, F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
     a = stacked.alias("a")
     b = stacked.alias("b")
     pairs = (
@@ -707,21 +716,33 @@ def dedup_simhash_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
             & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
+            F.col(f"a.{id_col}").alias(f"{stem}_a"),
+            F.col(f"b.{id_col}").alias(f"{stem}_b"),
+            F.col(f"a.{hash_col}").alias("h_a"),
+            F.col(f"b.{hash_col}").alias("h_b"),
         )
         .distinct()
     )
     return (
-        pairs.withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
+        pairs.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
+        .filter(F.col("hamming") <= max_hamming)
+        .select(f"{stem}_a", f"{stem}_b", "hamming")
     )
+
+
+def dedup_simhash_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs with hamming ≤ 3, found via 4×16-bit chunk
+    bucketing (pigeonhole guarantee), verified with ``bit_count(xor)``
+    (``banded_hamming_pairs``).  The registered ``dedup_simhash`` wraps
+    this screen in the exact-duplicate bound summary; golden rows pin this
+    pair surface."""
+    from .stage import staged_shingles
+
+    sig = simhash_from_shingles(staged_shingles(spark, sf_dir))
+    return banded_hamming_pairs(sig, "doc_id", "simhash", 4, SIMHASH_MAX_HAMMING)
 
 
 _SIMHASH_BOUND_ORACLE = f"""

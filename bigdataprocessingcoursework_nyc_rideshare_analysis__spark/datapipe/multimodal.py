@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 
 from ..registry import register
 from ..sources import load_table
+from .dedup import banded_hamming_pairs
 
 MEDIA_SCHEMA = StructType(
     [
@@ -959,47 +960,7 @@ def media_image_neardup_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     image once."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     sig = dhash_frame(synthesize_ppm_with_variants(docs))
-    chunk_bits = DHASH_BITS // PHASH_BANDS
-    mask = (1 << chunk_bits) - 1
-    stacked = sig.select(
-        "media_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("phash", c * chunk_bits)
-                        .bitwiseAND(F.lit(mask).cast("long"))
-                        .alias("val"),
-                    )
-                    for c in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("cv"),
-    ).select("media_id", "phash", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn("hamming", F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .select("media_a", "media_b", "hamming")
-    )
+    return banded_hamming_pairs(sig, "media_id", "phash", PHASH_BANDS, PHASH_MAX_HAMMING)
 
 
 # --- perceptual audio near-dup (energy-delta fingerprint) ----------------------
@@ -1114,47 +1075,7 @@ def media_audio_neardup_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     sig = docs.mapInPandas(gen_and_hash, schema="media_id long, phash long")
-    chunk_bits = DHASH_BITS // FP_BANDS
-    mask = (1 << chunk_bits) - 1
-    stacked = sig.select(
-        "media_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("phash", c * chunk_bits)
-                        .bitwiseAND(F.lit(mask).cast("long"))
-                        .alias("val"),
-                    )
-                    for c in range(FP_BANDS)
-                ]
-            )
-        ).alias("cv"),
-    ).select("media_id", "phash", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn("hamming", F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-        .filter(F.col("hamming") <= FP_MAX_HAMMING)
-        .select("media_a", "media_b", "hamming")
-    )
+    return banded_hamming_pairs(sig, "media_id", "phash", FP_BANDS, FP_MAX_HAMMING)
 
 
 # --- perceptual video near-dup (per-frame dHash + temporal banding) ------------

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..functions.skew import keyed_running_sum
 from ..functions.text import normalize_text, shingles_col, tokens_col
 from ..registry import register
 from ..sources import load_table
@@ -295,6 +296,25 @@ def q_source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_TOKEN_BUDGET = 256  # tokens per packed training sequence
 
 
+def pack_sequences(t: DataFrame) -> DataFrame:
+    """Concat-and-chunk packing of (doc_id, source, n_tokens) rows: each
+    source's documents laid end-to-end in doc_id order and cut every
+    ``PACK_TOKEN_BUDGET`` tokens.  Adds ``first_seq``/``last_seq`` (the
+    sequences the document spans) and ``seq_offset`` (its start inside
+    ``first_seq``); the per-source running sum is
+    ``functions.skew.keyed_running_sum``."""
+    c = keyed_running_sum(t, ["source"], ["doc_id"], "n_tokens", "cum")
+    budget = PACK_TOKEN_BUDGET
+    return c.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.floor((F.col("cum") - F.col("n_tokens")) / budget).cast("long").alias("first_seq"),
+        F.floor((F.col("cum") - 1) / budget).cast("long").alias("last_seq"),
+        ((F.col("cum") - F.col("n_tokens")) % budget).cast("long").alias("seq_offset"),
+    )
+
+
 _PACK_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, source,
@@ -332,21 +352,9 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     funneled each source's ENTIRE corpus through one task).  Values are
     bit-identical: integer sum algebra is order-free, so the cut positions
     don't depend on where the sampled range boundaries land."""
-    from ..functions.skew import keyed_running_sum
-
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", "source", F.size(tokens_col("text")).cast("long").alias("n_tokens")
-    )
-    c = keyed_running_sum(t, ["source"], ["doc_id"], "n_tokens", "cum")
-    budget = PACK_TOKEN_BUDGET
-    return c.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor((F.col("cum") - F.col("n_tokens")) / budget).cast("long").alias("first_seq"),
-        F.floor((F.col("cum") - 1) / budget).cast("long").alias("last_seq"),
-        ((F.col("cum") - F.col("n_tokens")) % budget).cast("long").alias("seq_offset"),
+    return pack_sequences(
+        docs.select("doc_id", "source", F.size(tokens_col("text")).cast("long").alias("n_tokens"))
     )
 
 

@@ -8,6 +8,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.cluster import (
+    bfs_hop_distance,
     connected_components,
     q_neardup_cc,
 )
@@ -201,30 +202,57 @@ def test_observe_collects_metrics_without_extra_action(spark):
 
 
 def test_star_cc_converges_in_fewer_rounds_on_deep_chain(spark):
-    """A 64-node path graph (diameter 63): label propagation needs O(diameter)
-    one-hop rounds, large-star/small-star O(log diameter).  Both must agree
-    (everything labeled 0) — the star variant just gets there much faster."""
+    """A 64-node path graph (diameter 63): one-hop label propagation would
+    need O(diameter) rounds, large-star/small-star needs O(log diameter)."""
     n = 64
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
 
-    star_stats: dict = {}
-    star = {
+    stats: dict = {}
+    got = {
         r["id"]: r["label"]
-        for r in connected_components(
-            edges, verts, max_iter=20, algorithm="star", stats=star_stats
-        ).collect()
+        for r in connected_components(edges, verts, max_iter=20, stats=stats).collect()
     }
-    assert star == {i: 0 for i in range(n)}
+    assert got == {i: 0 for i in range(n)}
+    assert stats["iterations"] <= 10, f"{stats['iterations']} rounds on diameter {n - 1}"
 
-    prop_stats: dict = {}
-    prop = {
-        r["id"]: r["label"]
-        for r in connected_components(
-            edges, verts, max_iter=100, algorithm="label_prop", stats=prop_stats
-        ).collect()
-    }
-    assert prop == star
-    assert star_stats["iterations"] <= 10 < prop_stats["iterations"], (
-        f"star {star_stats['iterations']} rounds vs label_prop {prop_stats['iterations']}"
+
+def test_connected_components_without_edges_gives_singletons(spark):
+    # a 0-row edge set: the observed fingerprint of an empty checkpoint
+    # must still read (and converge) rather than block or fail
+    edges = spark.createDataFrame([], "src long, dst long")
+    verts = spark.createDataFrame([(i,) for i in range(1, 4)], "id long")
+    stats: dict = {}
+    got = {r["id"]: r["label"] for r in connected_components(edges, verts, stats=stats).collect()}
+    assert got == {1: 1, 2: 2, 3: 3}
+    assert stats["iterations"] == 1
+
+
+def test_fixpoint_loops_run_no_action_besides_their_checkpoints(spark, monkeypatch):
+    """Each round's convergence scalar is read from the job its
+    ``localCheckpoint`` already runs: building either loop calls no
+    DataFrame action at all."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "src long, dst long"
     )
+    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    verts = spark.createDataFrame([(i,) for i in range(1, 10)], "id long")
+    seeds = spark.createDataFrame([(1,)], "doc_id long")
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("driver action inside a fixpoint loop")
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is only
+    # its base), so the patch reaches every frame the loops build
+    for name in ("collect", "count", "isEmpty", "first", "take", "toPandas"):
+        monkeypatch.setattr(type(edges), name, forbidden)
+    stats: dict = {}
+    cc = connected_components(edges, verts, stats=stats)
+    dist = bfs_hop_distance(sym, seeds, 6)
+    monkeypatch.undo()
+
+    assert {r["id"]: r["label"] for r in cc.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 7, 8: 7, 9: 9
+    }
+    assert stats["iterations"] >= 1
+    assert {r["doc_id"]: r["hop"] for r in dist.collect()} == {1: 0, 2: 1, 3: 2, 4: 3}

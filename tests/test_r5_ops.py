@@ -156,6 +156,13 @@ def test_bfs_multi_source_takes_min(spark):
     assert BFS_MAX_HOPS >= 3  # registry cap comfortably covers near-dup cluster diameters
 
 
+def test_bfs_without_seeds_is_empty(spark):
+    # a 0-row first frontier: its observed count reads 0 and the loop stops
+    edges = _edges_df(spark, [(1, 2), (2, 3)])
+    seeds = spark.createDataFrame([], "doc_id long")
+    assert bfs_hop_distance(edges, seeds, 6).collect() == []
+
+
 # --- overlap chunking --------------------------------------------------------
 
 

@@ -9,7 +9,9 @@ every commit:
     python tools/check_oracle.py [sf_dir] [name ...]
     python tools/check_oracle.py --bare [sf_dir] [name ...]
 
-``--bare`` builds a DRIVER-LIKE SparkSession (none of the engine's session
+The default session is the engine's (``harness.session``) at
+``local[$SPARK_GRAFT_CPUS]``, or at as many cores as the process may use
+when that is unset.  ``--bare`` builds a DRIVER-LIKE SparkSession (none of the engine's session
 confs — the verification driver constructs its own bare session), which
 catches conf-dependence bugs the default mode can't: queries relying on
 ``session.RUNTIME_CONFS`` being set eagerly, worker-shipped module-level
@@ -27,7 +29,6 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.registry import load_all
-from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.session import get_spark
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import TABLE_NAMES
 
 
@@ -133,7 +134,13 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     registry = load_all()
-    spark = _bare_session() if bare else get_spark("oracle-check")
+    if bare:
+        spark = _bare_session()
+    else:
+        import harness  # here, so importing this module loads no harness
+
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        spark = harness.session("oracle-check", cpus)
     con = duck_connection(sf_dir)
     failed = []
     checked = 0

@@ -534,9 +534,10 @@ growing with the corpus.
   driver memory), inverts the corpus in one shuffle keyed by list id, and
   bounds per-query work to nprobe lists; LSH is shuffle-free on the corpus
   side beyond the bucket join.
-- **Clustering**: connected components defaults to alternating
+- **Clustering**: connected components is alternating
   large-star/small-star — O(log diameter) rounds of edge-keyed
-  groupBy/join — with one-hop label propagation kept for shallow graphs.
+  groupBy/join, each round's convergence fingerprint observed on the
+  checkpoint that round already runs.
 - **Corpus hygiene** (`datapipe/scrub.py`): PII scrub and the repetition
   gate are per-row expressions (zero shuffles); contamination broadcasts
   the eval split against one pass of training shingles; sequence packing
