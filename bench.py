@@ -32,7 +32,7 @@ from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.warehouse
     build_events_warehouse,
     build_trip_warehouse,
 )
-from tools.harness import session, timed_run, warm_up
+from tools.harness import env_cpus, session, timed_run, warm_up
 
 # the enriched-view tier, re-timed on the orderkey-bucketed trip warehouse
 WH_TIER = (
@@ -60,7 +60,7 @@ EV_TIER = (
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = env_cpus()
     registry = load_all()
     spark = session("bench", cpus)
     stage_build_sec = warm_up(spark, sf_dir, cpus)

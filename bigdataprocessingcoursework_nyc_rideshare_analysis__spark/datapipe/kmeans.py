@@ -1,6 +1,6 @@
 """Distributed Lloyd's k-means over the embedding table — the iterative
 whole-corpus trainer that complements IVF's capped-sample k-means
-(``similarity.train_ivf_centroids``).
+(``similarity.train_ivf_centroids`` over ``similarity.training_sample``).
 
 No reference counterpart (SURVEY.md §2.9 extension tier).  Semantic
 clustering of embeddings is the backbone of corpus organization (topic
@@ -74,13 +74,17 @@ def kmeans_fit(
     vec_col: str = "embedding",
 ):
     """Whole-corpus Lloyd's: returns (centroids k×dim ndarray, assignment
-    DataFrame (id, cluster, dist2) for the final centroids)."""
+    DataFrame (id, cluster, dist2) for the final centroids).  A zero-row
+    corpus fits no centroids: an empty (0, 0) array and an empty
+    assignment."""
     seed_rows = (
         emb.select(id_col, vec_col)
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(k)
         .collect()
     )
+    if not seed_rows:
+        return np.empty((0, 0)), _assign(emb, np.empty((0, 0)), id_col, vec_col)
     centroids = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in seed_rows])
     dim = centroids.shape[1]
     narrow = emb.select(id_col, vec_col)

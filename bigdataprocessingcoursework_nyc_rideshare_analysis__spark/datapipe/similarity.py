@@ -10,7 +10,11 @@ Tiers (all sharing the exact re-rank tail ``exact_rank_candidates``):
 - ``ann_ivf_topk`` / ``ann_pq_topk`` / ``ann_ivfpq_topk``: inverted-file
   pruning (compute), product-quantization codes + ADC (memory), and their
   composition — the trillion-vector index shapes, trained on absolutely
-  capped samples so driver state is constant at any corpus size.
+  capped samples so driver state is constant at any corpus size.  They
+  share one prelude (``_trained_probe``: one corpus count, one
+  ``training_sample`` that both trainers read), one PQ arithmetic
+  (``_pq_kernels``) and one ADC shortlist scan (``adc_shortlist``);
+  IVF-PQ is the PQ probe with the IVF trainer plugged in.
 - ``ann_recall_report``: the index-quality monitor; reads the STAGED exact
   truth and STAGED per-method panels (``datapipe.stage``) the way a
   production monitor consumes nightly index builds.  ``ANN_METHODS`` at the
@@ -194,7 +198,7 @@ def lsh_topk_detail(
     return exact_rank_candidates(emb, candidates, TOP_K)
 
 
-# --- IVF (inverted-file index) ----------------------------------------------
+# --- trained tiers: IVF, PQ and IVF-PQ ------------------------------------------
 
 IVF_LISTS = 16  # centroids
 IVF_NPROBE = 4  # centroid lists searched per query
@@ -202,40 +206,48 @@ IVF_SEED = 7
 IVF_KMEANS_ITERS = 8
 IVF_TRAIN_CAP = 262_144  # absolute bound on vectors collected for training
 
+PQ_SUBSPACES = 8  # dim 64 → 8 subvectors of 8 dims each
+PQ_CODEBOOK = 64  # centroids per subspace: 6-bit codes (near-uniform synthetic
+#  embeddings carry little cluster structure, so ADC fidelity needs the bits)
+PQ_SEED = 11
+PQ_KMEANS_ITERS = 8
+PQ_SHORTLIST = 8  # ADC shortlist size = PQ_SHORTLIST × TOP_K per query
 
-def train_ivf_centroids(
-    emb: DataFrame,
-    k: int = IVF_LISTS,
-    iters: int = IVF_KMEANS_ITERS,
-    seed: int = IVF_SEED,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cap: int = IVF_TRAIN_CAP,
+
+def training_sample(
+    emb: DataFrame, n: int, cap: int = IVF_TRAIN_CAP, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> "np.ndarray":
-    """Spherical k-means on a deterministic corpus sample, trained driver-
-    side.  Training quality needs O(k·dim) data, not O(corpus), so the
-    sample is *absolutely* bounded: a strided id filter picks ~``cap`` rows
-    whatever the corpus size, with ``limit(cap)`` as the hard ceiling, and
-    driver memory stays constant at 100 TB (cap × dim floats ≈ 128 MB at
-    dim 64).  Only *assignment* (``ivf_assign``) touches the full corpus,
-    and that stays distributed.  Returns unit-norm centroids (k × dim)."""
-    n = emb.count()  # parquet count: metadata-cheap, no wide columns read
+    """The unit-norm training sample of an ``n``-row corpus, the one both
+    trainers read.  Training quality needs O(k·dim) data, not O(corpus), so
+    the sample is *absolutely* bounded: a strided id filter picks ~``cap``
+    rows whatever the corpus size, with ``limit(cap)`` as the hard ceiling,
+    and driver memory stays constant at 100 TB (cap × dim floats ≈ 128 MB
+    at dim 64).  Only assignment and encoding touch the full corpus, and
+    those stay distributed.  Unit rows make PQ's L2 geometry rank like the
+    cosine of every other tier (‖a−b‖² = 2−2·cos)."""
     stride = max(1, -(-n // cap))  # ceil(n / cap): every stride-th id
-    sample = np.stack(
-        emb.filter((F.col(id_col) % stride) == 0)
-        .select(vec_col)
-        .limit(cap)
-        .toPandas()[vec_col]
-        .to_numpy()
-    ).astype(np.float64)
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
-    centroids = sample[rng.choice(len(sample), size=k, replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(sample @ centroids.T, axis=1)
-        _group_means_into(sample, assign, k, centroids)
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-    return centroids
+    pdf = emb.filter((F.col(id_col) % stride) == 0).select(vec_col).limit(cap).toPandas()
+    # normalized here, not by ``_unit_rows``: IVF's stage key must not reach the PQ arithmetic
+    sample = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    return sample / np.linalg.norm(sample, axis=1, keepdims=True)
+
+
+def _trained_probe(spark: SparkSession, sf_dir: str, candidates, **pinned) -> DataFrame:
+    """Prelude and tail of the three trained tiers.  The corpus is counted
+    once: the count sizes the training stride and ``scaled_ann_knobs``
+    (knobs passed non-None stay pinned).  The sample is collected once.
+    The tier's ``candidates(emb, knobs, sample)`` returns (query_id,
+    neighbor_id) pairs, and the shared exact re-rank scores them.  A
+    zero-row corpus has nothing to train on and nothing to find, so its
+    panel is the typed empty one."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    n = emb.count()  # parquet count: metadata-cheap, no wide columns read
+    if not n:
+        pairs = emb.select(F.col("vec_id").alias("query_id"), F.col("vec_id").alias("neighbor_id"))
+    else:
+        knobs = scaled_ann_knobs(n) | {k: v for k, v in pinned.items() if v is not None}
+        pairs = candidates(emb, knobs, training_sample(emb, n))
+    return exact_rank_candidates(emb, pairs, TOP_K)
 
 
 def _group_means_into(rows: "np.ndarray", assign: "np.ndarray", k: int, out: "np.ndarray") -> None:
@@ -253,6 +265,20 @@ def _group_means_into(rows: "np.ndarray", assign: "np.ndarray", k: int, out: "np
         s, e = bounds[c], bounds[c + 1]
         if e > s:
             out[c] = rows[order[s:e]].mean(axis=0)
+
+
+def train_ivf_centroids(
+    sample: "np.ndarray", k: int = IVF_LISTS, iters: int = IVF_KMEANS_ITERS, seed: int = IVF_SEED
+) -> "np.ndarray":
+    """Spherical k-means on the ``training_sample``, driver-side.  Returns
+    unit-norm centroids (k × dim); the sample is only read."""
+    rng = np.random.RandomState(seed)
+    centroids = sample[rng.choice(len(sample), size=k, replace=False)]
+    for _ in range(iters):
+        assign = np.argmax(sample @ centroids.T, axis=1)
+        _group_means_into(sample, assign, k, centroids)
+        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+    return centroids
 
 
 def ivf_assign(
@@ -287,81 +313,81 @@ def ivf_topk_detail(
     path) resolves via ``scaled_ann_knobs`` on the corpus count — equal to
     ``IVF_NPROBE`` at calibration scale (≤ {ANN_KNOB_BASE_N} vectors, so
     every golden and driver hash is unchanged) and growing with the corpus
-    so the driver-checked code path is the one that survives 100× (the
-    sf100 decay receipt's fix, now the default rather than opt-in).
+    so the driver-checked code path is the one that survives 100×.
 
     The 100 TB shape: training touches a sample, the inverted lists are a
     corpus-linear shuffle keyed by list_id, and each query's cost is
     |corpus|·nprobe/k instead of |corpus|.  Full (query_id, neighbor_id,
     cos_sim, rank) panel; the registered ``ann_ivf_topk`` wraps it in the
     recall-bound summary."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    if nprobe is None:
-        # parquet metadata count: a statistics read, not a corpus scan
-        nprobe = scaled_ann_knobs(emb.count())["nprobe"]
-    centroids = train_ivf_centroids(emb)
-    corpus_lists = ivf_assign(emb, centroids, nprobe=1)
-    query_lists = ivf_assign(emb.filter(F.col("vec_id") < N_QUERIES), centroids, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "list_id"
-    )
-    candidates = (
-        corpus_lists.join(F.broadcast(query_lists), "list_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    return exact_rank_candidates(emb, candidates, TOP_K)
+
+    def candidates(emb: DataFrame, knobs: dict, sample: "np.ndarray") -> DataFrame:
+        centroids = train_ivf_centroids(sample)
+        queries = emb.filter(F.col("vec_id") < N_QUERIES)
+        query_lists = ivf_assign(queries, centroids, nprobe=knobs["nprobe"]).select(
+            F.col("vec_id").alias("query_id"), "list_id"
+        )
+        return (
+            ivf_assign(emb, centroids, nprobe=1)
+            .join(F.broadcast(query_lists), "list_id")
+            .filter(F.col("query_id") != F.col("vec_id"))
+            .select("query_id", F.col("vec_id").alias("neighbor_id"))
+            .distinct()
+        )
+
+    return _trained_probe(spark, sf_dir, candidates, nprobe=nprobe)
 
 
-# --- PQ (product quantization) ----------------------------------------------
+def _pq_kernels():
+    """The PQ arithmetic, built as ``<locals>`` functions because it runs
+    inside Spark Python workers as well as on the driver: cloudpickle ships
+    ``<locals>`` functions by value, while a module-level ``def`` goes by
+    reference and would need this package importable on the workers (the
+    rule ``multimodal._build_image_codec`` documents).  Returns:
 
-PQ_SUBSPACES = 8  # dim 64 → 8 subvectors of 8 dims each
-PQ_CODEBOOK = 64  # centroids per subspace: 6-bit codes (near-uniform synthetic
-#  embeddings carry little cluster structure, so ADC fidelity needs the bits)
-PQ_SEED = 11
-PQ_KMEANS_ITERS = 8
-PQ_SHORTLIST = 8  # ADC shortlist size = PQ_SHORTLIST × TOP_K per query
+    - ``unit_rows(vectors)``: a column of vectors as unit-norm float64 rows;
+    - ``subspace_sqdist(x, books)``: per subspace j, the (n, ksub) squared
+      distances ‖x_j − books[j, c]‖² of rows x to codebook j, computed
+      lazily, so a trainer may update ``books[j]`` once it has read them;
+    - ``pq_codes(x, books)``: the (n, m) int32 nearest-entry codes of x."""
+
+    def unit_rows(vectors) -> "np.ndarray":
+        x = np.stack(vectors.to_numpy()).astype(np.float64)
+        return x / np.linalg.norm(x, axis=1, keepdims=True)
+
+    def subspace_sqdist(x: "np.ndarray", books: "np.ndarray"):
+        dsub = books.shape[2]
+        for j, cent in enumerate(books):
+            sub = x[:, j * dsub : (j + 1) * dsub]
+            yield (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
+
+    def pq_codes(x: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+        return np.stack([np.argmin(d, axis=1) for d in subspace_sqdist(x, books)], axis=1).astype(np.int32)
+
+    return unit_rows, subspace_sqdist, pq_codes
+
+
+_unit_rows, _subspace_sqdist, _pq_codes = _pq_kernels()
 
 
 def train_pq_codebooks(
-    emb: DataFrame,
+    sample: "np.ndarray",
     m: int = PQ_SUBSPACES,
     ksub: int = PQ_CODEBOOK,
     iters: int = PQ_KMEANS_ITERS,
     seed: int = PQ_SEED,
-    cap: int = IVF_TRAIN_CAP,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> "np.ndarray":
     """Per-subspace k-means codebooks (Jégou et al. 2011, "Product
     Quantization for Nearest Neighbor Search") trained driver-side on the
-    same strided, absolutely-capped sample as ``train_ivf_centroids`` —
-    training needs O(ksub·dsub) data per subspace, never O(corpus).
-    Vectors are unit-normalized first so PQ's L2 geometry ranks like the
-    cosine used by every other tier (‖a−b‖² = 2−2·cos for unit vectors).
-    Returns (m, ksub, dsub) float64."""
-    n = emb.count()
-    stride = max(1, -(-n // cap))
-    sample = np.stack(
-        emb.filter((F.col(id_col) % stride) == 0)
-        .select(vec_col)
-        .limit(cap)
-        .toPandas()[vec_col]
-        .to_numpy()
-    ).astype(np.float64)
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    dim = sample.shape[1]
-    dsub = dim // m
+    ``training_sample`` — O(ksub·dsub) data per subspace, never O(corpus).
+    Returns (m, ksub, dsub) float64; the sample is only read."""
+    dsub = sample.shape[1] // m
+    subs = [sample[:, j * dsub : (j + 1) * dsub] for j in range(m)]
     rng = np.random.RandomState(seed)
-    books = np.empty((m, ksub, dsub))
-    for j in range(m):
-        sub = sample[:, j * dsub : (j + 1) * dsub]
-        cent = sub[rng.choice(len(sub), size=ksub, replace=False)].copy()
-        for _ in range(iters):
-            d = (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
-            assign = np.argmin(d, axis=1)
-            _group_means_into(sub, assign, ksub, cent)
-        books[j] = cent
+    books = np.stack([sub[rng.choice(len(sub), size=ksub, replace=False)] for sub in subs])
+    for _ in range(iters):  # the subspaces train independently of each other
+        for sub, d, book in zip(subs, _subspace_sqdist(sample, books), books):
+            _group_means_into(sub, np.argmin(d, axis=1), ksub, book)
     return books
 
 
@@ -371,25 +397,114 @@ def pq_encode(
     """(id, codes) rows: each vector compressed to its per-subspace nearest
     codebook entries — m small ints replacing dim floats (64× smaller at
     the default geometry).  One GEMM per subspace per Arrow batch."""
-    m, ksub, dsub = books.shape
 
     def encode(batches):
         import pandas as pd
 
         for pdf in batches:
-            emb = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            emb /= np.linalg.norm(emb, axis=1, keepdims=True)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = emb[:, j * dsub : (j + 1) * dsub]
-                cent = books[j]
-                d = (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
-                codes[:, j] = np.argmin(d, axis=1)
+            codes = _pq_codes(_unit_rows(pdf[vec_col]), books)
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "codes": list(codes)})
 
     return df.select(id_col, vec_col).mapInPandas(
         encode, schema=f"{id_col} long, codes array<int>"
     )
+
+
+def adc_shortlist(
+    index: DataFrame, qids: "np.ndarray", dt: "np.ndarray", shortlist: int, probe: "np.ndarray | None" = None
+) -> DataFrame:
+    """(query_id, neighbor_id) candidates from an asymmetric-distance scan
+    of PQ-coded (vec_id, codes) rows: a row's approximate distance to query
+    q is m lookups in q's table ``dt[q]`` (m × ksub), summed, and each
+    partition keeps its ``shortlist`` nearest rows per query.  With
+    ``probe`` (nq × nprobe list ids) the rows also carry ``list_id``, and
+    each query scores only rows in the lists it probes — IVF's pruning.
+
+    The shortlist is folded ACROSS Arrow batches (a partition arrives as
+    ceil(rows / arrow.maxRecordsPerBatch) batches): one shortlist per
+    batch would multiply the candidate shuffle by the batch count and break
+    the partitions × queries × shortlist bound.  Running state is
+    (nq, ≤ shortlist), query-set-sized."""
+    subspace_idx = np.arange(dt.shape[1])
+
+    def fold(batches):
+        import pandas as pd
+
+        best_d = best_i = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            approx = dt[:, subspace_idx, np.stack(pdf["codes"].to_numpy())].sum(axis=2)  # (nq, n)
+            if probe is not None:
+                probed = (pdf["list_id"].to_numpy()[None, :, None] == probe[:, None, :]).any(axis=2)
+                approx = np.where(probed, approx, np.inf)
+            cand_i = np.broadcast_to(pdf["vec_id"].to_numpy(), approx.shape)
+            if best_d is not None:
+                approx = np.concatenate([best_d, approx], axis=1)
+                cand_i = np.concatenate([best_i, cand_i], axis=1)
+            k = min(shortlist, approx.shape[1])
+            sel = np.argpartition(approx, k - 1, axis=1)[:, :k]  # (nq, k)
+            best_d = np.take_along_axis(approx, sel, axis=1)
+            best_i = np.take_along_axis(cand_i, sel, axis=1)
+        if best_i is not None:
+            keep = np.isfinite(best_d).ravel()  # an unprobed row is never a candidate
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, best_i.shape[1])[keep],
+                    "neighbor_id": best_i.ravel()[keep],
+                }
+            )
+
+    return (
+        index.mapInPandas(fold, schema="query_id long, neighbor_id long")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .distinct()
+    )
+
+
+def _pq_probe(
+    spark: SparkSession, sf_dir: str, nprobe: int | None, shortlist_mult: int | None, coarse=None
+) -> DataFrame:
+    """The probe body of ``pq_topk_detail`` and, given ``coarse`` (the IVF
+    trainer), of ``ivfpq_topk_detail``.  Driver side: train the codebooks,
+    collect the {N_QUERIES} query vectors and build their distance tables
+    (query-set-sized state shipped as a closure constant).  Corpus side:
+    one encoding pass, then ``adc_shortlist``.  With ``coarse``, the same
+    pass also assigns each row its nearest centroid's list, and each query
+    probes its ``nprobe`` nearest lists."""
+
+    def candidates(emb: DataFrame, knobs: dict, sample: "np.ndarray") -> DataFrame:
+        books = train_pq_codebooks(sample)
+        qpdf = emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").toPandas()
+        qvecs = _unit_rows(qpdf["embedding"])
+        dt = np.stack(list(_subspace_sqdist(qvecs, books)), axis=1)  # dt[q, j, c]
+        probe = None
+        if coarse is None:
+            index = pq_encode(emb, books)
+        else:
+            centroids = coarse(sample)
+            probe = np.argsort(-(qvecs @ centroids.T), axis=1)[:, : knobs["nprobe"]]
+
+            def index_rows(batches):
+                import pandas as pd
+
+                for pdf in batches:
+                    unit = _unit_rows(pdf["embedding"])
+                    yield pd.DataFrame(
+                        {
+                            "vec_id": pdf["vec_id"].to_numpy(),
+                            "list_id": np.argmax(unit @ centroids.T, axis=1).astype(np.int64),
+                            "codes": list(_pq_codes(unit, books)),
+                        }
+                    )
+
+            index = emb.select("vec_id", "embedding").mapInPandas(
+                index_rows, schema="vec_id long, list_id long, codes array<int>"
+            )
+        shortlist = knobs["shortlist_mult"] * TOP_K
+        return adc_shortlist(index, qpdf["vec_id"].to_numpy(), dt, shortlist, probe)
+
+    return _trained_probe(spark, sf_dir, candidates, nprobe=nprobe, shortlist_mult=shortlist_mult)
 
 
 def pq_topk_detail(
@@ -405,82 +520,47 @@ def pq_topk_detail(
 
     The 100 TB story is MEMORY, complementing IVF's compute story: 64
     float32 dims (256 B) become 8 codes (8 B int32 here; 4 bits each in a
-    packed layout), so a trillion-vector corpus's scan state fits a
-    fraction of the raw footprint, and the scan itself is integer table
-    lookups, not FMAs.  Distance tables are query-set-sized driver state
-    ({N_QUERIES}·m·ksub doubles) shipped as a closure constant; the
-    map-side local top-k bounds the shuffle to
-    partitions × queries × {PQ_SHORTLIST}·k rows.  Full panel output; the
-    registered ``ann_pq_topk`` wraps it in the recall-bound summary, and
-    pytest additionally floors recall against the brute-force truth and
-    pins the encoder to a NumPy reference.
+    packed layout), and the scan is integer table lookups, not FMAs; the
+    map-side local top-k bounds the shuffle to partitions × queries ×
+    {PQ_SHORTLIST}·k rows.  Full panel output; the registered
+    ``ann_pq_topk`` wraps it in the recall-bound summary, and pytest floors
+    recall against the brute-force truth and pins the encoder to a NumPy
+    reference.
 
     ``shortlist_mult=None`` (the registered path) resolves via
     ``scaled_ann_knobs`` on the corpus count — ``PQ_SHORTLIST`` at
-    calibration scale, widening logarithmically past it (see
-    ``ivf_topk_detail``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    if shortlist_mult is None:
-        shortlist_mult = scaled_ann_knobs(emb.count())["shortlist_mult"]
-    books = train_pq_codebooks(emb)
-    m, ksub, dsub = books.shape
-    qpdf = (
-        emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").toPandas()
-    )
-    qids = qpdf["vec_id"].to_numpy()
-    qvecs = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    qvecs /= np.linalg.norm(qvecs, axis=1, keepdims=True)
-    # dt[q, j, c] = ‖q_sub_j − books[j, c]‖²
-    dt = np.empty((len(qids), m, ksub))
-    for j in range(m):
-        sub = qvecs[:, j * dsub : (j + 1) * dsub]
-        cent = books[j]
-        dt[:, j, :] = (
-            (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
-        )
-    shortlist = shortlist_mult * TOP_K
-    subspace_idx = np.arange(m)
+    calibration scale, widening logarithmically past it."""
+    return _pq_probe(spark, sf_dir, None, shortlist_mult)
 
-    def adc_local_topk(batches):
-        # The shortlist is folded ACROSS Arrow batches (a partition arrives
-        # as ceil(rows / arrow.maxRecordsPerBatch) batches): emitting one
-        # shortlist per batch would multiply the candidate shuffle by the
-        # batch count and break the documented partitions×queries×shortlist
-        # bound.  Running state is (nq, ≤shortlist) — query-set-sized.
-        import pandas as pd
 
-        best_d = None
-        best_i = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf["vec_id"].to_numpy()
-            lookups = dt[:, subspace_idx, codes]  # (nq, n, m)
-            approx = lookups.sum(axis=2)  # (nq, n)
-            cand_i = np.broadcast_to(ids, approx.shape)
-            if best_d is not None:
-                approx = np.concatenate([best_d, approx], axis=1)
-                cand_i = np.concatenate([best_i, cand_i], axis=1)
-            k = min(shortlist, approx.shape[1])
-            sel = np.argpartition(approx, k - 1, axis=1)[:, :k]  # (nq, k)
-            best_d = np.take_along_axis(approx, sel, axis=1)
-            best_i = np.take_along_axis(cand_i, sel, axis=1)
-        if best_i is not None:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, best_i.shape[1]),
-                    "neighbor_id": best_i.ravel(),
-                }
-            )
+def ivfpq_topk_detail(
+    spark: SparkSession,
+    sf_dir: str,
+    nprobe: int | None = None,
+    shortlist_mult: int | None = None,
+) -> DataFrame:
+    """Composite IVF-PQ approximate top-k — the production index shape
+    (FAISS ``IVFx,PQy``; Jégou et al. 2011 §V): the corpus is inverted into
+    IVF lists AND stored as PQ codes, a query touches only its
+    {IVF_NPROBE}/{IVF_LISTS} probed lists, scans them with ADC table
+    lookups, and exact-re-ranks a per-partition shortlist.  IVF bounds the
+    COMPUTE (fraction of corpus scanned), PQ bounds the MEMORY (codes, not
+    floats) — multiplicative with each other, which is why this is the
+    trillion-vector layout.
 
-    candidates = (
-        pq_encode(emb, books)
-        .mapInPandas(adc_local_topk, schema="query_id long, neighbor_id long")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .distinct()
-    )
-    return exact_rank_candidates(emb, candidates, TOP_K)
+    This variant encodes raw vectors, not per-list residuals (residual
+    encoding needs a codebook conditioned on the coarse centroid; at 16
+    lists the fidelity gain doesn't justify doubling the training surface).
+    It is ``pq_topk_detail``'s probe with the IVF trainer plugged in: both
+    trainers read one sample, and list assignment and PQ encoding happen
+    in ONE Arrow pass, so the index build adds no job, no join and no
+    corpus scan over plain PQ.  Full panel output; the registered
+    ``ann_ivfpq_topk`` wraps it in the recall-bound summary.
+
+    ``nprobe=None`` / ``shortlist_mult=None`` (the registered path)
+    resolve via ``scaled_ann_knobs`` on the corpus count — pinned values
+    at calibration scale, growing past it (see ``ivf_topk_detail``)."""
+    return _pq_probe(spark, sf_dir, nprobe, shortlist_mult, train_ivf_centroids)
 
 
 # --- filtered (metadata-constrained) vector search ------------------------------
@@ -941,123 +1021,6 @@ def q_embedding_prefix_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(ratio.cast("decimal(14,12)")).cast("double") / F.count(F.lit(1)), 9
         ).alias("macro_energy"),
     )
-
-
-# --- IVF-PQ composite index ----------------------------------------------------
-
-
-def ivfpq_topk_detail(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int | None = None,
-    shortlist_mult: int | None = None,
-) -> DataFrame:
-    """Composite IVF-PQ approximate top-k — the production index shape
-    (FAISS ``IVFx,PQy``; Jégou et al. 2011 §V): the corpus is inverted into
-    IVF lists AND stored as PQ codes, a query touches only its
-    {IVF_NPROBE}/{IVF_LISTS} probed lists, scans them with ADC table
-    lookups, and exact-re-ranks a per-partition shortlist.  IVF bounds the
-    COMPUTE (fraction of corpus scanned), PQ bounds the MEMORY (codes, not
-    floats) — multiplicative with each other, which is why this is the
-    trillion-vector layout.
-
-    This variant encodes raw vectors, not per-list residuals (residual
-    encoding needs a codebook conditioned on the coarse centroid; at 16
-    lists the fidelity gain doesn't justify doubling the training surface —
-    documented deliberately).  List assignment and PQ encoding happen in
-    ONE Arrow pass (one kernel emits ``vec_id, list_id, codes``), so the
-    index build adds no join and no extra corpus scan over plain PQ.
-    Full panel output; the registered ``ann_ivfpq_topk`` wraps it in the
-    recall-bound summary, and pytest additionally floors recall against
-    the brute-force truth and pins determinism.
-
-    ``nprobe=None`` / ``shortlist_mult=None`` (the registered path)
-    resolve via ``scaled_ann_knobs`` on the corpus count — pinned values
-    at calibration scale, growing past it (see ``ivf_topk_detail``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    if nprobe is None or shortlist_mult is None:
-        knobs = scaled_ann_knobs(emb.count())
-        nprobe = knobs["nprobe"] if nprobe is None else nprobe
-        shortlist_mult = knobs["shortlist_mult"] if shortlist_mult is None else shortlist_mult
-    centroids = train_ivf_centroids(emb)
-    books = train_pq_codebooks(emb)
-    m, ksub, dsub = books.shape
-
-    qpdf = emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").toPandas()
-    qids = qpdf["vec_id"].to_numpy()
-    qvecs = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    qnorm = qvecs / np.linalg.norm(qvecs, axis=1, keepdims=True)
-    # per-query probed coarse lists (IVF_NPROBE nearest centroids)
-    probe = np.argsort(-(qnorm @ centroids.T), axis=1)[:, :nprobe]  # (nq, nprobe)
-    # ADC distance tables, same geometry as ann_pq_topk
-    dt = np.empty((len(qids), m, ksub))
-    for j in range(m):
-        sub = qnorm[:, j * dsub : (j + 1) * dsub]
-        cent = books[j]
-        dt[:, j, :] = (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
-    shortlist = shortlist_mult * TOP_K
-    subspace_idx = np.arange(m)
-
-    def index_rows(batches):
-        # one pass: coarse assignment + PQ encode per Arrow batch
-        import pandas as pd
-
-        for pdf in batches:
-            raw = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            unit = raw / np.linalg.norm(raw, axis=1, keepdims=True)
-            list_id = np.argmax(unit @ centroids.T, axis=1).astype(np.int64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = unit[:, j * dsub : (j + 1) * dsub]
-                cent = books[j]
-                d = (sub * sub).sum(1, keepdims=True) - 2 * sub @ cent.T + (cent * cent).sum(1)
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "list_id": list_id, "codes": list(codes)}
-            )
-
-    def adc_probed_topk(batches):
-        # same cross-batch shortlist fold as ann_pq_topk, but each query
-        # scores ONLY rows whose coarse list it probes — the IVF pruning
-        import pandas as pd
-
-        best_d = None
-        best_i = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf["vec_id"].to_numpy()
-            lists = pdf["list_id"].to_numpy()
-            lookups = dt[:, subspace_idx, codes]  # (nq, n, m)
-            approx = lookups.sum(axis=2)  # (nq, n)
-            probed = (lists[None, :, None] == probe[:, None, :]).any(axis=2)  # (nq, n)
-            approx = np.where(probed, approx, np.inf)
-            cand_i = np.broadcast_to(ids, approx.shape)
-            if best_d is not None:
-                approx = np.concatenate([best_d, approx], axis=1)
-                cand_i = np.concatenate([best_i, cand_i], axis=1)
-            k = min(shortlist, approx.shape[1])
-            sel = np.argpartition(approx, k - 1, axis=1)[:, :k]
-            best_d = np.take_along_axis(approx, sel, axis=1)
-            best_i = np.take_along_axis(cand_i, sel, axis=1)
-        if best_i is not None:
-            keep = np.isfinite(best_d)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, best_i.shape[1])[keep.ravel()],
-                    "neighbor_id": best_i.ravel()[keep.ravel()],
-                }
-            )
-
-    candidates = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(index_rows, schema="vec_id long, list_id long, codes array<int>")
-        .mapInPandas(adc_probed_topk, schema="query_id long, neighbor_id long")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .distinct()
-    )
-    return exact_rank_candidates(emb, candidates, TOP_K)
 
 
 # --- label outliers (mislabel candidates) --------------------------------------

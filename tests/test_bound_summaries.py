@@ -27,25 +27,41 @@ from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables im
 from .conftest import SF_SMOKE
 
 
-def test_bound_summaries_run_no_jobs_at_build_time(spark):
-    """Building a summary is lazy: once the staged truth tables and the
-    parquet schema memo exist, building runs no Spark job at all (an
-    eager checkpoint of the detail ran 4–6 of them per build)."""
+def build_jobs(spark, names) -> dict[str, int]:
+    """Spark jobs each query runs while its plan is built, counted by job
+    group after one warm run (staged truth tables and the parquet schema
+    memo exist)."""
     reg = load_all()
-    names = ("neardup_minhash_lsh", "dedup_simhash", "ann_lsh_topk")
     for name in names:
         reg[name].fn(spark, SF_SMOKE).collect()
     sc = spark.sparkContext
+    jobs = {}
     try:
         for name in names:
             group = f"build:{name}"
             sc.setJobGroup(group, group)
             reg[name].fn(spark, SF_SMOKE)
             sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-            assert jobs == [], f"{name}: {len(jobs)} job(s) ran while the plan was built"
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return jobs
+
+
+def test_bound_summaries_run_no_jobs_at_build_time(spark):
+    """Building a summary is lazy: building runs no Spark job at all (an
+    eager checkpoint of the detail ran 4–6 of them per build)."""
+    names = ("neardup_minhash_lsh", "dedup_simhash", "ann_lsh_topk")
+    assert build_jobs(spark, names) == dict.fromkeys(names, 0)
+
+
+def test_ivfpq_builds_with_no_more_jobs_than_pq(spark):
+    """IVF-PQ is the PQ probe plus a coarse quantizer trained on the same
+    sample, so building it runs no job beyond PQ's (one corpus count, one
+    sample collect, one query collect); a second count and sample collect
+    for the IVF trainer made it 9 jobs against PQ's 6 at sf0.01."""
+    jobs = build_jobs(spark, ("ann_pq_topk", "ann_ivfpq_topk"))
+    assert jobs["ann_ivfpq_topk"] <= jobs["ann_pq_topk"], jobs
 
 
 def test_minhash_summary_flags_missed_strong_pair_and_false_pair(spark, monkeypatch):
@@ -162,7 +178,8 @@ def test_ann_summary_flags_recall_under_floor(spark, monkeypatch):
 def test_bound_summaries_match_oracle_on_empty_tables(spark, tmp_path, tmp_stage):
     """Zero-row copies of every table, with a fresh stage dir: each summary
     still equals its DuckDB twin (one row of 0 / TRUE for the pair
-    summaries, no rows for the per-query ANN summary)."""
+    summaries, no rows for the per-query ANN summaries and the per-vector
+    k-means and SemDeDup summaries)."""
     from tools.check_oracle import compare, duck_connection
 
     empty = tmp_path / "sf_empty"
@@ -172,5 +189,15 @@ def test_bound_summaries_match_oracle_on_empty_tables(spark, tmp_path, tmp_stage
         pq.write_table(pq.read_schema(src).empty_table(), empty / f"{name}.parquet")
     reg = load_all()
     con = duck_connection(str(empty))
-    for name in ("neardup_minhash_lsh", "neardup_embedding_lsh", "dedup_simhash", "ann_lsh_topk"):
+    for name in (
+        "neardup_minhash_lsh",
+        "neardup_embedding_lsh",
+        "dedup_simhash",
+        "ann_lsh_topk",
+        "ann_ivf_topk",
+        "ann_pq_topk",
+        "ann_ivfpq_topk",
+        "kmeans_embedding_clusters",
+        "semantic_dedup_docs",
+    ):
         assert compare(name, spark, con, str(empty), reg[name]) == "OK", name

@@ -15,7 +15,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE as SRC
 from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources.tables import TABLE_NAMES
-from tools.harness import _KEEP, REPLICA_TRANSFORMS, plan_stats, replicate
+from tools.harness import _KEEP, REPLICA_TRANSFORMS, env_cpus, plan_stats, replicate
 
 REPO = Path(__file__).resolve().parent.parent
 REPLICAS = 3
@@ -142,6 +142,17 @@ def test_replicate_makes_a_complete_sf_dir(tmp_path):
     assert not (out_dir / "documents.parquet").is_symlink()
     assert not (out_dir / "events.parquet").is_symlink()
     assert {t: (src_dir / f"{t}.parquet").read_bytes() for t in TABLE_NAMES} == before
+
+
+def test_env_cpus_defaults_to_the_usable_cores(monkeypatch):
+    """``$SPARK_GRAFT_CPUS`` wins when set; unset or empty, the count is the
+    cores this process may run on, never a fixed 32."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert env_cpus() == 3
+    for unset in (lambda: monkeypatch.setenv("SPARK_GRAFT_CPUS", ""),
+                  lambda: monkeypatch.delenv("SPARK_GRAFT_CPUS")):
+        unset()
+        assert env_cpus() == len(os.sched_getaffinity(0))
 
 
 def test_plan_stats_counts_each_exchange_once(spark):

@@ -144,10 +144,11 @@ def test_ivfpq_candidates_respect_probed_lists(spark):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
         IVF_NPROBE,
         train_ivf_centroids,
+        training_sample,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    centroids = train_ivf_centroids(emb)
+    centroids = train_ivf_centroids(training_sample(emb, emb.count()))
     pdf = emb.select("vec_id", "embedding").toPandas()
     vecs = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)

@@ -177,11 +177,12 @@ def test_pq_encoder_matches_numpy_reference(spark):
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe.similarity import (
         pq_encode,
         train_pq_codebooks,
+        training_sample,
     )
     from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.sources import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    books = train_pq_codebooks(emb)
+    books = train_pq_codebooks(training_sample(emb, emb.count()))
     m, ksub, dsub = books.shape
     pdf = emb.toPandas()
     vecs = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
@@ -195,6 +196,50 @@ def test_pq_encoder_matches_numpy_reference(spark):
         want[vid] = codes
     got = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
     assert got == want
+
+
+def test_pq_kernels_load_where_the_package_is_not_importable():
+    """The encode and ADC-scan kernels call the shared PQ helpers; a Python
+    worker must load them without importing this package (cloudpickle
+    ships ``<locals>`` functions by value, a module-level def by name)."""
+    import os
+    import subprocess
+    import sys
+
+    import numpy as np
+    import pytest
+    from pyspark import cloudpickle
+
+    from bigdataprocessingcoursework_nyc_rideshare_analysis__spark.datapipe import similarity
+
+    kernels = []
+
+    class Captured(Exception):
+        pass
+
+    class Frame:
+        def select(self, *cols):
+            return self
+
+        def mapInPandas(self, fn, schema):
+            kernels.append(fn)
+            raise Captured
+
+    books = np.zeros((2, 3, 4))
+    for build in (
+        lambda: similarity.pq_encode(Frame(), books),
+        lambda: similarity.adc_shortlist(Frame(), np.arange(2), np.zeros((2, 2, 3)), 5),
+    ):
+        with pytest.raises(Captured):
+            build()
+    load = "import pickle, sys; pickle.loads(sys.stdin.buffer.read())"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    for fn in kernels:
+        run = subprocess.run(
+            [sys.executable, "-c", load], input=cloudpickle.dumps(fn), capture_output=True,
+            cwd="/", env=env,
+        )
+        assert run.returncode == 0, run.stderr.decode()[-500:]
 
 
 def test_pq_topk_recall_floor(spark):

@@ -151,6 +151,8 @@ TFIDF = {"tfidf_topk", "tfidf_sim_cand", "tfidf_doc_vecs"}
         ("datapipe/similarity.py", "LSH_BITS = 6 ", "LSH_BITS = 7 ", {"ann_lsh_topk"}),
         ("datapipe/similarity.py", "IVF_KMEANS_ITERS = 8\n", "IVF_KMEANS_ITERS = 9\n",
          {"ann_ivf_topk", "ann_ivfpq_topk"}),
+        ("datapipe/similarity.py", "PQ_KMEANS_ITERS = 8\n", "PQ_KMEANS_ITERS = 9\n",
+         {"ann_pq_topk", "ann_ivfpq_topk"}),
         ("datapipe/multimodal.py", "VPH_STRIDE = 2 ", "VPH_STRIDE = 3 ", {"video_phash"}),
         ("datapipe/boilerplate.py", "SEG_TOKENS = 16\n", "SEG_TOKENS = 12\n", {"doc_segments"}),
         ("datapipe/dedup.py", "COSINE_DUP_THRESHOLD = 0.45 ", "COSINE_DUP_THRESHOLD = 0.5 ",
@@ -159,7 +161,7 @@ TFIDF = {"tfidf_topk", "tfidf_sim_cand", "tfidf_doc_vecs"}
          "df.repartition(n_buckets, bucket_by)", {"wh_lineitem", "wh_events"}),
     ],
     ids=["featurize_body", "featurize_doc", "quality_weights", "tfidf_top_k", "lsh_bits",
-         "ivf_kmeans_iters", "vph_stride", "seg_tokens", "cosine_dup_threshold",
+         "ivf_kmeans_iters", "pq_kmeans_iters", "vph_stride", "seg_tokens", "cosine_dup_threshold",
          "write_bucketed_table"],
 )
 def test_stage_keys_follow_reachable_code(tmp_path, monkeypatch, module, old, new, moved):

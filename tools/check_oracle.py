@@ -10,8 +10,8 @@ every commit:
     python tools/check_oracle.py --bare [sf_dir] [name ...]
 
 The default session is the engine's (``harness.session``) at
-``local[$SPARK_GRAFT_CPUS]``, or at as many cores as the process may use
-when that is unset.  ``--bare`` builds a DRIVER-LIKE SparkSession (none of the engine's session
+``local[harness.env_cpus()]``: ``$SPARK_GRAFT_CPUS``, or as many cores as
+the process may use when that is unset.  ``--bare`` builds a DRIVER-LIKE SparkSession (none of the engine's session
 confs — the verification driver constructs its own bare session), which
 catches conf-dependence bugs the default mode can't: queries relying on
 ``session.RUNTIME_CONFS`` being set eagerly, worker-shipped module-level
@@ -139,8 +139,7 @@ def main() -> int:
     else:
         import harness  # here, so importing this module loads no harness
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-        spark = harness.session("oracle-check", cpus)
+        spark = harness.session("oracle-check", harness.env_cpus())
     con = duck_connection(sf_dir)
     failed = []
     checked = 0

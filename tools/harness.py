@@ -62,7 +62,10 @@ ID_STRIDE = 10_000_000
 
 
 def env_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Cores for ``local[n]``: ``$SPARK_GRAFT_CPUS`` if set, else as many as
+    this process may run on (not a fixed count, so a 4-core host runs
+    ``local[4]``)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def session(app: str, cpus: int | str):

@@ -433,7 +433,8 @@ pinned in `test_datapipe.py::test_scaled_ann_knobs_formula`.
 **Round 11 made the scaled knobs the REGISTERED default**: the tunable
 detail fns (`ivf_topk_detail` / `pq_topk_detail` / `ivfpq_topk_detail`)
 now take `None` knobs and resolve them via `scaled_ann_knobs` on the
-corpus count (a parquet-statistics read, not a scan), so the
+corpus count (a parquet-statistics read, not a scan; the same one count
+sizes the training sample), so the
 driver-checked code path is the one that survives 100× — equal to the
 pinned constants at every local SF (all ≤ the 2k calibration corpus),
 so every golden and driver hash is unchanged
@@ -472,7 +473,11 @@ sees the same arrays; every ANN golden passes unchanged) — IVF-PQ build
 SAMPLE, and the sample is capped (`IVF_TRAIN_CAP` = 262,144): one
 decade past sf10 the strided sample saturates the cap and training cost
 plateaus while only the distributed assignment/encode scan keeps
-growing with the corpus.
+growing with the corpus.  The three tiers share one `training_sample`
+(one count and one collect per probe; IVF-PQ trains both quantizers on
+it), one PQ encoder and one ADC shortlist scan, so building
+`ann_ivfpq_topk` runs 4 jobs at sf0.01, as `ann_pq_topk` does (it ran 9
+against PQ's 6 while each trainer counted and sampled the corpus).
 
 ## Reading the outliers
 
